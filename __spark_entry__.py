@@ -10542,9 +10542,10 @@ def _docs_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-style latest-wins upsert (streaming/pipelines.py::
     upsert_latest_stream): the corpus streams through a landing
     directory as v1 rows plus v2 REVISIONS for every doc_id % 4 == 0
-    (a re-crawl delivering edits); the stateful operator keeps the
-    highest version per document across micro-batches, emitting only
-    on improvement. Terminal fold applies the same max-by rule to
+    (a re-crawl delivering edits); the native streaming aggregation
+    keeps the highest version per document across micro-batches and,
+    in update mode, re-emits the current winner of every key a batch
+    touches. Terminal fold applies the same max-by rule to
     re-emissions, so the result equals batch max(struct(version,
     values)) per key — plain SQL for the oracle."""
     import tempfile

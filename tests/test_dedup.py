@@ -1418,3 +1418,82 @@ def test_dup_cluster_stats_laws(spark):
     assert (got[3]["n_clusters"], got[3]["n_docs"]) == (1, 3)
     assert round(sum(r["doc_share"] for r in got.values()), 6) == 1.0
     assert got[2]["doc_share"] == 0.25
+
+
+@pytest.fixture(scope="module")
+def curation_docs(spark):
+    """Small seeded corpus for the curation dedup chain: shared
+    boilerplate lines, a 30-token passage quoted by several documents,
+    exact copies (case and whitespace variants) and near copies (one
+    word changed per line)."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+
+    def line(n=20):
+        return " ".join(rng.choice(vocab) for _ in range(n))
+
+    banner = "accept all cookies to keep reading this page"
+    passage = line(30)
+    docs = {}
+    for i in range(24):
+        lines = [line() for _ in range(3)]
+        if i % 4 == 0:
+            lines.append(banner)
+        if i % 5 == 0:
+            lines.insert(1, passage)
+        docs[i] = lines
+    rows = [(i, "\n".join(ls)) for i, ls in docs.items()]
+    for j, src in enumerate((0, 3, 7)):
+        rows.append((100 + j, "\n".join(docs[src]).upper().replace(" ", "  ")))
+    for j, src in enumerate((1, 6, 11)):
+        near = []
+        for ln in docs[src]:
+            words = ln.split(" ")
+            words[2] = "changed"
+            near.append(" ".join(words))
+        rows.append((200 + j, "\n".join(near)))
+    return spark.createDataFrame(rows, "id long, text string")
+
+
+def _curation_chain(docs):
+    df = dedup.drop_exact_dups(docs, "text", "id")
+    df = dedup.dedup_lines_global(df, "text", "id")
+    cut = dedup.substring_dedup_cut(df, "text", "id", k=20)
+    groups = dedup.near_dup_groups(
+        cut, "text", "id", num_hashes=32, bands=16, shingle_n=3, threshold=0.5
+    )
+    kept = dedup.drop_near_dups_keep_best(cut, groups, "id", "n_tokens")
+    out = (
+        sorted((r["id"], r["text"]) for r in kept.select("id", "text").collect()),
+        sorted((r["id"], r["component"]) for r in groups.collect()),
+    )
+    dedup.release(cut)
+    dedup.release(groups)
+    return out
+
+
+def test_curation_chain_invariant_to_shuffle_partitions(spark, curation_docs):
+    """drop_exact_dups → dedup_lines_global → substring_dedup_cut →
+    near_dup_groups → drop_near_dups_keep_best gives the same survivors
+    and components at 1 and 7 shuffle partitions: frames that already
+    shuffled keep the width their shuffle gave them (ensure_parallelism
+    no longer widens them), and that width must not change a result."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    runs = []
+    try:
+        for n in (1, 7):
+            spark.conf.set(key, str(n))
+            runs.append(_curation_chain(curation_docs))
+    finally:
+        spark.conf.set(key, prev)
+    (kept1, comps1), (kept7, comps7) = runs
+    assert kept1 == kept7
+    assert comps1 == comps7
+    ids = {i for i, _ in kept1}
+    # the planted copies are found: exact copies and near copies go
+    assert not ids & {100, 101, 102}
+    assert {i for i, _ in comps1} >= {1, 6, 11, 200, 201, 202}
+    assert len(ids) == 24

@@ -73,8 +73,10 @@ def test_pair_generation_single_shuffle(corpus, cents):
     )
     P.assert_no_cartesian(df)
     # map-side assignment + one groupBy(centroid) for the GEMM, plus
-    # ensure_parallelism's repartition of the single-file local input
-    # (absent on a real multi-split scan)
+    # ensure_parallelism's repartition of the input: a union of two
+    # single-file scans, so its plan has no shuffle yet and it has
+    # fewer partitions than cores (absent on a real multi-split scan,
+    # and on any input whose plan already shuffles)
     assert P.num_shuffles(df) <= 2
     # the tiled default adds the bounded per-cluster sizes agg (rows =
     # k, broadcast back — never a per-row shuffle) and re-evaluates the

@@ -879,6 +879,31 @@ def test_upsert_null_value_columns_survive(spark, tmp_path):
     assert rows[2] == (1, None)
 
 
+def test_upsert_stream_plan_is_native_aggregation(spark, tmp_path):
+    """The streaming upsert runs as a native stateful aggregation: the
+    executed micro-batch plan saves state through StateStoreSave and
+    holds no Python state operator (FlatMapGroupsInPandasWithState)."""
+    d = str(tmp_path / "in")
+    spark.createDataFrame(
+        [(1, 1, "a"), (1, 2, "b"), (2, 1, "c")], "k long, version int, v string"
+    ).write.parquet(d)
+    stream = spark.readStream.schema("k long, version int, v string").parquet(d)
+    q = (
+        S.upsert_latest_stream(stream, "k", "version", ["v"])
+        .writeStream.format("memory")
+        .queryName("upsert_plan_t")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    plan = q._jsq.explainInternal(False)
+    assert "StateStoreSave" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    got = sorted(tuple(r) for r in spark.table("upsert_plan_t").collect())
+    assert got == [(1, 2, "b"), (2, 1, "c")]
+
+
 def test_heavy_hitters_stream_exact_when_capacity_suffices(spark, tmp_path):
     """With capacity >= distinct keys the Space-Saving summary is
     exact: after both micro-batches the latest per-key estimate equals

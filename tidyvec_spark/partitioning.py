@@ -6,10 +6,18 @@ map-side expressions (minhash signatures, simhash bit votes, GEMM
 blocks) inherit that parallelism for free. On a single small parquet
 file Spark plans 1-2 input partitions and the same expression runs on
 1-2 of N cores. ``ensure_parallelism`` is the guard: a round-robin
-repartition *only when* the source has fewer partitions than the
-cluster has slots — a no-op exchange on real data, a 10-30x unlock on
-small files. The shuffled payload is the raw input rows (pre-explosion,
-pre-signature), so the exchange cost is bounded by input size.
+repartition *only when* an un-shuffled source (scan, local relation,
+checkpointed RDD) has fewer partitions than the cluster has slots — a
+no-op on real data, a 10-30x unlock on small files. The shuffled
+payload is the raw input rows (pre-explosion, pre-signature), so the
+exchange cost is bounded by input size.
+
+A frame whose plan already shuffles (aggregate, join, window, sort,
+repartition, ...) passes through untouched: its width is the shuffle's,
+which AQE sizes at run time. The decision reads the analyzed logical
+plan only, so it never runs a Spark job — asking a shuffled frame for
+``rdd.getNumPartitions()`` under AQE would execute every upstream
+shuffle stage just to count partitions.
 """
 
 from __future__ import annotations
@@ -58,11 +66,69 @@ def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+# Logical operators whose physical form always ends in an exchange (or
+# a broadcast). A join counts either way: its width is the join
+# strategy's, which AQE picks at run time, and probing a broadcast
+# join's partition count would run the broadcast.
+_SHUFFLING_NODES = frozenset(
+    {
+        "Aggregate",
+        "Window",
+        "Join",
+        "Deduplicate",
+        "DeduplicateWithinWatermark",
+        "Distinct",
+        "Intersect",
+        "Except",
+        "RepartitionByExpression",
+        "RebalancePartitions",
+        "GlobalLimit",
+        "FlatMapGroupsInPandas",
+        "FlatMapCoGroupsInPandas",
+        "FlatMapGroupsInPandasWithState",
+    }
+)
+
+
+def _is_shuffled(node) -> bool:
+    name = node.nodeName()
+    if name in _SHUFFLING_NODES:
+        return True
+    if name == "Sort":
+        return bool(getattr(node, "global")())  # orderBy, not sortWithinPartitions
+    if name == "Repartition":
+        return bool(node.shuffle())
+    return False
+
+
+def _has_shuffle(df: DataFrame) -> bool:
+    """Whether ``df``'s analyzed logical plan contains an operator that
+    shuffles. Reads the plan only (no optimization, no physical
+    planning, no job); a cached frame's lineage is still visible in
+    the analyzed plan, so a shuffle inside a cached relation counts.
+    Stops at the first shuffling node, searching from the top."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if _is_shuffled(node):
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
 def ensure_parallelism(df: DataFrame, min_partitions: Optional[int] = None) -> DataFrame:
-    """Repartition ``df`` up to ``min_partitions`` (default: the session's
-    ``sparkContext.defaultParallelism``) iff it currently has fewer.
-    Never coalesces — a well-split source passes through untouched.
+    """Repartition an un-shuffled ``df`` up to ``min_partitions``
+    (default: the session's ``sparkContext.defaultParallelism``) iff it
+    currently has fewer. Never coalesces — a well-split source passes
+    through untouched — and never fires a Spark job: a frame whose
+    plan already shuffles (:func:`_has_shuffle`) is returned as is,
+    and only shuffle-free plans (scans, local relations, checkpointed
+    RDDs) are asked for their partition count, which Spark answers
+    from the file listing or the RDD without running anything.
     """
+    if _has_shuffle(df):
+        return df
     sc = df.sparkSession.sparkContext
     target = int(min_partitions) if min_partitions else sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:

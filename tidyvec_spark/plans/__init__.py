@@ -28,14 +28,16 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
 def _sections(df: DataFrame) -> list[str]:
     """Formatted explain, split into plan sections.
 
-    AQE prints ONE detailed section before execution (the whole plan
-    under ``== Initial Plan ==``'s parent), but after an action it
-    prints the FINAL plan followed by an ``== Initial Plan ==`` copy
-    with fresh node ids — so any counter matching the full text would
-    double every Exchange/scan/codegen stage once the frame has run.
+    AQE prints ONE detailed section before execution, but after an
+    action it prints the FINAL plan followed by a top-level
+    ``+- == Initial Plan ==`` copy with fresh node ids — so any counter
+    matching the full text would double every Exchange/scan/codegen
+    stage once the frame has run. Only that column-0 marker splits: an
+    executed cached sub-plan prints its own, indented, Final/Initial
+    pair inside the tree, and splitting there would cut the tree short.
     Counters take the first section that contains their pattern: the
     final plan when executed, the initial plan otherwise."""
-    return explain_str(df).split("== Initial Plan ==")
+    return re.split(r"(?m)^\+- == Initial Plan ==", explain_str(df))
 
 
 def _first_matches(df: DataFrame, pattern: str) -> list:
@@ -86,22 +88,63 @@ def has_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in explain_str(df)
 
 
-def num_shuffles(df: DataFrame) -> int:
-    """Exchange operators in the plan (each is a full shuffle;
-    BroadcastExchange deliberately not counted).
+def _physical_nodes(df: DataFrame):
+    """Every node of ``df``'s physical plan, each visited once.
 
-    Counted from the FIRST plan tree (``Exchange (7)`` tree lines):
-    after execution AQE appends an ``== Initial Plan ==`` copy whose
-    detail blocks share one text region with the final plan's, so
-    detail-id counting would double every shuffle once the frame has
-    run; the first tree is the final plan when executed and the full
-    plan otherwise."""
-    tree = _sections(df)[0]
-    ids = set(re.findall(r"(?<![A-Za-z])(?:Shuffle)?Exchange \((\d+)\)", tree))
-    if ids:
-        return len(ids)
-    # no tree ids (simple mode): raw occurrence count
-    return len(re.findall(r"(?<![A-Za-z])(?:Shuffle)?Exchange\b", tree))
+    Walks the plan tree rather than the explain text: an adaptive plan
+    is entered through its current plan (the final one once executed,
+    the initial one before), query stages through the plan they wrap,
+    an in-memory scan through its cached relation's plan, and each
+    node's subquery plans. A cached relation scanned twice, or a
+    subquery copied into several nodes (a filter pushed into its scan
+    carries a copy along; the copies share the subquery's name), is
+    entered once. Reused exchanges and subqueries are not entered —
+    they point at work counted where it first appears."""
+    sdf = getattr(df, "df", df)  # accept VecFrame
+    identity = sdf.sparkSession._jvm.System.identityHashCode
+    seen: set = set()
+    stack = [sdf._jdf.queryExecution().executedPlan()]
+
+    def enter_once(plan, key) -> None:
+        if key not in seen:
+            seen.add(key)
+            stack.append(plan)
+
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        yield name, node
+        if name in ("ReusedExchange", "ReusedSubquery"):
+            continue
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        if name == "InMemoryTableScan":
+            cached = node.relation().cachedPlan()
+            enter_once(cached, identity(cached))
+        children, subqueries = node.children(), node.subqueries()
+        stack.extend(children.apply(i) for i in range(children.size()))
+        for i in range(subqueries.size()):
+            sub = subqueries.apply(i)
+            enter_once(sub, sub.name())
+
+
+def _shuffle_exchanges(df: DataFrame) -> list:
+    return [n for name, n in _physical_nodes(df) if name == "Exchange"]
+
+
+def num_shuffles(df: DataFrame) -> int:
+    """Shuffle exchanges in the plan (each is a full shuffle;
+    BroadcastExchange and reused exchanges deliberately not counted).
+
+    Counted by walking the physical plan tree, so each exchange counts
+    once whether or not the frame — or a cached relation inside it —
+    has run; shuffles inside cached relations and subqueries count
+    too."""
+    return len(_shuffle_exchanges(df))
 
 
 def num_data_shuffles(df: DataFrame) -> int:
@@ -112,25 +155,19 @@ def num_data_shuffles(df: DataFrame) -> int:
     exists only to re-spread an unsplittable single-file scan across
     cores (guide §2.5 "one huge unsplittable file"); it moves no keyed
     data and disappears on production many-file inputs, so shuffle-
-    budget pins count it separately from real keyed exchanges."""
-    tree = _sections(df)[0]
-    ids = set(re.findall(r"(?<![A-Za-z])(?:Shuffle)?Exchange \((\d+)\)", tree))
-    if not ids:
-        return num_shuffles(df)  # simple mode: cannot classify
-    # require the REPARTITION_BY_NUM shuffle origin too: an accidental
-    # data-motion repartition(n) inside an operator also prints
-    # RoundRobinPartitioning, but only the deliberate `_read(par=True)`
-    # spread carries the explicit-number origin marker — without the
-    # extra token such a repartition would silently pass shuffle-budget
-    # pins (r14 ADVICE)
-    rr = set(
-        re.findall(
-            r"\((\d+)\) Exchange\s*\nInput[^\n]*\n"
-            r"Arguments: RoundRobinPartitioning\(\d+\), REPARTITION_BY_NUM",
-            explain_str(df),
+    budget pins count it separately from real keyed exchanges. An
+    accidental data-motion ``repartition(n)`` inside an operator is
+    also round-robin, but only the deliberate spread carries the
+    explicit-number origin, so such a repartition still counts."""
+    return sum(
+        1
+        for ex in _shuffle_exchanges(df)
+        if not (
+            ex.outputPartitioning().getClass().getSimpleName()
+            == "RoundRobinPartitioning"
+            and ex.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
         )
     )
-    return len(ids - rr)
 
 
 def codegen_stage_count(df: DataFrame) -> int:

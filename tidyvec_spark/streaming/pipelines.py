@@ -753,103 +753,41 @@ def upsert_latest_stream(
     version_col: str,
     value_cols: list[str],
 ) -> DataFrame:
-    """CDC-style latest-wins upsert as a custom stateful operator: per
-    key, the row with the highest ``version_col`` (ties broken by the
-    value tuple, descending — deterministic) survives across all
-    micro-batches. The ingestion primitive for corpora that receive
-    document REVISIONS: re-crawls, edits, metadata refreshes.
+    """CDC-style latest-wins upsert: per key, the row with the highest
+    ``version_col`` (ties broken by the value tuple, descending —
+    deterministic) survives across all micro-batches. The ingestion
+    primitive for corpora that receive document REVISIONS: re-crawls,
+    edits, metadata refreshes.
 
-    State per key is one (version, values) tuple; each batch reduces
-    its rows in pandas (Arrow-batched), compares with state, and emits
-    only when the winner improves — a key updated a million times
-    holds one row of state and re-emits only on change. Out-of-order
-    versions are handled exactly: the max wins regardless of arrival
-    order, so downstream folds re-emissions with the same
-    max-by-version rule.
+    One plan for batch and streaming frames: ``groupBy(key).agg(
+    max(struct(version, *values)))``. On a stream that is a native
+    streaming aggregation — the state store holds one (version,
+    values) struct per key, merged by the JVM aggregate with no Python
+    worker in the loop. Out-of-order versions are handled exactly: the
+    max wins regardless of arrival order, and NULL value columns order
+    below non-NULL ones, so the non-null revision wins.
 
-    Batch fallback (non-streaming frame): one
-    ``groupBy(key).max(struct(version, *values))`` — identical
-    semantics, which is what makes the oracle plain SQL. State carries
-    no timeout: any key may still receive a newer version. Wire a
-    watermark TTL when the key space is bounded in time (session-
-    scoped edits).
+    Emission contract (``update`` mode): every key a micro-batch
+    touches re-emits its CURRENT winner, whether or not the batch
+    improved it — a stale version arriving late re-emits the stored
+    winner, never itself. Downstream folds the re-emissions with the
+    same max-by-version rule. Drain with ``output_mode="update"``;
+    :func:`run_available_now` otherwise picks ``complete`` (the frame
+    is an aggregation), which re-emits the whole table each batch.
+
+    State carries no timeout: any key may still receive a newer
+    version. Streaming checkpoints written by the earlier
+    ``applyInPandasWithState`` form of this operator hold a different
+    state schema and cannot be resumed — start such a query from a
+    fresh checkpoint.
     """
-    cols = [F.col(key_col), F.col(version_col).alias("__v")] + [
-        F.col(c) for c in value_cols
-    ]
-    keyed = df.select(*cols)
-    if not df.isStreaming:
-        packed = keyed.groupBy(key_col).agg(
-            F.max(F.struct(F.col("__v"), *[F.col(c) for c in value_cols]))
-            .alias("__w")
-        )
-        return packed.select(
-            key_col,
-            F.col("__w.__v").alias(version_col),
-            *[F.col(f"__w.{c}").alias(c) for c in value_cols],
-        )
-
-    key_field = df.schema[key_col].dataType
-    ver_field = df.schema[version_col].dataType
-    val_fields = [df.schema[c] for c in value_cols]
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, key_field, False),
-            T.StructField(version_col, ver_field, False),
-        ]
-        + [T.StructField(f.name, f.dataType) for f in val_fields]
+    packed = df.groupBy(key_col).agg(
+        F.max(F.struct(F.col(version_col).alias("__v"), *value_cols)).alias("__w")
     )
-    state_schema = T.StructType(
-        [T.StructField("__v", ver_field, False)]
-        + [T.StructField(f.name, f.dataType) for f in val_fields]
-    )
-
-    order = ["__v"] + list(value_cols)
-
-    def fn(key, pdf_iter, state):
-        import pandas as pd
-
-        # state + candidates compared through ONE pandas sort so NULL
-        # value columns order consistently (na_position='last' = max
-        # prefers non-null, matching Spark's struct max in the batch
-        # fallback) — a raw Python tuple compare would raise on
-        # None-vs-str. A NaN-valued winner re-emits each batch (NaN !=
-        # NaN); the terminal max-by fold absorbs the duplicates.
-        frames = [pdf[order] for pdf in pdf_iter if len(pdf)]
-        prev = tuple(state.get) if state.exists else None
-        if not frames:
-            return
-        if prev is not None:
-            frames.append(pd.DataFrame([prev], columns=order))
-        top = (
-            pd.concat(frames, ignore_index=True)
-            .sort_values(by=order, ascending=False, na_position="last")
-            .iloc[0]
-        )
-        best = tuple(
-            x.item() if hasattr(x, "item") else x
-            for x in (top[c] for c in order)
-        )
-        if best != prev:
-            state.update(best)
-            yield pd.DataFrame(
-                [
-                    {
-                        key_col: key[0],
-                        version_col: best[0],
-                        **{c: v for c, v in zip(value_cols, best[1:])},
-                    }
-                ]
-            )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return keyed.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return packed.select(
+        key_col,
+        F.col("__w.__v").alias(version_col),
+        *[F.col(f"__w.{c}").alias(c) for c in value_cols],
     )
 
 
@@ -892,8 +830,11 @@ def run_available_now(
     """Drain all currently-available input through the streaming engine
     into an in-memory table (test/dev harness; production sinks are
     parquet/Kafka/Delta via the same writeStream call). ``output_mode``
-    overrides the aggregation-based default — custom stateful operators
-    declare their own mode (e.g. ``update``).
+    overrides the default: ``complete`` when the plan aggregates,
+    ``append`` otherwise. Custom stateful operators declare their own
+    mode (e.g. ``update``). :func:`upsert_latest_stream` is an
+    aggregation, so it defaults to ``complete`` (the whole table per
+    batch); pass ``update`` to emit only the keys each batch touched.
 
     ``shuffle_partitions`` pins the streaming query's shuffle/state
     partition count (captured by the engine at first query start; see
