@@ -1,9 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``queries()`` — one entry per operator from SURVEY.md §2 plus the
-LLM-data-pipeline extensions, each implemented through the
-``tidyvec_spark`` engine; ``oracle_sql()`` — the ANSI-SQL twin DuckDB
-runs on the same parquet views for the hash comparison.
+``REGISTRY`` is the one ordered list of entries: one per operator from
+SURVEY.md §2 plus the LLM-data-pipeline extensions, each a builder on
+the ``tidyvec_spark`` engine, its DuckDB twin (or None for a rows-only
+entry) and whether ``bench.py`` times it. ``queries()`` (builders, in
+registry order) and ``oracle_sql()`` (the ANSI-SQL twins DuckDB runs on
+the same parquet views for the hash comparison, built when called) are
+views of it.
 
 Cross-engine determinism rules used throughout:
 - every similarity/score is computed in double precision, ROUNDED to 6
@@ -21,6 +24,7 @@ from __future__ import annotations
 import itertools
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -5009,7 +5013,6 @@ def _docs_stream_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidyvec_spark.streaming import (
         near_dup_pairs_stream,
         run_available_now,
-        stream_shuffle_partitions,
     )
 
     d = tempfile.mkdtemp(prefix="tv_stream_pairs_")
@@ -10392,7 +10395,6 @@ def _events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_event_stream,
         run_available_now,
         sessionize_stream,
-        stream_shuffle_partitions,
     )
 
     d = tempfile.mkdtemp(prefix="tv_stream_sess_")
@@ -10459,7 +10461,6 @@ def _events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         interval_join_stream,
         read_event_stream,
         run_available_now,
-        stream_shuffle_partitions,
     )
 
     d = tempfile.mkdtemp(prefix="tv_stream_ij_")
@@ -10509,7 +10510,6 @@ def _docs_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidyvec_spark.streaming import (
         run_available_now,
         stateful_dedup_stream,
-        stream_shuffle_partitions,
     )
 
     d = tempfile.mkdtemp(prefix="tv_stream_dedup_")
@@ -10552,7 +10552,6 @@ def _docs_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tidyvec_spark.streaming import (
         run_available_now,
-        stream_shuffle_partitions,
         upsert_latest_stream,
     )
 
@@ -10625,7 +10624,6 @@ def _docs_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidyvec_spark.streaming import (
         ingest_dedup_stream,
         run_available_now,
-        stream_shuffle_partitions,
     )
 
     index = (
@@ -17592,724 +17590,584 @@ FROM w{_DOREMI_STEPS}
 """
 
 
+class Entry(NamedTuple):
+    """One registry entry. ``oracle`` is its DuckDB twin: the SQL, a
+    function that builds the SQL when :func:`oracle_sql` is called (some
+    read ``SPARK_GRAFT_ORACLE_SF_DIR``), or None for a rows-only entry.
+    ``bench`` marks the entries ``bench.py`` times."""
+
+    name: str
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str | Callable[[], str] | None
+    bench: bool = True
+
+
+def index(entries: list[Entry]) -> dict[str, Entry]:
+    """Key ``entries`` by name, keeping their order; a repeated name raises."""
+    out: dict[str, Entry] = {}
+    for e in entries:
+        if e.name in out:
+            raise ValueError(f"duplicate registry entry: {e.name!r}")
+        out[e.name] = e
+    return out
+
+
+# ORDER MATTERS: the driver's correctness gate checks the first 50
+# entries; tests/test_entry_oracle.py checks every oracle-backed entry
+# past them.
+REGISTRY = index([
+    Entry("knn_cosine", _knn("cosine"), lambda: _knn_sql(_COS)),
+    Entry("knn_null_quirk", _knn_null_quirk, _KNN_NULL_QUIRK_SQL, bench=False),
+    Entry("tfidf_hybrid", _tfidf_hybrid, _TFIDF_HYBRID_SQL),
+    Entry("similarity_join_lsh", _similarity_join_lsh, _similarity_join_lsh_sql),
+    Entry("lsh_near_dup", _lsh_near_dup, _lsh_near_dup_sql),
+    Entry("dedup_drop_exact", _dedup_drop_exact, _DROP_EXACT_SQL),
+    Entry("events_asof_purchase", _events_asof_purchase, _EVENTS_ASOF_SQL),
+    Entry("docs_stream_dedup", _docs_stream_dedup, _DOCS_STREAM_DEDUP_SQL, bench=False),
+    Entry("q5_region_revenue", _q5_region_revenue, _Q5_SQL),
+    Entry(
+        "corpus_membership_manifest",
+        _corpus_membership_manifest,
+        _CORPUS_MEMBERSHIP_MANIFEST_SQL,
+    ),
+    # rows-only: LBFGS reductions are close, not bit-equal; the |dAUC| <= 0.02
+    # bound is pinned in tests/test_classifier.py
+    Entry("docs_clf_ml_agreement", _docs_clf_ml_agreement, None),
+    Entry(
+        "docs_clf_pr_auc",
+        _docs_clf_pr_auc,
+        lambda: _clf_eval_sql(_DOCS_CLF_PR_AUC_TAIL),
+    ),
+    Entry(
+        "docs_clf_brier_ece",
+        _docs_clf_brier_ece,
+        lambda: _clf_eval_sql(_DOCS_CLF_BRIER_ECE_TAIL),
+    ),
+    Entry("events_cusum", _events_cusum, _EVENTS_CUSUM_SQL),
+    Entry("source_js_divergence", _source_js_divergence, _SOURCE_JS_DIVERGENCE_SQL),
+    Entry("source_token_entropy", _source_token_entropy, _SOURCE_TOKEN_ENTROPY_SQL),
+    Entry("layout_prune_audit", _layout_prune_audit, _LAYOUT_PRUNE_AUDIT_SQL),
+    Entry("ql_search", _ql_search, _ql_search_sql),
+    Entry("docs_ngram_coverage", _docs_ngram_coverage, _DOCS_NGRAM_COVERAGE_SQL),
+    Entry(
+        "corpus_lenhist_manifest",
+        _corpus_lenhist_manifest,
+        _CORPUS_LENHIST_MANIFEST_SQL,
+    ),
+    Entry("docs_script_mix", _docs_script_mix, _docs_script_mix_sql),
+    Entry("docs_length_robust_z", _docs_length_robust_z, _DOCS_LENGTH_ROBUST_Z_SQL),
+    Entry("source_dup_rate", _source_dup_rate, _SOURCE_DUP_RATE_SQL),
+    Entry("corpus_psi_manifest", _corpus_psi_manifest, _CORPUS_PSI_MANIFEST_SQL),
+    Entry(
+        "embedding_effective_rank",
+        _embedding_effective_rank,
+        _EMBEDDING_EFFECTIVE_RANK_SQL,
+    ),
+    Entry("events_cusum_by_type", _events_cusum_by_type, _EVENTS_CUSUM_BY_TYPE_SQL),
+    Entry("docs_split_stratified", _docs_split_stratified, _DOCS_SPLIT_STRATIFIED_SQL),
+    Entry("events_anomaly_robust", _events_anomaly_robust, _EVENTS_ANOMALY_ROBUST_SQL),
+    Entry(
+        "corpus_freq_drift_manifest",
+        _corpus_freq_drift_manifest,
+        _CORPUS_FREQ_DRIFT_MANIFEST_SQL,
+    ),
+    Entry("ann_recall_bq", _ann_recall_bq, _ANN_RECALL_BQ_SQL),
+    Entry("source_winsorized_len", _source_winsorized_len, _SOURCE_WINSORIZED_LEN_SQL),
+    Entry("events_funnel_latency", _events_funnel_latency, _EVENTS_FUNNEL_LATENCY_SQL),
+    Entry("sq_topk", _sq_topk, _SQ_TOPK_SQL),
+    Entry("ann_recall_lsh", _ann_recall_lsh, _ann_recall_lsh_sql),
+    Entry("bq_hamming_topk", _bq_hamming_topk, _bq_hamming_sql),
+    Entry("corpus_diff", _corpus_diff, _CORPUS_DIFF_SQL),
+    Entry("decontaminate_ngram", _decontaminate_ngram, _DECONTAM_NGRAM_SQL),
+    Entry("docs_ccnet_buckets", _docs_ccnet_buckets, _docs_ccnet_buckets_sql),
+    Entry("docs_lm_perplexity", _docs_lm_perplexity, _docs_lm_perplexity_sql),
+    Entry("docs_stream_ingest", _docs_stream_ingest, _DOCS_STREAM_INGEST_SQL),
+    Entry(
+        "docs_stream_near_pairs",
+        _docs_stream_near_pairs,
+        _STREAM_NEAR_PAIRS_SQL,
+        bench=False,
+    ),
+    Entry("events_props_stats", _events_props_stats, _EVENTS_PROPS_SQL),
+    Entry("events_retention", _events_retention, _EVENTS_RETENTION_SQL),
+    Entry("events_rolling_1h", _events_rolling_1h, _EVENTS_ROLLING_SQL),
+    Entry("q13_order_histogram", _q13_order_histogram, _Q13_SQL),
+    Entry("q15_top_supplier", _q15_top_supplier, _Q15_SQL),
+    Entry("q17_small_quantity", _q17_small_quantity, _Q17_SQL),
+    Entry("q22_churned_value", _q22_churned_value, _Q22_SQL),
+    Entry("q8_market_share", _q8_market_share, _Q8_SQL),
+    Entry("wds_roundtrip", _wds_roundtrip, _WDS_ROUNDTRIP_SQL),
+    Entry("embedding_whiten", _embedding_whiten, _EMBEDDING_WHITEN_SQL),
+    Entry("token_cms_manifest", _token_cms_manifest, lambda: _token_cms_sql("cmsM")),
+    Entry("docs_node_clustering", _docs_node_clustering, _DOCS_NODE_CLUSTERING_SQL),
+    Entry(
+        "docs_clf_isotonic",
+        _docs_clf_isotonic,
+        lambda: _clf_eval_sql(_DOCS_CLF_ISOTONIC_TAIL),
+    ),
+    Entry("rocchio_search", _rocchio_search, _ROCCHIO_SEARCH_SQL),
+    Entry("docs_stream_manifest", _docs_stream_manifest, _CORPUS_MANIFEST_SQL),
+    Entry(
+        "docs_quality_rank_norm",
+        _docs_quality_rank_norm,
+        _DOCS_QUALITY_RANK_NORM_SQL,
+    ),
+    Entry("docs_span_corruption", _docs_span_corruption, _docs_span_corruption_sql),
+    Entry(
+        "docs_jaccard_exact_pairs",
+        _docs_jaccard_exact_pairs,
+        _DOCS_JACCARD_EXACT_SQL,
+    ),
+    Entry(
+        "corpus_overlap_minhash",
+        _corpus_overlap_minhash,
+        _corpus_overlap_minhash_sql,
+    ),
+    Entry("docs_neyman_alloc", _docs_neyman_alloc, _DOCS_NEYMAN_ALLOC_SQL),
+    Entry("token_burstiness", _token_burstiness, _TOKEN_BURSTINESS_SQL),
+    Entry("source_token_gini", _source_token_gini, _SOURCE_TOKEN_GINI_SQL),
+    Entry("events_gap_quantiles", _events_gap_quantiles, _EVENTS_GAP_QUANTILES_SQL),
+    Entry("docs_readability", _docs_readability, _DOCS_READABILITY_SQL),
+    Entry("wordpiece_unk_by_lang", _wordpiece_unk_by_lang, _wordpiece_unk_by_lang_sql),
+    Entry(
+        "corpus_triage_manifest",
+        _corpus_triage_manifest,
+        _corpus_triage_manifest_sql,
+    ),
+    Entry(
+        "events_transition_matrix",
+        _events_transition_matrix,
+        _EVENTS_TRANSITION_MATRIX_SQL,
+    ),
+    Entry(
+        "events_gap_quantiles_by_type",
+        _events_gap_quantiles_by_type,
+        _EVENTS_GAP_QUANTILES_BY_TYPE_SQL,
+    ),
+    Entry("embedding_covariance", _embedding_covariance, _EMBEDDING_COVARIANCE_SQL),
+    Entry("bucketed_join_segments", _bucketed_join_segments, _BUCKETED_JOIN_SQL),
+    Entry("corpus_rollup", _corpus_rollup, _CORPUS_ROLLUP_SQL, bench=False),
+    Entry("decontaminate_corpus", _decontaminate_corpus, _decontaminate_sql),
+    Entry("docs_chunks", _docs_chunks, _DOCS_CHUNKS_SQL),
+    Entry(
+        "docs_length_quantiles",
+        _docs_length_quantiles,
+        _DOCS_QUANTILES_SQL,
+        bench=False,
+    ),
+    Entry("docs_pack", _docs_pack, _DOCS_PACK_SQL),
+    Entry("docs_pivot_sources", _docs_pivot_sources, _DOCS_PIVOT_SQL, bench=False),
+    Entry("docs_quality_flags", _docs_quality_flags, _DOCS_QUALITY_SQL),
+    Entry("docs_redact", _docs_redact, _DOCS_REDACT_SQL),
+    Entry("docs_repetition", _docs_repetition, _DOCS_REPETITION_SQL),
+    Entry(
+        "docs_stream_budget",
+        _docs_stream_budget,
+        _DOCS_STREAM_BUDGET_SQL,
+        bench=False,
+    ),
+    Entry("embedding_health", _embedding_health, _EMBEDDING_HEALTH_SQL),
+    Entry("embedding_pool_labels", _embedding_pool_labels, _EMBEDDING_POOL_SQL),
+    Entry("hybrid_rrf", _hybrid_rrf, _hybrid_rrf_sql),
+    Entry("incremental_near_dup", _incremental_near_dup, _INCREMENTAL_LSH_SQL),
+    Entry("matryoshka_topk", _matryoshka_topk, _MATRYOSHKA_SQL),
+    Entry("mix_temperature", _mix_temperature, _MIX_TEMPERATURE_SQL),
+    Entry("sample_fixed_per_lang", _sample_fixed_per_lang, _SAMPLE_FIXED_SQL),
+    Entry("skew_agg_langs", _skew_agg_langs, _SKEW_AGG_SQL),
+    Entry("skew_join_events", _skew_join_events, _SKEW_JOIN_SQL),
+    Entry("split_leakage_free", _split_leakage_free, _split_leakage_free_sql),
+    Entry("bq_rerank_topk", _bq_rerank_topk, _bq_rerank_sql),
+    Entry("bq_topk_sidecar", _bq_topk_sidecar, _bq_hamming_sql),
+    Entry("events_skew_profile", _events_skew_profile, _EVENTS_SKEW_PROFILE_SQL),
+    Entry("events_zorder", _events_zorder, _EVENTS_ZORDER_SQL),
+    Entry("ann_recall_ivfpq", _ann_recall_ivfpq, _ANN_RECALL_IVFPQ_SQL),
+    Entry(
+        "corpus_overlap_manifest",
+        _corpus_overlap_manifest,
+        _CORPUS_OVERLAP_MANIFEST_SQL,
+    ),
+    Entry("corpus_overlap_matrix", _corpus_overlap_matrix, _CORPUS_OVERLAP_MATRIX_SQL),
+    Entry("docs_batch_padding", _docs_batch_padding, _docs_batch_padding_sql),
+    Entry("docs_bootstrap_ci", _docs_bootstrap_ci, _docs_bootstrap_ci_sql),
+    Entry("docs_clf_auc", _docs_clf_auc, lambda: _clf_eval_sql(_DOCS_CLF_AUC_TAIL)),
+    Entry(
+        "docs_clf_calibration",
+        _docs_clf_calibration,
+        lambda: _clf_eval_sql(_DOCS_CLF_CALIBRATION_TAIL),
+    ),
+    Entry("docs_dup_ngram_frac", _docs_dup_ngram_frac, _DOCS_DUP_NGRAM_FRAC_SQL),
+    Entry("docs_english_salvage", _docs_english_salvage, _docs_english_salvage_sql),
+    Entry("docs_fim_spm", _docs_fim_spm, _DOCS_FIM_SPM_SQL),
+    Entry("docs_lang_segments", _docs_lang_segments, _docs_lang_segments_sql),
+    Entry("docs_source_lang_cube", _docs_source_lang_cube, _docs_source_lang_cube_sql),
+    Entry("docs_triangle_stats", _docs_triangle_stats, _DOCS_TRIANGLE_STATS_SQL),
+    Entry(
+        "docs_truncation_report",
+        _docs_truncation_report,
+        _docs_truncation_report_sql,
+    ),
+    Entry("docs_zipf_fit", _docs_zipf_fit, _DOCS_ZIPF_FIT_SQL),
+    Entry("events_user_sequences", _events_user_sequences, _EVENTS_USER_SEQUENCES_SQL),
+    Entry(
+        "lm_greedy_continuation",
+        _lm_greedy_continuation,
+        _lm_greedy_continuation_sql,
+    ),
+    Entry("pipeline_seq_prep", _pipeline_seq_prep, _pipeline_seq_prep_sql),
+    Entry("rm3_search", _rm3_search, _RM3_SEARCH_SQL),
+    Entry("token_negatives", _token_negatives, _token_negatives_sql),
+    Entry("token_skipgrams", _token_skipgrams, _TOKEN_SKIPGRAMS_SQL),
+    Entry("pipeline_ccnet", _pipeline_ccnet, _pipeline_ccnet_sql),
+    Entry("pipeline_web", _pipeline_web, _PIPELINE_WEB_SQL),
+    Entry("docs_c4_clean", _docs_c4_clean, _DOCS_C4_CLEAN_SQL),
+    Entry("dedup_keep_best", _dedup_keep_best, _dedup_keep_best_sql),
+    Entry("mix_target", _mix_target, _mix_target_sql),
+    Entry("mix_unimax", _mix_unimax, _MIX_UNIMAX_SQL),
+    Entry("docs_keep_best", _docs_keep_best, _DOCS_KEEP_BEST_SQL),
+    # tuned-to-recall-1.0 ANN answers must equal the exact query
+    Entry("ann_tuned_topk", _ann_tuned_topk, _ANN_TOPK_SQL),
+    Entry("ann_rank_quality", _ann_rank_quality, _ann_rank_quality_sql),
+    Entry("embedding_rp_topk", _embedding_rp_topk, _embedding_rp_topk_sql),
+    Entry("q2_min_cost_supplier", _q2_min_cost_supplier, _Q2_SQL),
+    Entry("q9_nation_profit", _q9_nation_profit, _Q9_SQL),
+    Entry("q11_important_parts", _q11_important_parts, _Q11_SQL),
+    Entry("q12_late_lines", _q12_late_lines, _Q12_SQL),
+    Entry("q16_supplier_counts", _q16_supplier_counts, _Q16_SQL),
+    Entry("q20_share_suppliers", _q20_share_suppliers, _Q20_SQL),
+    Entry("q21_waiting_suppliers", _q21_waiting_suppliers, _Q21_SQL),
+    Entry("ann_lsh_batch", _ann_lsh_batch, _ann_lsh_batch_sql),
+    Entry("ann_topk_sidecar", _ann_topk_sidecar, _ann_lsh_sql),
+    Entry("docs_warc_gz_ingest", _docs_warc_gz_ingest, _DOCS_WARC_GZ_INGEST_SQL),
+    Entry(
+        "bitext_margin_pairs",
+        _bitext_margin("threshold"),
+        lambda: _bitext_margin_sql("threshold"),
+    ),
+    Entry(
+        "bitext_margin_best",
+        _bitext_margin("best"),
+        lambda: _bitext_margin_sql("best"),
+    ),
+    Entry("docs_token_shards", _docs_token_shards, _DOCS_TOKEN_SHARDS_SQL),
+    Entry("docs_fim_split", _docs_fim_split, _DOCS_FIM_SPLIT_SQL),
+    Entry("docs_crop_pairs", _docs_crop_pairs, _DOCS_CROP_PAIRS_SQL),
+    Entry("docs_weighted_sample", _docs_weighted_sample, _DOCS_WEIGHTED_SAMPLE_SQL),
+    Entry(
+        "docs_weighted_sample_by_lang",
+        _docs_weighted_sample_by_lang,
+        _DOCS_WEIGHTED_SAMPLE_BY_LANG_SQL,
+    ),
+    Entry("docs_url_spam", _docs_url_spam, _DOCS_URL_SPAM_SQL),
+    Entry("corpus_overlap_est", _corpus_overlap_est, _CORPUS_OVERLAP_SQL),
+    Entry("pipeline_fim_pack", _pipeline_fim_pack, _pipeline_fim_pack_sql),
+    Entry("q1_pricing", _q1_pricing, _Q1_SQL),
+    Entry("q3_top_orders", _q3_top_orders, _Q3_SQL),
+    Entry("pipeline_curate", _pipeline_curate, _pipeline_curate_sql, bench=False),
+    Entry("pipeline_pretrain", _pipeline_pretrain, _PIPELINE_PRETRAIN_SQL),
+    Entry("topk_per_segment", _topk_per_segment, _TOPK_PER_SEGMENT_SQL),
+    Entry("q4_order_priority", _q4_order_priority, _Q4_SQL),
+    Entry("q6_forecast_revenue", _q6_forecast_revenue, _Q6_SQL),
+    Entry("q7_nation_volume", _q7_nation_volume, _Q7_SQL),
+    Entry("q10_returned_items", _q10_returned_items, _Q10_SQL),
+    Entry("q14_promo_revenue", _q14_promo_revenue, _Q14_SQL),
+    Entry("q18_large_orders", _q18_large_orders, _Q18_SQL),
+    Entry("q19_disjunctive_revenue", _q19_disjunctive_revenue, _Q19_SQL),
+    Entry("docs_dedup_lines", _docs_dedup_lines, _DOCS_DEDUP_LINES_SQL),
+    Entry("serving_shuffle", _serving_shuffle, _SERVING_SHUFFLE_SQL),
+    Entry("curriculum_order", _curriculum_order, _curriculum_sql),
+    Entry("hard_negatives", _hard_negatives, _hard_negatives_sql),
+    Entry("ann_lsh_topk", _ann_lsh_topk, _ann_lsh_sql),
+    Entry("embedding_near_dup", _embedding_near_dup, _EMBEDDING_NEAR_DUP_SQL),
+    Entry("ngram_jaccard_pairs", _ngram_jaccard_pairs, _NGRAM_JACCARD_SQL),
+    Entry("minhash_lsh_pairs", _minhash_lsh_pairs, _MINHASH_LSH_SQL),
+    Entry("simhash_pairs", _simhash_pairs, _SIMHASH_PAIRS_SQL),
+    Entry("dedup_components", _dedup_components, _dedup_components_sql),
+    Entry("bpe_token_stats", _bpe_token_stats, _bpe_stats_sql),
+    Entry(
+        "events_stream_hourly",
+        _events_stream_hourly,
+        _EVENTS_HOURLY_SQL,
+        bench=False,
+    ),
+    Entry("ann_ivf_topk_large", _ann_ivf_topk_large, lambda: _ann_ivf_sql(256, 16)),
+    Entry("semantic_dedup", _semantic_dedup, _SEMANTIC_DEDUP_SQL),
+    Entry("bm25_search", _bm25_search, _BM25_SEARCH_SQL),
+    Entry("ivfpq_adc_topk", _ivfpq_adc_topk, _IVFPQ_ADC_SQL),
+    Entry(
+        "events_stream_interval_join",
+        _events_stream_interval_join,
+        _EVENTS_RANGE_JOIN_SQL,
+        bench=False,
+    ),
+    Entry("hf_query_nearest", _hf_query_nearest, _hf_query_nearest_sql),
+    Entry("unigram_fertility", _unigram_fertility, _unigram_fertility_sql),
+    Entry("wordpiece_merges", _wordpiece_merges, _wordpiece_merges_sql),
+    Entry("wordpiece_fertility", _wordpiece_fertility, _wordpiece_fertility_sql),
+    Entry("docs_warc_ingest", _docs_warc_ingest, _DOCS_WARC_INGEST_SQL),
+    Entry("docs_dedup_homoglyph", _docs_dedup_homoglyph, _docs_dedup_homoglyph_sql),
+    Entry("docs_lang_mix", _docs_lang_mix, _DOCS_LANG_MIX_SQL),
+    Entry("docs_lpa_communities", _docs_lpa_communities, _docs_lpa_sql),
+    Entry("docs_ict_pairs", _docs_ict_pairs, _DOCS_ICT_SQL),
+    Entry(
+        "embedding_balanced_sample",
+        _embedding_balanced_sample,
+        _EMBEDDING_BALANCED_SQL,
+    ),
+    Entry("dedup_components_lpa", _dedup_components_lpa, _dedup_lpa_sql),
+    Entry(
+        "dedup_lpa_precision",
+        _dedup_lpa_precision,
+        lambda: _grouping_precision_sql(_dedup_lpa_sql()),
+    ),
+    Entry("pq_reconstruction", _pq_reconstruction, _PQ_RECON_SQL),
+    Entry("docs_length_buckets", _docs_length_buckets, _DOCS_LENGTH_BUCKETS_SQL),
+    Entry("bucketed_gemm_near_dup", _bucketed_gemm_near_dup, _lsh_near_dup_sql),
+    Entry(
+        "dedup_components_two_phase",
+        _dedup_components_two_phase,
+        _dedup_components_sql,
+    ),
+    Entry("exact_dup_groups", _exact_dup_groups, _EXACT_DUP_SQL),
+    Entry("ngram_jaccard_capped", _ngram_jaccard_capped, _NGRAM_JACCARD_CAPPED_SQL),
+    Entry("simhash_fingerprints", _simhash_fingerprints, _SIMHASH_FP_SQL, bench=False),
+    Entry("ann_ivf_topk", _ann_ivf_topk, _ANN_IVF_SQL),
+    Entry("ann_topk_per_query", _ann_topk, _ANN_TOPK_SQL),
+    Entry(
+        "budget_sample_by_lang",
+        _budget_sample_by_lang,
+        _BUDGET_SAMPLE_SQL,
+        bench=False,
+    ),
+    Entry("doc_fingerprint", _doc_fingerprint, _DOC_FINGERPRINT_SQL, bench=False),
+    Entry("events_hourly", _events_hourly, _EVENTS_HOURLY_SQL),
+    Entry("events_range_join", _events_range_join, _EVENTS_RANGE_JOIN_SQL),
+    Entry(
+        "events_session_windows",
+        _events_session_windows,
+        _EVENTS_SESSION_WINDOWS_SQL,
+        bench=False,
+    ),
+    Entry("events_sessions", _events_sessions, _EVENTS_SESSIONS_SQL),
+    Entry("keyword_search", _keyword_search, _KEYWORD_SEARCH_SQL, bench=False),
+    Entry("knn_dot", _knn("dot"), lambda: _knn_sql(_DOT), bench=False),
+    Entry("knn_euclidean", _knn("euclidean"), lambda: _knn_sql(_EUC), bench=False),
+    Entry(
+        "knn_min_score",
+        _knn("cosine", n=100, min_score=0.15),
+        lambda: _knn_sql(_COS, n=100, min_score=0.15),
+    ),
+    Entry("lang_id", _lang_id, _LANG_ID_SQL),
+    Entry(
+        "lsh_near_dup_multi",
+        _lsh_near_dup_multi,
+        _lsh_near_dup_multi_sql,
+        bench=False,
+    ),
+    Entry("mix_sample_langs", _mix_sample_langs, _mix_sample_sql, bench=False),
+    Entry(
+        "multimodal_audio_meta",
+        _multimodal_audio_meta,
+        _MULTIMODAL_AUDIO_SQL,
+        bench=False,
+    ),
+    Entry(
+        "multimodal_frame_sample",
+        _multimodal_frame_sample,
+        _MULTIMODAL_FRAMES_SQL,
+        bench=False,
+    ),
+    Entry(
+        "multimodal_image_meta",
+        _multimodal_image_meta,
+        _MULTIMODAL_IMAGE_SQL,
+        bench=False,
+    ),
+    Entry("pq_adc_topk", _pq_adc_topk, _PQ_ADC_SQL),
+    Entry("similarity_pair", _similarity_pair, _SIMILARITY_PAIR_SQL, bench=False),
+    Entry("text_stats", _text_stats, _TEXT_STATS_SQL),
+    Entry("tfidf_search", _tfidf_search, _TFIDF_SEARCH_SQL),
+    Entry("token_topk", _token_topk, _TOKEN_TOPK_SQL),
+    Entry(
+        "docs_tokenizer_fertility",
+        _docs_tokenizer_fertility,
+        _docs_tokenizer_fertility_sql,
+    ),
+    Entry("embedding_drift", _embedding_drift, _embedding_drift_sql),
+    Entry(
+        "docs_compression_ratio",
+        _docs_compression_ratio,
+        _docs_compression_ratio_sql,
+    ),
+    Entry("packing_report", _packing_report, _PACKING_REPORT_SQL),
+    Entry("docs_csv_ingest", _docs_csv_ingest, _DOCS_CSV_INGEST_SQL),
+    Entry("docs_blocklist", _docs_blocklist, _DOCS_BLOCKLIST_SQL),
+    Entry("events_heavy_hitters", _events_heavy_hitters, _EVENTS_HEAVY_HITTERS_SQL),
+    Entry("docs_vocab_growth", _docs_vocab_growth, _docs_vocab_growth_sql),
+    Entry("wds_datasource_read", _wds_datasource_read, _WDS_ROUNDTRIP_SQL),
+    Entry("docs_lm_heldout", _docs_lm_heldout, _DOCS_LM_HELDOUT_SQL),
+    Entry("radius_search", _radius_search, _RADIUS_SEARCH_SQL),
+    Entry("multimodal_dedup_exact", _multimodal_dedup_exact, _MULTIMODAL_DEDUP_SQL),
+    Entry(
+        "events_stream_sessionize",
+        _events_stream_sessionize,
+        _EVENTS_STREAM_SESSIONIZE_SQL,
+    ),
+    Entry("corpus_merge", _corpus_merge, _CORPUS_MERGE_SQL),
+    Entry("docs_orc_roundtrip", _docs_orc_roundtrip, _DOCS_ORC_ROUNDTRIP_SQL),
+    Entry("events_hll_accuracy", _events_hll_accuracy, _EVENTS_HLL_ACCURACY_SQL),
+    Entry("events_asof_forward", _events_asof_forward, _EVENTS_ASOF_FORWARD_SQL),
+    Entry("source_psi_drift", _source_psi_drift, _SOURCE_PSI_DRIFT_SQL),
+    Entry("docs_drop_attribution", _docs_drop_attribution, _DOCS_DROP_ATTRIBUTION_SQL),
+    Entry("skew_split_join", _skew_split_join, _SKEW_SPLIT_JOIN_SQL),
+    Entry("decontaminate_fuzzy", _decontaminate_fuzzy, _decontaminate_fuzzy_sql),
+    Entry(
+        "dedup_recall_embedding",
+        _dedup_recall_embedding,
+        _dedup_recall_embedding_sql,
+    ),
+    Entry(
+        "multimodal_image_quality",
+        _multimodal_image_quality,
+        _MULTIMODAL_IMAGE_QUALITY_SQL,
+    ),
+    Entry("docs_cdc_chunks", _docs_cdc_chunks, _DOCS_CDC_CHUNKS_SQL),
+    Entry(
+        "dedup_components_bucket",
+        _dedup_components_bucket,
+        _dedup_components_bucket_sql,
+    ),
+    Entry(
+        "pipeline_dedup_bucket",
+        _pipeline_dedup_bucket,
+        lambda: _pipeline_dedup_full_sql(grouping="bucket"),
+    ),
+    Entry("docs_quality_zscore", _docs_quality_zscore, _DOCS_QUALITY_ZSCORE_SQL),
+    # bit-reproducible training -> precomputed-VALUES oracle
+    Entry("unigram_vocab", _unigram_vocab, _unigram_vocab_sql),
+    Entry(
+        "dedup_bucket_precision",
+        _dedup_bucket_precision,
+        lambda: _grouping_precision_sql(_dedup_components_bucket_sql()),
+    ),
+    Entry("docs_novelty", _docs_novelty, _DOCS_NOVELTY_SQL),
+    Entry("docs_mojibake", _docs_mojibake, _DOCS_MOJIBAKE_SQL),
+    Entry("token_cms_topk", _token_cms_topk, _TOKEN_CMS_SQL),
+    Entry("knn_mutual_pairs", _knn_mutual_pairs, _KNN_MUTUAL_SQL),
+    Entry("knn_mutual_ann", _knn_mutual_ann, _knn_mutual_ann_sql),
+    Entry("pipeline_dedup_full", _pipeline_dedup_full, _pipeline_dedup_full_sql),
+    Entry("docs_dedup_funnel", _docs_dedup_funnel, _docs_dedup_funnel_sql),
+    Entry("pipeline_crawl", _pipeline_crawl, _pipeline_crawl_sql),
+    Entry("pipeline_rag", _pipeline_rag, _pipeline_rag_sql),
+    Entry("dedup_recall_lsh", _dedup_recall_lsh, _dedup_recall_lsh_sql),
+    Entry("docs_dup_spans", _docs_dup_spans, _DOCS_DUP_SPANS_SQL),
+    Entry("docs_dup_stats", _docs_dup_stats, _DOCS_DUP_STATS_SQL),
+    Entry("docs_dedup_cut", _docs_dedup_cut, _DOCS_DEDUP_CUT_SQL),
+    Entry("docs_html_extract", _docs_html_extract, _DOCS_HTML_EXTRACT_SQL),
+    Entry("docs_normalize", _docs_normalize, _DOCS_NORMALIZE_SQL),
+    Entry("cascade_topk", _cascade_topk, _CASCADE_SQL),
+    Entry("mmr_topk", _mmr_topk, _mmr_sql),
+    Entry("corpus_manifest", _corpus_manifest, _CORPUS_MANIFEST_SQL),
+    Entry("docs_jsonl_ingest", _docs_jsonl_ingest, _DOCS_JSONL_INGEST_SQL),
+    Entry("source_overlap", _source_overlap, _SOURCE_OVERLAP_SQL),
+    Entry("dedup_weighted", _dedup_weighted, _DEDUP_WEIGHTED_SQL),
+    Entry(
+        "docs_dedup_lines_within",
+        _docs_dedup_lines_within,
+        _DOCS_DEDUP_LINES_WITHIN_SQL,
+    ),
+    Entry("events_funnel", _events_funnel, _EVENTS_FUNNEL_SQL),
+    Entry("events_anomaly", _events_anomaly, _EVENTS_ANOMALY_SQL),
+    Entry("events_stream_anomaly", _events_stream_anomaly, _EVENTS_STREAM_ANOMALY_SQL),
+    Entry("multimodal_header_meta", _multimodal_header_meta, _MULTIMODAL_HEADER_SQL),
+    Entry("multimodal_wav_meta", _multimodal_wav_meta, _MULTIMODAL_WAV_SQL),
+    Entry("multimodal_mp4_meta", _multimodal_mp4_meta, _MULTIMODAL_MP4_SQL),
+    Entry("docs_quality_clf", _docs_quality_clf, _docs_quality_clf_sql),
+    Entry("docs_keyword_topk", _docs_keyword_topk, _DOCS_KEYWORD_TOPK_SQL),
+    Entry("source_quality_report", _source_quality_report, _SOURCE_QUALITY_REPORT_SQL),
+    # incremental merge must equal the one-shot manifest digest
+    Entry(
+        "corpus_manifest_incremental",
+        _corpus_manifest_incremental,
+        _CORPUS_MANIFEST_SQL,
+    ),
+    Entry("docs_stream_upsert", _docs_stream_upsert, _DOCS_STREAM_UPSERT_SQL),
+    Entry("dsir_select", _dsir_select, _dsir_sql),
+    # rows-only: iterative ML, sign-ambiguous PCA, env-gated HF model
+    Entry("kmeans_clusters", _kmeans_clusters, None),
+    Entry("pca_2d", _pca_2d, None, bench=False),
+    Entry("hf_embed_fake", _hf_embed_fake, None, bench=False),
+    # bit-reproducible training -> precomputed-VALUES oracle
+    Entry("bpe_merges", _bpe_merges, _bpe_merges_sql),
+    Entry("docs_pagerank", _docs_pagerank, _DOCS_PAGERANK_SQL),
+    Entry("dedup_recall_simhash", _dedup_recall_simhash, _dedup_recall_simhash_sql),
+    Entry("mix_rank_weighted", _mix_rank_weighted, _MIX_RANK_WEIGHTED_SQL),
+    Entry("entity_match_pairs", _entity_match_pairs, _ENTITY_MATCH_PAIRS_SQL),
+    Entry("entity_resolve", _entity_resolve, _ENTITY_RESOLVE_SQL),
+    Entry("entity_block_audit", _entity_block_audit, _ENTITY_BLOCK_AUDIT_SQL),
+    Entry(
+        "bm25_indexed_topk",
+        _bm25_indexed_topk,
+        lambda: _BM25_SEARCH_SQL.replace("LIMIT 10", "LIMIT 15"),
+    ),
+    Entry("multimodal_pcm_stats", _multimodal_pcm_stats, _MULTIMODAL_PCM_SQL),
+    Entry("multimodal_image_ahash", _multimodal_image_ahash, _MULTIMODAL_AHASH_SQL),
+    Entry("pipeline_media", _pipeline_media, _PIPELINE_MEDIA_SQL),
+    Entry("media_quarantine", _media_quarantine, _MEDIA_QUARANTINE_SQL),
+    Entry("docs_scd2", _docs_scd2, _DOCS_SCD2_SQL),
+    Entry("docs_asof_version", _docs_asof_version, _DOCS_ASOF_SQL),
+    Entry(
+        "events_stream_heavy_hitters",
+        _events_stream_heavy_hitters,
+        _EVENTS_STREAM_HH_SQL,
+    ),
+    Entry("decontaminate_bloom", _decontaminate_bloom, _DECONTAM_BLOOM_SQL),
+    Entry("maxsim_topk", _maxsim_topk, _maxsim_topk_sql),
+    Entry("rerank_search", _rerank_search, _rerank_search_sql),
+    Entry("ngram_containment", _ngram_containment, _NGRAM_CONTAINMENT_SQL),
+    Entry("docs_dedup_contained", _docs_dedup_contained, _DOCS_DEDUP_CONTAINED_SQL),
+    Entry("docs_template_pages", _docs_template_pages, _docs_template_pages_sql),
+    Entry("docs_lm_kn", _docs_lm_kn, _docs_lm_kn_sql),
+    Entry("docs_quality_ensemble", _docs_quality_ensemble, _docs_quality_ensemble_sql),
+    Entry("events_k_anonymity", _events_k_anonymity, _EVENTS_K_ANONYMITY_SQL),
+    Entry("docs_url_canonical", _docs_url_canonical, _docs_url_canonical_sql),
+    Entry("crawl_host_budget", _crawl_host_budget, _crawl_host_budget_sql),
+    Entry("lang_confusion", _lang_confusion, _LANG_CONFUSION_SQL),
+    Entry("multimodal_near_dup", _multimodal_near_dup, _MULTIMODAL_NEAR_DUP_SQL),
+    Entry(
+        "multimodal_audio_near_dup",
+        _multimodal_audio_near_dup,
+        _MULTIMODAL_AUDIO_NEAR_DUP_SQL,
+    ),
+    Entry("dedup_prefix", _dedup_prefix, _DEDUP_PREFIX_SQL),
+    Entry("soft_dedup", _soft_dedup, _soft_dedup_sql),
+    Entry("winnow_pairs", _winnow_pairs, _WINNOW_SQL),
+    Entry("token_pmi", _token_pmi, _TOKEN_PMI_SQL),
+    Entry("kmeans_lloyd", _kmeans_lloyd, _kmeans_lloyd_sql),
+    Entry("mix_doremi", _mix_doremi, _mix_doremi_sql),
+    Entry("embedding_anisotropy", _embedding_anisotropy, _EMBEDDING_ANISOTROPY_SQL),
+    Entry("source_ks_distance", _source_ks_distance, _SOURCE_KS_DISTANCE_SQL),
+    Entry("docs_clf_conformal", _docs_clf_conformal, _docs_clf_conformal_sql),
+    Entry("events_ewma", _events_ewma, _events_ewma_sql),
+    Entry("events_seasonal_error", _events_seasonal_error, _EVENTS_SEASONAL_ERROR_SQL),
+    Entry("corpus_ks_manifest", _corpus_ks_manifest, _CORPUS_KS_MANIFEST_SQL),
+    Entry(
+        "docs_dup_cluster_stats",
+        _docs_dup_cluster_stats,
+        _DOCS_DUP_CLUSTER_STATS_SQL,
+    ),
+    Entry("mix_doremi_sample", _mix_doremi_sample, _mix_doremi_sample_sql),
+    Entry("embedding_coreset", _embedding_coreset, _embedding_coreset_sql),
+    Entry("docs_length_tail", _docs_length_tail, _DOCS_LENGTH_TAIL_SQL),
+])
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver's correctness gate checks the first 50
-    # entries. Round-14 rotation (per the r13 verdict item 1): the 9
-    # long-stable spine representatives + the 23 round-13 additions
-    # (first driver row; all 22 oracle-backed ones judge-re-verified
-    # at sf0.001 AND sf0.01 in the r13 verdict, the 23rd is the
-    # declared rows-only LBFGS agreement row) + the 18 oldest
-    # surviving rows (sq_topk, last checked r5, plus 17 of the 21
-    # oracle-backed r6-cohort rows), so no entry's last check ages
-    # past ~8 rounds. The 4 deferred r6 rows (bq_rerank_topk,
-    # bq_topk_sidecar, events_skew_profile, events_zorder) lead the
-    # r15 rotation.
-    #
-    # STATUS: this window is the round-14 rotation and is HELD
-    # UNCHANGED through the end of round 14 so CORRECTNESS_r14
-    # (produced by the driver when the round closes) covers exactly
-    # these 50 entries. Evidence for "round 14 is still open":
-    # CORRECTNESS_r01..r13.json exist in the repo and
-    # CORRECTNESS_r14.json does not — the driver writes the artifact
-    # at round close. DO NOT rotate this window until CORRECTNESS_r14
-    # rows exist.
-    # Multi-round-stable legacy entries sit in the tail; every
-    # oracle-backed tail entry stays checked by the dynamic SUBSET in
-    # tests/test_entry_oracle.py (computed as "oracle-backed and past
-    # position 50", so any future rotation keeps the invariant).
-    return {
-        # --- gate window (1-50), rotated for ROUND 14 ---
-        # Every window entry is locally verified at sf0.001 AND
-        # sf0.01 via scripts/check_oracle.py before the round
-        # closes.
-        # spine reps:
-        "knn_cosine": _knn("cosine"),
-        "knn_null_quirk": _knn_null_quirk,
-        "tfidf_hybrid": _tfidf_hybrid,
-        "similarity_join_lsh": _similarity_join_lsh,
-        "lsh_near_dup": _lsh_near_dup,
-        "dedup_drop_exact": _dedup_drop_exact,
-        "events_asof_purchase": _events_asof_purchase,
-        "docs_stream_dedup": _docs_stream_dedup,
-        "q5_region_revenue": _q5_region_revenue,
-        # the 23 round-13 additions (first driver row; the 22
-        # oracle-backed ones judge-re-verified at sf0.001 AND sf0.01
-        # in the r13 verdict; docs_clf_ml_agreement is rows-only by
-        # declaration — LBFGS, like kmeans_clusters):
-        "corpus_membership_manifest": _corpus_membership_manifest,
-        "docs_clf_ml_agreement": _docs_clf_ml_agreement,
-        "docs_clf_pr_auc": _docs_clf_pr_auc,
-        "docs_clf_brier_ece": _docs_clf_brier_ece,
-        "events_cusum": _events_cusum,
-        "source_js_divergence": _source_js_divergence,
-        "source_token_entropy": _source_token_entropy,
-        "layout_prune_audit": _layout_prune_audit,
-        "ql_search": _ql_search,
-        "docs_ngram_coverage": _docs_ngram_coverage,
-        "corpus_lenhist_manifest": _corpus_lenhist_manifest,
-        "docs_script_mix": _docs_script_mix,
-        "docs_length_robust_z": _docs_length_robust_z,
-        "source_dup_rate": _source_dup_rate,
-        "corpus_psi_manifest": _corpus_psi_manifest,
-        "embedding_effective_rank": _embedding_effective_rank,
-        "events_cusum_by_type": _events_cusum_by_type,
-        "docs_split_stratified": _docs_split_stratified,
-        "events_anomaly_robust": _events_anomaly_robust,
-        "corpus_freq_drift_manifest": _corpus_freq_drift_manifest,
-        "ann_recall_bq": _ann_recall_bq,
-        "source_winsorized_len": _source_winsorized_len,
-        "events_funnel_latency": _events_funnel_latency,
-        # the 18 oldest surviving driver rows: sq_topk (last checked
-        # r5 — deferred one round by the r13 covariance redo seat) +
-        # 17 of the 21 oracle-backed r6-cohort rows (the 3 rows-only
-        # r6 rows kmeans_clusters/pca_2d/hf_embed_fake stay in the
-        # tail — a window seat spends stronger oracle evidence):
-        "sq_topk": _sq_topk,
-        "ann_recall_lsh": _ann_recall_lsh,
-        "bq_hamming_topk": _bq_hamming_topk,
-        "corpus_diff": _corpus_diff,
-        "decontaminate_ngram": _decontaminate_ngram,
-        "docs_ccnet_buckets": _docs_ccnet_buckets,
-        "docs_lm_perplexity": _docs_lm_perplexity,
-        "docs_stream_ingest": _docs_stream_ingest,
-        "docs_stream_near_pairs": _docs_stream_near_pairs,
-        "events_props_stats": _events_props_stats,
-        "events_retention": _events_retention,
-        "events_rolling_1h": _events_rolling_1h,
-        "q13_order_histogram": _q13_order_histogram,
-        "q15_top_supplier": _q15_top_supplier,
-        "q17_small_quantity": _q17_small_quantity,
-        "q22_churned_value": _q22_churned_value,
-        "q8_market_share": _q8_market_share,
-        "wds_roundtrip": _wds_roundtrip,
-        # --- position 51+: outside the driver's gate window ---
-        # every oracle-backed entry below is checked by the dynamic
-        # SUBSET in tests/test_entry_oracle.py; entries rotated out
-        # this round all have green CORRECTNESS_r13 rows. New
-        # round-14 additions accumulate at the very end of this dict
-        # under a ROUND-15 ROTATION QUEUE comment.
-        # the round-13 window cohort (all 50 green in
-        # CORRECTNESS_r13; the spine reps stay in the window):
-        "embedding_whiten": _embedding_whiten,
-        "token_cms_manifest": _token_cms_manifest,
-        "docs_node_clustering": _docs_node_clustering,
-        "docs_clf_isotonic": _docs_clf_isotonic,
-        "rocchio_search": _rocchio_search,
-        "docs_stream_manifest": _docs_stream_manifest,
-        "docs_quality_rank_norm": _docs_quality_rank_norm,
-        "docs_span_corruption": _docs_span_corruption,
-        "docs_jaccard_exact_pairs": _docs_jaccard_exact_pairs,
-        "corpus_overlap_minhash": _corpus_overlap_minhash,
-        "docs_neyman_alloc": _docs_neyman_alloc,
-        "token_burstiness": _token_burstiness,
-        "source_token_gini": _source_token_gini,
-        "events_gap_quantiles": _events_gap_quantiles,
-        "docs_readability": _docs_readability,
-        "wordpiece_unk_by_lang": _wordpiece_unk_by_lang,
-        "corpus_triage_manifest": _corpus_triage_manifest,
-        "events_transition_matrix": _events_transition_matrix,
-        "events_gap_quantiles_by_type": _events_gap_quantiles_by_type,
-        "embedding_covariance": _embedding_covariance,
-        "bucketed_join_segments": _bucketed_join_segments,
-        "corpus_rollup": _corpus_rollup,
-        "decontaminate_corpus": _decontaminate_corpus,
-        "docs_chunks": _docs_chunks,
-        "docs_length_quantiles": _docs_length_quantiles,
-        "docs_pack": _docs_pack,
-        "docs_pivot_sources": _docs_pivot_sources,
-        "docs_quality_flags": _docs_quality_flags,
-        "docs_redact": _docs_redact,
-        "docs_repetition": _docs_repetition,
-        "docs_stream_budget": _docs_stream_budget,
-        "embedding_health": _embedding_health,
-        "embedding_pool_labels": _embedding_pool_labels,
-        "hybrid_rrf": _hybrid_rrf,
-        "incremental_near_dup": _incremental_near_dup,
-        "matryoshka_topk": _matryoshka_topk,
-        "mix_temperature": _mix_temperature,
-        "sample_fixed_per_lang": _sample_fixed_per_lang,
-        "skew_agg_langs": _skew_agg_langs,
-        "skew_join_events": _skew_join_events,
-        "split_leakage_free": _split_leakage_free,
-        # the 4 deferred oracle-backed r6 rows — FIRST INTO THE R15
-        # WINDOW (oldest surviving driver rows after this rotation):
-        "bq_rerank_topk": _bq_rerank_topk,
-        "bq_topk_sidecar": _bq_topk_sidecar,
-        "events_skew_profile": _events_skew_profile,
-        "events_zorder": _events_zorder,
-        "ann_recall_ivfpq": _ann_recall_ivfpq,
-        "corpus_overlap_manifest": _corpus_overlap_manifest,
-        "corpus_overlap_matrix": _corpus_overlap_matrix,
-        "docs_batch_padding": _docs_batch_padding,
-        "docs_bootstrap_ci": _docs_bootstrap_ci,
-        "docs_clf_auc": _docs_clf_auc,
-        "docs_clf_calibration": _docs_clf_calibration,
-        "docs_dup_ngram_frac": _docs_dup_ngram_frac,
-        "docs_english_salvage": _docs_english_salvage,
-        "docs_fim_spm": _docs_fim_spm,
-        "docs_lang_segments": _docs_lang_segments,
-        "docs_source_lang_cube": _docs_source_lang_cube,
-        "docs_triangle_stats": _docs_triangle_stats,
-        "docs_truncation_report": _docs_truncation_report,
-        "docs_zipf_fit": _docs_zipf_fit,
-        "events_user_sequences": _events_user_sequences,
-        "lm_greedy_continuation": _lm_greedy_continuation,
-        "pipeline_seq_prep": _pipeline_seq_prep,
-        "rm3_search": _rm3_search,
-        "token_negatives": _token_negatives,
-        "token_skipgrams": _token_skipgrams,
-        "pipeline_ccnet": _pipeline_ccnet,
-        "pipeline_web": _pipeline_web,
-        "docs_c4_clean": _docs_c4_clean,
-        "dedup_keep_best": _dedup_keep_best,
-        "mix_target": _mix_target,
-        "mix_unimax": _mix_unimax,
-        "docs_keep_best": _docs_keep_best,
-        "ann_tuned_topk": _ann_tuned_topk,
-        "ann_rank_quality": _ann_rank_quality,
-        "embedding_rp_topk": _embedding_rp_topk,
-        "q2_min_cost_supplier": _q2_min_cost_supplier,
-        "q9_nation_profit": _q9_nation_profit,
-        "q11_important_parts": _q11_important_parts,
-        "q12_late_lines": _q12_late_lines,
-        "q16_supplier_counts": _q16_supplier_counts,
-        "q20_share_suppliers": _q20_share_suppliers,
-        "q21_waiting_suppliers": _q21_waiting_suppliers,
-        "ann_lsh_batch": _ann_lsh_batch,
-        "ann_topk_sidecar": _ann_topk_sidecar,
-        "docs_warc_gz_ingest": _docs_warc_gz_ingest,
-        "bitext_margin_pairs": _bitext_margin("threshold"),
-        "bitext_margin_best": _bitext_margin("best"),
-        "docs_token_shards": _docs_token_shards,
-        "docs_fim_split": _docs_fim_split,
-        "docs_crop_pairs": _docs_crop_pairs,
-        "docs_weighted_sample": _docs_weighted_sample,
-        "docs_weighted_sample_by_lang": _docs_weighted_sample_by_lang,
-        "docs_url_spam": _docs_url_spam,
-        "corpus_overlap_est": _corpus_overlap_est,
-        "pipeline_fim_pack": _pipeline_fim_pack,
-        "q1_pricing": _q1_pricing,
-        "q3_top_orders": _q3_top_orders,
-        "pipeline_curate": _pipeline_curate,
-        "pipeline_pretrain": _pipeline_pretrain,
-        "topk_per_segment": _topk_per_segment,
-        "q4_order_priority": _q4_order_priority,
-        "q6_forecast_revenue": _q6_forecast_revenue,
-        "q7_nation_volume": _q7_nation_volume,
-        "q10_returned_items": _q10_returned_items,
-        "q14_promo_revenue": _q14_promo_revenue,
-        "q18_large_orders": _q18_large_orders,
-        "q19_disjunctive_revenue": _q19_disjunctive_revenue,
-        "docs_dedup_lines": _docs_dedup_lines,
-        "serving_shuffle": _serving_shuffle,
-        "curriculum_order": _curriculum_order,
-        "hard_negatives": _hard_negatives,
-        "ann_lsh_topk": _ann_lsh_topk,
-        "embedding_near_dup": _embedding_near_dup,
-        "ngram_jaccard_pairs": _ngram_jaccard_pairs,
-        "minhash_lsh_pairs": _minhash_lsh_pairs,
-        "simhash_pairs": _simhash_pairs,
-        "dedup_components": _dedup_components,
-        "bpe_token_stats": _bpe_token_stats,
-        "events_stream_hourly": _events_stream_hourly,
-        "ann_ivf_topk_large": _ann_ivf_topk_large,
-        "semantic_dedup": _semantic_dedup,
-        "bm25_search": _bm25_search,
-        "ivfpq_adc_topk": _ivfpq_adc_topk,
-        "events_stream_interval_join": _events_stream_interval_join,
-        "hf_query_nearest": _hf_query_nearest,
-        "unigram_fertility": _unigram_fertility,
-        "wordpiece_merges": _wordpiece_merges,
-        "wordpiece_fertility": _wordpiece_fertility,
-        "docs_warc_ingest": _docs_warc_ingest,
-        "docs_dedup_homoglyph": _docs_dedup_homoglyph,
-        "docs_lang_mix": _docs_lang_mix,
-        "docs_lpa_communities": _docs_lpa_communities,
-        "docs_ict_pairs": _docs_ict_pairs,
-        "embedding_balanced_sample": _embedding_balanced_sample,
-        "dedup_components_lpa": _dedup_components_lpa,
-        "dedup_lpa_precision": _dedup_lpa_precision,
-        "pq_reconstruction": _pq_reconstruction,
-        "docs_length_buckets": _docs_length_buckets,
-        "bucketed_gemm_near_dup": _bucketed_gemm_near_dup,
-        "dedup_components_two_phase": _dedup_components_two_phase,
-        "exact_dup_groups": _exact_dup_groups,
-        "ngram_jaccard_capped": _ngram_jaccard_capped,
-        "simhash_fingerprints": _simhash_fingerprints,
-        "ann_ivf_topk": _ann_ivf_topk,
-        "ann_topk_per_query": _ann_topk,
-        "budget_sample_by_lang": _budget_sample_by_lang,
-        "doc_fingerprint": _doc_fingerprint,
-        "events_hourly": _events_hourly,
-        "events_range_join": _events_range_join,
-        "events_session_windows": _events_session_windows,
-        "events_sessions": _events_sessions,
-        "keyword_search": _keyword_search,
-        "knn_dot": _knn("dot"),
-        "knn_euclidean": _knn("euclidean"),
-        "knn_min_score": _knn("cosine", n=100, min_score=0.15),
-        "lang_id": _lang_id,
-        "lsh_near_dup_multi": _lsh_near_dup_multi,
-        "mix_sample_langs": _mix_sample_langs,
-        "multimodal_audio_meta": _multimodal_audio_meta,
-        "multimodal_frame_sample": _multimodal_frame_sample,
-        "multimodal_image_meta": _multimodal_image_meta,
-        "pq_adc_topk": _pq_adc_topk,
-        "similarity_pair": _similarity_pair,
-        "text_stats": _text_stats,
-        "tfidf_search": _tfidf_search,
-        "token_topk": _token_topk,
-        "docs_tokenizer_fertility": _docs_tokenizer_fertility,
-        "embedding_drift": _embedding_drift,
-        "docs_compression_ratio": _docs_compression_ratio,
-        "packing_report": _packing_report,
-        "docs_csv_ingest": _docs_csv_ingest,
-        "docs_blocklist": _docs_blocklist,
-        "events_heavy_hitters": _events_heavy_hitters,
-        "docs_vocab_growth": _docs_vocab_growth,
-        "wds_datasource_read": _wds_datasource_read,
-        "docs_lm_heldout": _docs_lm_heldout,
-        "radius_search": _radius_search,
-        "multimodal_dedup_exact": _multimodal_dedup_exact,
-        "events_stream_sessionize": _events_stream_sessionize,
-        "corpus_merge": _corpus_merge,
-        "docs_orc_roundtrip": _docs_orc_roundtrip,
-        "events_hll_accuracy": _events_hll_accuracy,
-        "events_asof_forward": _events_asof_forward,
-        "source_psi_drift": _source_psi_drift,
-        "docs_drop_attribution": _docs_drop_attribution,
-        "skew_split_join": _skew_split_join,
-        "decontaminate_fuzzy": _decontaminate_fuzzy,
-        "dedup_recall_embedding": _dedup_recall_embedding,
-        "multimodal_image_quality": _multimodal_image_quality,
-        "docs_cdc_chunks": _docs_cdc_chunks,
-        "dedup_components_bucket": _dedup_components_bucket,
-        "pipeline_dedup_bucket": _pipeline_dedup_bucket,
-        "docs_quality_zscore": _docs_quality_zscore,
-        "unigram_vocab": _unigram_vocab,
-        "dedup_bucket_precision": _dedup_bucket_precision,
-        "docs_novelty": _docs_novelty,
-        "docs_mojibake": _docs_mojibake,
-        "token_cms_topk": _token_cms_topk,
-        "knn_mutual_pairs": _knn_mutual_pairs,
-        "knn_mutual_ann": _knn_mutual_ann,
-        "pipeline_dedup_full": _pipeline_dedup_full,
-        "docs_dedup_funnel": _docs_dedup_funnel,
-        "pipeline_crawl": _pipeline_crawl,
-        "pipeline_rag": _pipeline_rag,
-        "dedup_recall_lsh": _dedup_recall_lsh,
-        "docs_dup_spans": _docs_dup_spans,
-        "docs_dup_stats": _docs_dup_stats,
-        "docs_dedup_cut": _docs_dedup_cut,
-        "docs_html_extract": _docs_html_extract,
-        "docs_normalize": _docs_normalize,
-        "cascade_topk": _cascade_topk,
-        "mmr_topk": _mmr_topk,
-        "corpus_manifest": _corpus_manifest,
-        "docs_jsonl_ingest": _docs_jsonl_ingest,
-        "source_overlap": _source_overlap,
-        "dedup_weighted": _dedup_weighted,
-        "docs_dedup_lines_within": _docs_dedup_lines_within,
-        "events_funnel": _events_funnel,
-        "events_anomaly": _events_anomaly,
-        "events_stream_anomaly": _events_stream_anomaly,
-        "multimodal_header_meta": _multimodal_header_meta,
-        "multimodal_wav_meta": _multimodal_wav_meta,
-        "multimodal_mp4_meta": _multimodal_mp4_meta,
-        "docs_quality_clf": _docs_quality_clf,
-        "docs_keyword_topk": _docs_keyword_topk,
-        "source_quality_report": _source_quality_report,
-        "corpus_manifest_incremental": _corpus_manifest_incremental,
-        "docs_stream_upsert": _docs_stream_upsert,
-        "dsir_select": _dsir_select,
-        "kmeans_clusters": _kmeans_clusters,
-        "pca_2d": _pca_2d,
-        "hf_embed_fake": _hf_embed_fake,
-        "bpe_merges": _bpe_merges,
-        "docs_pagerank": _docs_pagerank,
-        "dedup_recall_simhash": _dedup_recall_simhash,
-        "mix_rank_weighted": _mix_rank_weighted,
-        "entity_match_pairs": _entity_match_pairs,
-        "entity_resolve": _entity_resolve,
-        "entity_block_audit": _entity_block_audit,
-        "bm25_indexed_topk": _bm25_indexed_topk,
-        "multimodal_pcm_stats": _multimodal_pcm_stats,
-        "multimodal_image_ahash": _multimodal_image_ahash,
-        "pipeline_media": _pipeline_media,
-        "media_quarantine": _media_quarantine,
-        "docs_scd2": _docs_scd2,
-        "docs_asof_version": _docs_asof_version,
-        "events_stream_heavy_hitters": _events_stream_heavy_hitters,
-        "decontaminate_bloom": _decontaminate_bloom,
-        "maxsim_topk": _maxsim_topk,
-        "rerank_search": _rerank_search,
-        "ngram_containment": _ngram_containment,
-        "docs_dedup_contained": _docs_dedup_contained,
-        "docs_template_pages": _docs_template_pages,
-        "docs_lm_kn": _docs_lm_kn,
-        "docs_quality_ensemble": _docs_quality_ensemble,
-        "events_k_anonymity": _events_k_anonymity,
-        "docs_url_canonical": _docs_url_canonical,
-        "crawl_host_budget": _crawl_host_budget,
-        "lang_confusion": _lang_confusion,
-        "multimodal_near_dup": _multimodal_near_dup,
-        "multimodal_audio_near_dup": _multimodal_audio_near_dup,
-        "dedup_prefix": _dedup_prefix,
-        "soft_dedup": _soft_dedup,
-        "winnow_pairs": _winnow_pairs,
-        "token_pmi": _token_pmi,
-        # --- ROUND-15 ROTATION QUEUE: round-14 additions, verified
-        # locally at sf0.001 + sf0.01, first driver row next round ---
-        "kmeans_lloyd": _kmeans_lloyd,
-        "mix_doremi": _mix_doremi,
-        "embedding_anisotropy": _embedding_anisotropy,
-        "source_ks_distance": _source_ks_distance,
-        "docs_clf_conformal": _docs_clf_conformal,
-        "events_ewma": _events_ewma,
-        "events_seasonal_error": _events_seasonal_error,
-        "corpus_ks_manifest": _corpus_ks_manifest,
-        "docs_dup_cluster_stats": _docs_dup_cluster_stats,
-        "mix_doremi_sample": _mix_doremi_sample,
-        "embedding_coreset": _embedding_coreset,
-        "docs_length_tail": _docs_length_tail,
-    }
+    return {name: e.build for name, e in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        "knn_cosine": _knn_sql(_COS),
-        "knn_euclidean": _knn_sql(_EUC),
-        "knn_dot": _knn_sql(_DOT),
-        "knn_min_score": _knn_sql(_COS, n=100, min_score=0.15),
-        "knn_null_quirk": _KNN_NULL_QUIRK_SQL,
-        "similarity_pair": _SIMILARITY_PAIR_SQL,
-        "ann_topk_per_query": _ANN_TOPK_SQL,
-        # tuned-to-recall-1.0 ANN answers must equal the exact query
-        "ann_tuned_topk": _ANN_TOPK_SQL,
-        "similarity_join_lsh": _similarity_join_lsh_sql(),
-        "ann_lsh_topk": _ann_lsh_sql(),
-        "ann_topk_sidecar": _ann_lsh_sql(),
-        "ann_ivf_topk": _ANN_IVF_SQL,
-        "ann_ivf_topk_large": _ann_ivf_sql(256, 16),
-        "pq_adc_topk": _PQ_ADC_SQL,
-        "ivfpq_adc_topk": _IVFPQ_ADC_SQL,
-        "ann_recall_ivfpq": _ANN_RECALL_IVFPQ_SQL,
-        "embedding_near_dup": _EMBEDDING_NEAR_DUP_SQL,
-        "lsh_near_dup": _lsh_near_dup_sql(),
-        "bucketed_gemm_near_dup": _lsh_near_dup_sql(),
-        "lsh_near_dup_multi": _lsh_near_dup_multi_sql(),
-        "semantic_dedup": _SEMANTIC_DEDUP_SQL,
-        "tfidf_search": _TFIDF_SEARCH_SQL,
-        "tfidf_hybrid": _TFIDF_HYBRID_SQL,
-        "keyword_search": _KEYWORD_SEARCH_SQL,
-        "bm25_search": _BM25_SEARCH_SQL,
-        "text_stats": _TEXT_STATS_SQL,
-        "lang_id": _LANG_ID_SQL,
-        "token_topk": _TOKEN_TOPK_SQL,
-        "doc_fingerprint": _DOC_FINGERPRINT_SQL,
-        "multimodal_image_meta": _MULTIMODAL_IMAGE_SQL,
-        "multimodal_header_meta": _MULTIMODAL_HEADER_SQL,
-        "multimodal_wav_meta": _MULTIMODAL_WAV_SQL,
-        "multimodal_mp4_meta": _MULTIMODAL_MP4_SQL,
-        "multimodal_audio_meta": _MULTIMODAL_AUDIO_SQL,
-        "multimodal_frame_sample": _MULTIMODAL_FRAMES_SQL,
-        "exact_dup_groups": _EXACT_DUP_SQL,
-        "dedup_drop_exact": _DROP_EXACT_SQL,
-        "pipeline_curate": _pipeline_curate_sql(),
-        "budget_sample_by_lang": _BUDGET_SAMPLE_SQL,
-        "mix_sample_langs": _mix_sample_sql(),
-        "mix_temperature": _MIX_TEMPERATURE_SQL,
-        "mix_unimax": _MIX_UNIMAX_SQL,
-        "docs_quality_flags": _DOCS_QUALITY_SQL,
-        "docs_repetition": _DOCS_REPETITION_SQL,
-        "docs_redact": _DOCS_REDACT_SQL,
-        "docs_chunks": _DOCS_CHUNKS_SQL,
-        "docs_pack": _DOCS_PACK_SQL,
-        "skew_join_events": _SKEW_JOIN_SQL,
-        "skew_agg_langs": _SKEW_AGG_SQL,
-        "sq_topk": _SQ_TOPK_SQL,
-        "docs_stream_budget": _DOCS_STREAM_BUDGET_SQL,
-        "matryoshka_topk": _MATRYOSHKA_SQL,
-        "embedding_health": _EMBEDDING_HEALTH_SQL,
-        "incremental_near_dup": _INCREMENTAL_LSH_SQL,
-        "corpus_rollup": _CORPUS_ROLLUP_SQL,
-        "bucketed_join_segments": _BUCKETED_JOIN_SQL,
-        "docs_length_quantiles": _DOCS_QUANTILES_SQL,
-        "docs_pivot_sources": _DOCS_PIVOT_SQL,
-        "hybrid_rrf": _hybrid_rrf_sql(),
-        "embedding_pool_labels": _EMBEDDING_POOL_SQL,
-        "ann_lsh_batch": _ann_lsh_batch_sql(),
-        "split_leakage_free": _split_leakage_free_sql(),
-        "sample_fixed_per_lang": _SAMPLE_FIXED_SQL,
-        "decontaminate_corpus": _decontaminate_sql(),
-        "pipeline_pretrain": _PIPELINE_PRETRAIN_SQL,
-        "dsir_select": _dsir_sql(),
-        "docs_c4_clean": _DOCS_C4_CLEAN_SQL,
-        "dedup_keep_best": _dedup_keep_best_sql(),
-        "docs_stream_near_pairs": _STREAM_NEAR_PAIRS_SQL,
-        "mix_target": _mix_target_sql(),
-        "curriculum_order": _curriculum_sql(),
-        "hard_negatives": _hard_negatives_sql(),
-        "docs_lm_perplexity": _docs_lm_perplexity_sql(),
-        "docs_dedup_lines": _DOCS_DEDUP_LINES_SQL,
-        "docs_html_extract": _DOCS_HTML_EXTRACT_SQL,
-        "corpus_manifest": _CORPUS_MANIFEST_SQL,
-        "docs_jsonl_ingest": _DOCS_JSONL_INGEST_SQL,
-        "source_overlap": _SOURCE_OVERLAP_SQL,
-        "cascade_topk": _CASCADE_SQL,
-        "mmr_topk": _mmr_sql(),
-        "dedup_weighted": _DEDUP_WEIGHTED_SQL,
-        "pipeline_web": _PIPELINE_WEB_SQL,
-        "docs_normalize": _DOCS_NORMALIZE_SQL,
-        "docs_dedup_lines_within": _DOCS_DEDUP_LINES_WITHIN_SQL,
-        "docs_keep_best": _DOCS_KEEP_BEST_SQL,
-        "docs_dup_spans": _DOCS_DUP_SPANS_SQL,
-        "docs_dup_stats": _DOCS_DUP_STATS_SQL,
-        "docs_dedup_cut": _DOCS_DEDUP_CUT_SQL,
-        "q6_forecast_revenue": _Q6_SQL,
-        "q4_order_priority": _Q4_SQL,
-        "q10_returned_items": _Q10_SQL,
-        "q14_promo_revenue": _Q14_SQL,
-        "q18_large_orders": _Q18_SQL,
-        "q19_disjunctive_revenue": _Q19_SQL,
-        "q7_nation_volume": _Q7_SQL,
-        "q8_market_share": _Q8_SQL,
-        "q15_top_supplier": _Q15_SQL,
-        "q22_churned_value": _Q22_SQL,
-        "q13_order_histogram": _Q13_SQL,
-        "q17_small_quantity": _Q17_SQL,
-        "q2_min_cost_supplier": _Q2_SQL,
-        "q9_nation_profit": _Q9_SQL,
-        "q11_important_parts": _Q11_SQL,
-        "q12_late_lines": _Q12_SQL,
-        "q16_supplier_counts": _Q16_SQL,
-        "q20_share_suppliers": _Q20_SQL,
-        "q21_waiting_suppliers": _Q21_SQL,
-        "serving_shuffle": _SERVING_SHUFFLE_SQL,
-        "docs_stream_ingest": _DOCS_STREAM_INGEST_SQL,
-        "docs_ccnet_buckets": _docs_ccnet_buckets_sql(),
-        "decontaminate_ngram": _DECONTAM_NGRAM_SQL,
-        "bq_hamming_topk": _bq_hamming_sql(),
-        "bq_rerank_topk": _bq_rerank_sql(),
-        "bq_topk_sidecar": _bq_hamming_sql(),
-        "ann_recall_lsh": _ann_recall_lsh_sql(),
-        "ann_rank_quality": _ann_rank_quality_sql(),
-        "embedding_rp_topk": _embedding_rp_topk_sql(),
-        "wds_roundtrip": _WDS_ROUNDTRIP_SQL,
-        "pipeline_ccnet": _pipeline_ccnet_sql(),
-        "events_skew_profile": _EVENTS_SKEW_PROFILE_SQL,
-        "corpus_diff": _CORPUS_DIFF_SQL,
-        "events_rolling_1h": _EVENTS_ROLLING_SQL,
-        "events_retention": _EVENTS_RETENTION_SQL,
-        "events_props_stats": _EVENTS_PROPS_SQL,
-        "events_zorder": _EVENTS_ZORDER_SQL,
-        "ngram_jaccard_pairs": _NGRAM_JACCARD_SQL,
-        "ngram_jaccard_capped": _NGRAM_JACCARD_CAPPED_SQL,
-        "minhash_lsh_pairs": _MINHASH_LSH_SQL,
-        "simhash_fingerprints": _SIMHASH_FP_SQL,
-        "simhash_pairs": _SIMHASH_PAIRS_SQL,
-        "dedup_components": _dedup_components_sql(),
-        "dedup_components_two_phase": _dedup_components_sql(),
-        "bpe_token_stats": _bpe_stats_sql(),
-        "q1_pricing": _Q1_SQL,
-        "q3_top_orders": _Q3_SQL,
-        "q5_region_revenue": _Q5_SQL,
-        "topk_per_segment": _TOPK_PER_SEGMENT_SQL,
-        "events_hourly": _EVENTS_HOURLY_SQL,
-        "events_sessions": _EVENTS_SESSIONS_SQL,
-        "events_session_windows": _EVENTS_SESSION_WINDOWS_SQL,
-        "events_asof_purchase": _EVENTS_ASOF_SQL,
-        "events_range_join": _EVENTS_RANGE_JOIN_SQL,
-        "events_funnel": _EVENTS_FUNNEL_SQL,
-        "events_anomaly": _EVENTS_ANOMALY_SQL,
-        "events_stream_hourly": _EVENTS_HOURLY_SQL,
-        "events_stream_anomaly": _EVENTS_STREAM_ANOMALY_SQL,
-        "events_stream_interval_join": _EVENTS_RANGE_JOIN_SQL,
-        "docs_stream_dedup": _DOCS_STREAM_DEDUP_SQL,
-        "hf_query_nearest": _hf_query_nearest_sql(),
-        "docs_quality_clf": _docs_quality_clf_sql(),
-        "pipeline_dedup_full": _pipeline_dedup_full_sql(),
-        "docs_keyword_topk": _DOCS_KEYWORD_TOPK_SQL,
-        "source_quality_report": _SOURCE_QUALITY_REPORT_SQL,
-        # incremental merge must equal the one-shot manifest digest
-        "corpus_manifest_incremental": _CORPUS_MANIFEST_SQL,
-        "docs_stream_upsert": _DOCS_STREAM_UPSERT_SQL,
-        "docs_tokenizer_fertility": _docs_tokenizer_fertility_sql(),
-        "embedding_drift": _embedding_drift_sql(),
-        "pipeline_rag": _pipeline_rag_sql(),
-        "docs_compression_ratio": _docs_compression_ratio_sql(),
-        "decontaminate_bloom": _DECONTAM_BLOOM_SQL,
-        "maxsim_topk": _maxsim_topk_sql(),
-        "packing_report": _PACKING_REPORT_SQL,
-        "token_pmi": _TOKEN_PMI_SQL,
-        "winnow_pairs": _WINNOW_SQL,
-        "soft_dedup": _soft_dedup_sql(),
-        "docs_csv_ingest": _DOCS_CSV_INGEST_SQL,
-        "docs_blocklist": _DOCS_BLOCKLIST_SQL,
-        "docs_pagerank": _DOCS_PAGERANK_SQL,
-        "events_heavy_hitters": _EVENTS_HEAVY_HITTERS_SQL,
-        "docs_url_canonical": _docs_url_canonical_sql(),
-        "docs_length_buckets": _DOCS_LENGTH_BUCKETS_SQL,
-        "docs_vocab_growth": _docs_vocab_growth_sql(),
-        "docs_quality_ensemble": _docs_quality_ensemble_sql(),
-        "docs_template_pages": _docs_template_pages_sql(),
-        "wds_datasource_read": _WDS_ROUNDTRIP_SQL,
-        "events_stream_heavy_hitters": _EVENTS_STREAM_HH_SQL,
-        "pipeline_crawl": _pipeline_crawl_sql(),
-        "lang_confusion": _LANG_CONFUSION_SQL,
-        "crawl_host_budget": _crawl_host_budget_sql(),
-        "rerank_search": _rerank_search_sql(),
-        "ngram_containment": _NGRAM_CONTAINMENT_SQL,
-        "docs_lm_heldout": _DOCS_LM_HELDOUT_SQL,
-        "docs_dedup_contained": _DOCS_DEDUP_CONTAINED_SQL,
-        "docs_dedup_funnel": _docs_dedup_funnel_sql(),
-        "dedup_recall_lsh": _dedup_recall_lsh_sql(),
-        "mix_rank_weighted": _MIX_RANK_WEIGHTED_SQL,
-        "dedup_recall_simhash": _dedup_recall_simhash_sql(),
-        "docs_lm_kn": _docs_lm_kn_sql(),
-        "radius_search": _RADIUS_SEARCH_SQL,
-        "multimodal_dedup_exact": _MULTIMODAL_DEDUP_SQL,
-        "events_stream_sessionize": _EVENTS_STREAM_SESSIONIZE_SQL,
-        "corpus_merge": _CORPUS_MERGE_SQL,
-        "docs_orc_roundtrip": _DOCS_ORC_ROUNDTRIP_SQL,
-        "events_hll_accuracy": _EVENTS_HLL_ACCURACY_SQL,
-        "events_asof_forward": _EVENTS_ASOF_FORWARD_SQL,
-        "entity_match_pairs": _ENTITY_MATCH_PAIRS_SQL,
-        "entity_resolve": _ENTITY_RESOLVE_SQL,
-        "entity_block_audit": _ENTITY_BLOCK_AUDIT_SQL,
-        "bm25_indexed_topk": _BM25_SEARCH_SQL.replace("LIMIT 10", "LIMIT 15"),
-        "source_psi_drift": _SOURCE_PSI_DRIFT_SQL,
-        "docs_drop_attribution": _DOCS_DROP_ATTRIBUTION_SQL,
-        "docs_scd2": _DOCS_SCD2_SQL,
-        "docs_asof_version": _DOCS_ASOF_SQL,
-        "skew_split_join": _SKEW_SPLIT_JOIN_SQL,
-        "multimodal_pcm_stats": _MULTIMODAL_PCM_SQL,
-        "multimodal_image_ahash": _MULTIMODAL_AHASH_SQL,
-        "dedup_prefix": _DEDUP_PREFIX_SQL,
-        "knn_mutual_pairs": _KNN_MUTUAL_SQL,
-        "knn_mutual_ann": _knn_mutual_ann_sql(),
-        "multimodal_near_dup": _MULTIMODAL_NEAR_DUP_SQL,
-        "multimodal_audio_near_dup": _MULTIMODAL_AUDIO_NEAR_DUP_SQL,
-        "pipeline_media": _PIPELINE_MEDIA_SQL,
-        "media_quarantine": _MEDIA_QUARANTINE_SQL,
-        "token_cms_topk": _TOKEN_CMS_SQL,
-        "docs_mojibake": _DOCS_MOJIBAKE_SQL,
-        "events_k_anonymity": _EVENTS_K_ANONYMITY_SQL,
-        "decontaminate_fuzzy": _decontaminate_fuzzy_sql(),
-        "dedup_recall_embedding": _dedup_recall_embedding_sql(),
-        "multimodal_image_quality": _MULTIMODAL_IMAGE_QUALITY_SQL,
-        "docs_cdc_chunks": _DOCS_CDC_CHUNKS_SQL,
-        "dedup_components_bucket": _dedup_components_bucket_sql(),
-        "pipeline_dedup_bucket": _pipeline_dedup_full_sql(grouping="bucket"),
-        "docs_quality_zscore": _DOCS_QUALITY_ZSCORE_SQL,
-        # bit-reproducible training -> precomputed-VALUES oracle
-        "unigram_vocab": _unigram_vocab_sql(),
-        "unigram_fertility": _unigram_fertility_sql(),
-        "wordpiece_merges": _wordpiece_merges_sql(),
-        "docs_warc_ingest": _DOCS_WARC_INGEST_SQL,
-        "docs_warc_gz_ingest": _DOCS_WARC_GZ_INGEST_SQL,
-        "bitext_margin_pairs": _bitext_margin_sql("threshold"),
-        "bitext_margin_best": _bitext_margin_sql("best"),
-        "docs_token_shards": _DOCS_TOKEN_SHARDS_SQL,
-        "docs_fim_split": _DOCS_FIM_SPLIT_SQL,
-        "docs_crop_pairs": _DOCS_CROP_PAIRS_SQL,
-        "docs_weighted_sample": _DOCS_WEIGHTED_SAMPLE_SQL,
-        "docs_url_spam": _DOCS_URL_SPAM_SQL,
-        "corpus_overlap_est": _CORPUS_OVERLAP_SQL,
-        "corpus_overlap_manifest": _CORPUS_OVERLAP_MANIFEST_SQL,
-        "docs_fim_spm": _DOCS_FIM_SPM_SQL,
-        "corpus_overlap_matrix": _CORPUS_OVERLAP_MATRIX_SQL,
-        "docs_batch_padding": _docs_batch_padding_sql(),
-        "docs_zipf_fit": _DOCS_ZIPF_FIT_SQL,
-        "embedding_covariance": _EMBEDDING_COVARIANCE_SQL,
-        "docs_bootstrap_ci": _docs_bootstrap_ci_sql(),
-        "docs_clf_auc": _clf_eval_sql(_DOCS_CLF_AUC_TAIL),
-        "docs_clf_calibration": _clf_eval_sql(_DOCS_CLF_CALIBRATION_TAIL),
-        "docs_lang_segments": _docs_lang_segments_sql(),
-        "docs_english_salvage": _docs_english_salvage_sql(),
-        "rm3_search": _RM3_SEARCH_SQL,
-        "token_skipgrams": _TOKEN_SKIPGRAMS_SQL,
-        "token_negatives": _token_negatives_sql(),
-        "events_user_sequences": _EVENTS_USER_SEQUENCES_SQL,
-        "docs_source_lang_cube": _docs_source_lang_cube_sql(),
-        "docs_truncation_report": _docs_truncation_report_sql(),
-        "pipeline_seq_prep": _pipeline_seq_prep_sql(),
-        "docs_triangle_stats": _DOCS_TRIANGLE_STATS_SQL,
-        "lm_greedy_continuation": _lm_greedy_continuation_sql(),
-        "docs_dup_ngram_frac": _DOCS_DUP_NGRAM_FRAC_SQL,
-        "pipeline_fim_pack": _pipeline_fim_pack_sql(),
-        "docs_weighted_sample_by_lang": _DOCS_WEIGHTED_SAMPLE_BY_LANG_SQL,
-        "docs_dedup_homoglyph": _docs_dedup_homoglyph_sql(),
-        "docs_lang_mix": _DOCS_LANG_MIX_SQL,
-        "docs_lpa_communities": _docs_lpa_sql(),
-        "wordpiece_fertility": _wordpiece_fertility_sql(),
-        "docs_ict_pairs": _DOCS_ICT_SQL,
-        "embedding_balanced_sample": _EMBEDDING_BALANCED_SQL,
-        "dedup_components_lpa": _dedup_lpa_sql(),
-        "dedup_bucket_precision": _grouping_precision_sql(
-            _dedup_components_bucket_sql()
-        ),
-        "dedup_lpa_precision": _grouping_precision_sql(_dedup_lpa_sql()),
-        "pq_reconstruction": _PQ_RECON_SQL,
-        "docs_novelty": _DOCS_NOVELTY_SQL,
-        # bit-reproducible training -> precomputed-VALUES oracle
-        "bpe_merges": _bpe_merges_sql(),
-        # kmeans_clusters / pca_2d / hf_embed_fake: no SQL twin
-        # (iterative ML / nondeterministic-sign PCA / env-gated HF)
-        # -> driver rows-only check
-        # round-12 additions:
-        "embedding_whiten": _EMBEDDING_WHITEN_SQL,
-        "token_cms_manifest": _token_cms_sql("cmsM"),
-        "corpus_membership_manifest": _CORPUS_MEMBERSHIP_MANIFEST_SQL,
-        "docs_clf_pr_auc": _clf_eval_sql(_DOCS_CLF_PR_AUC_TAIL),
-        "docs_clf_brier_ece": _clf_eval_sql(_DOCS_CLF_BRIER_ECE_TAIL),
-        "events_cusum": _EVENTS_CUSUM_SQL,
-        "source_js_divergence": _SOURCE_JS_DIVERGENCE_SQL,
-        "source_token_entropy": _SOURCE_TOKEN_ENTROPY_SQL,
-        "layout_prune_audit": _LAYOUT_PRUNE_AUDIT_SQL,
-        "ql_search": _ql_search_sql(),
-        "docs_ngram_coverage": _DOCS_NGRAM_COVERAGE_SQL,
-        "corpus_lenhist_manifest": _CORPUS_LENHIST_MANIFEST_SQL,
-        "docs_script_mix": _docs_script_mix_sql(),
-        "docs_length_robust_z": _DOCS_LENGTH_ROBUST_Z_SQL,
-        "source_dup_rate": _SOURCE_DUP_RATE_SQL,
-        "corpus_psi_manifest": _CORPUS_PSI_MANIFEST_SQL,
-        "embedding_effective_rank": _EMBEDDING_EFFECTIVE_RANK_SQL,
-        "events_cusum_by_type": _EVENTS_CUSUM_BY_TYPE_SQL,
-        "docs_split_stratified": _DOCS_SPLIT_STRATIFIED_SQL,
-        "events_anomaly_robust": _EVENTS_ANOMALY_ROBUST_SQL,
-        "corpus_freq_drift_manifest": _CORPUS_FREQ_DRIFT_MANIFEST_SQL,
-        "ann_recall_bq": _ANN_RECALL_BQ_SQL,
-        "source_winsorized_len": _SOURCE_WINSORIZED_LEN_SQL,
-        "events_funnel_latency": _EVENTS_FUNNEL_LATENCY_SQL,
-        "docs_node_clustering": _DOCS_NODE_CLUSTERING_SQL,
-        "docs_clf_isotonic": _clf_eval_sql(_DOCS_CLF_ISOTONIC_TAIL),
-        "rocchio_search": _ROCCHIO_SEARCH_SQL,
-        "docs_stream_manifest": _CORPUS_MANIFEST_SQL,
-        "docs_quality_rank_norm": _DOCS_QUALITY_RANK_NORM_SQL,
-        "docs_span_corruption": _docs_span_corruption_sql(),
-        "docs_jaccard_exact_pairs": _DOCS_JACCARD_EXACT_SQL,
-        "corpus_overlap_minhash": _corpus_overlap_minhash_sql(),
-        "docs_neyman_alloc": _DOCS_NEYMAN_ALLOC_SQL,
-        "token_burstiness": _TOKEN_BURSTINESS_SQL,
-        "source_token_gini": _SOURCE_TOKEN_GINI_SQL,
-        "events_gap_quantiles": _EVENTS_GAP_QUANTILES_SQL,
-        "docs_readability": _DOCS_READABILITY_SQL,
-        "wordpiece_unk_by_lang": _wordpiece_unk_by_lang_sql(),
-        "corpus_triage_manifest": _corpus_triage_manifest_sql(),
-        "events_transition_matrix": _EVENTS_TRANSITION_MATRIX_SQL,
-        "events_gap_quantiles_by_type": _EVENTS_GAP_QUANTILES_BY_TYPE_SQL,
-        # round-14 additions:
-        "kmeans_lloyd": _kmeans_lloyd_sql(),
-        "mix_doremi": _mix_doremi_sql(),
-        "embedding_anisotropy": _EMBEDDING_ANISOTROPY_SQL,
-        "source_ks_distance": _SOURCE_KS_DISTANCE_SQL,
-        "docs_clf_conformal": _docs_clf_conformal_sql(),
-        "events_ewma": _events_ewma_sql(),
-        "events_seasonal_error": _EVENTS_SEASONAL_ERROR_SQL,
-        "corpus_ks_manifest": _CORPUS_KS_MANIFEST_SQL,
-        "docs_dup_cluster_stats": _DOCS_DUP_CLUSTER_STATS_SQL,
-        "mix_doremi_sample": _mix_doremi_sample_sql(),
-        "embedding_coreset": _embedding_coreset_sql(),
-        "docs_length_tail": _DOCS_LENGTH_TAIL_SQL,
+        name: e.oracle() if callable(e.oracle) else e.oracle
+        for name, e in REGISTRY.items()
+        if e.oracle is not None
     }

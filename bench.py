@@ -1,39 +1,50 @@
 #!/usr/bin/env python
-"""Benchmark headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark registry entries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints TWO JSON lines — plan-shape metrics first, then the compact
-timings object as the FINAL line (the driver tail-captures and parses
-the last line):
+Usage: python bench.py [name ...]
+
+With no names, times every entry the registry marks ``bench``, in
+registry order, and prints TWO JSON lines — plan-shape metrics first,
+then the compact timings object as the FINAL line (the driver
+tail-captures and parses the last line):
   {"plans": {name: {shuffles, scans, codegen_stages}}, "sf": <sf>}
   {"metric": "...", "value": <total_sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>}
 The plan metrics are ALSO written to PLANS.json next to this script —
 stdout tail-capture truncates the long first line, the file is the
-durable copy.
+durable copy. With names, only those entries are timed, only the
+timings line is printed, and PLANS.json is left alone.
 
 Each query is forced end-to-end with the noop sink (full computation,
 no driver transfer) so timings measure the distributed plan, not
-collect serialization.
+collect serialization. ``session()`` and ``cleanup()`` are the harness
+session and between-query hygiene that scripts/check_oracle.py and
+scripts/explain_dump.py share.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
+import __spark_entry__ as entry  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-# Session-level I/O + shuffle tuning (guide §9 / §2.2), landed at the
-# START of the r15 optimization round so every measurement this round
-# runs on the production-shaped config (r14 verdict item 2). Nothing
-# here is a local[32] constant — each value is either driven by the
-# driver's env knobs or a BYTE target that adapts to data size:
-#  - shuffle.partitions stays $SPARK_GRAFT_CPUS (set in main());
+# Session-level I/O + shuffle tuning on top of the engine config
+# (tidyvec_spark.session). Nothing here is a local[32] constant — each
+# value is either driven by the driver's env knobs or a BYTE target
+# that adapts to data size:
+#  - shuffle.partitions stays $SPARK_GRAFT_CPUS (set in session());
 #  - maxPartitionBytes=512m cuts the map-task count feeding shuffles
 #    on large sequential scans (guide §6.1); single-small-file local
 #    inputs are unaffected (the _read(par=True) spread handles those);
@@ -43,7 +54,7 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 #    shuffled-hash at runtime when every post-shuffle partition is
 #    small — both skip the per-partition sort, neither changes results.
 #
-# Measured and REJECTED (r15 bisect, OPTIMIZATION_r15.md):
+# Measured and REJECTED (OPTIMIZATION_r15.md):
 # coalescePartitions.parallelismFirst=false + advisory sizing — it
 # coalesces every mid-size shuffle to 1-2 partitions at this SF, which
 # serializes compute-heavy post-shuffle stages (ngram_jaccard_pairs
@@ -58,480 +69,158 @@ SESSION_CONFS = {
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
 }
 
-# headline set: one per engine area (vector scan, similarity join,
-# tf-idf fit+search, text analysis, dedup join, relational aggs/joins,
-# window, time-series)
-BENCH_QUERIES = [
-    "knn_cosine",
-    "knn_min_score",
-    "ann_topk_per_query",
-    "radius_search",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "ann_ivf_topk_large",
-    "pq_adc_topk",
-    "ivfpq_adc_topk",
-    "similarity_join_lsh",
-    "embedding_near_dup",
-    "bucketed_gemm_near_dup",
-    "semantic_dedup",
-    "tfidf_search",
-    "bm25_search",
-    "tfidf_hybrid",
-    "hybrid_rrf",
-    "ann_lsh_batch",
-    "sq_topk",
-    "matryoshka_topk",
-    "cascade_topk",
-    "mmr_topk",
-    "knn_mutual_pairs",
-    "knn_mutual_ann",
-    "maxsim_topk",
-    "packing_report",
-    "token_pmi",
-    "winnow_pairs",
-    "soft_dedup",
-    "embedding_health",
-    "text_stats",
-    "multimodal_header_meta",
-    "multimodal_dedup_exact",
-    "multimodal_wav_meta",
-    "multimodal_mp4_meta",
-    "multimodal_pcm_stats",
-    "multimodal_image_ahash",
-    "multimodal_near_dup",
-    "multimodal_audio_near_dup",
-    "pipeline_media",
-    "media_quarantine",
-    "lang_id",
-    "token_topk",
-    "docs_quality_flags",
-    "docs_chunks",
-    "docs_pack",
-    "mix_temperature",
-    "mix_unimax",
-    "exact_dup_groups",
-    "dedup_drop_exact",
-    "dedup_weighted",
-    "dedup_prefix",
-    "pipeline_pretrain",
-    "ngram_jaccard_pairs",
-    "ngram_jaccard_capped",
-    "minhash_lsh_pairs",
-    "simhash_pairs",
-    "lsh_near_dup",
-    "dedup_components",
-    "dedup_components_two_phase",
-    "bpe_token_stats",
-    "q1_pricing",
-    "q3_top_orders",
-    "q5_region_revenue",
-    "topk_per_segment",
-    "skew_join_events",
-    "skew_agg_langs",
-    "bucketed_join_segments",
-    "sample_fixed_per_lang",
-    "events_hourly",
-    "events_sessions",
-    "events_asof_purchase",
-    "events_asof_forward",
-    "events_range_join",
-    "kmeans_clusters",
-    "hf_query_nearest",
-    # round-5 additions: the curation paths whose plans deserve
-    # wall-time tracking (incremental dedup and decontamination are
-    # exactly the ops a production pipeline re-runs per batch)
-    "incremental_near_dup",
-    "decontaminate_corpus",
-    "split_leakage_free",
-    "docs_redact",
-    "docs_repetition",
-    "embedding_pool_labels",
-    "ann_topk_sidecar",
-    "dsir_select",
-    "docs_c4_clean",
-    "docs_normalize",
-    "docs_html_extract",
-    "docs_keep_best",
-    "dedup_keep_best",
-    "mix_target",
-    "curriculum_order",
-    "hard_negatives",
-    "docs_lm_perplexity",
-    "docs_lm_kn",
-    "docs_dedup_lines",
-    "docs_dedup_lines_within",
-    "docs_dup_spans",
-    "docs_dup_stats",
-    "docs_dedup_cut",
-    "q6_forecast_revenue",
-    "q4_order_priority",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q15_top_supplier",
-    "q22_churned_value",
-    "q13_order_histogram",
-    "q17_small_quantity",
-    "q2_min_cost_supplier",
-    "q9_nation_profit",
-    "q11_important_parts",
-    "q12_late_lines",
-    "q16_supplier_counts",
-    "q20_share_suppliers",
-    "q21_waiting_suppliers",
-    "serving_shuffle",
-    "docs_stream_ingest",
-    "docs_ccnet_buckets",
-    "decontaminate_ngram",
-    "decontaminate_bloom",
-    "bq_hamming_topk",
-    "bq_rerank_topk",
-    "bq_topk_sidecar",
-    "ann_recall_lsh",
-    "ann_tuned_topk",
-    "ann_rank_quality",
-    "embedding_rp_topk",
-    "bpe_merges",
-    "wds_roundtrip",
-    "docs_orc_roundtrip",
-    "docs_jsonl_ingest",
-    "docs_csv_ingest",
-    "docs_blocklist",
-    "docs_mojibake",
-    "source_overlap",
-    "pipeline_ccnet",
-    "pipeline_web",
-    "pipeline_dedup_full",
-    "docs_quality_clf",
-    "docs_keyword_topk",
-    "source_quality_report",
-    "corpus_manifest_incremental",
-    "docs_stream_upsert",
-    "corpus_merge",
-    "docs_tokenizer_fertility",
-    "embedding_drift",
-    "pipeline_rag",
-    "docs_compression_ratio",
-    "events_skew_profile",
-    "corpus_diff",
-    "corpus_manifest",
-    "events_rolling_1h",
-    "events_funnel",
-    "events_anomaly",
-    "events_stream_anomaly",
-    "events_stream_sessionize",
-    "events_retention",
-    "events_k_anonymity",
-    "events_props_stats",
-    "events_zorder",
-    # second round-7 wave
-    "docs_pagerank",
-    "events_heavy_hitters",
-    "events_hll_accuracy",
-    "token_cms_topk",
-    "events_stream_heavy_hitters",
-    "docs_url_canonical",
-    "docs_length_buckets",
-    "docs_vocab_growth",
-    "docs_quality_ensemble",
-    "docs_template_pages",
-    "wds_datasource_read",
-    "pipeline_crawl",
-    "lang_confusion",
-    "crawl_host_budget",
-    "rerank_search",
-    "ngram_containment",
-    "docs_lm_heldout",
-    "docs_dedup_contained",
-    "docs_dedup_funnel",
-    "dedup_recall_lsh",
-    "mix_rank_weighted",
-    "dedup_recall_simhash",
-    "entity_match_pairs",
-    "entity_resolve",
-    "entity_block_audit",
-    "bm25_indexed_topk",
-    "source_psi_drift",
-    "docs_drop_attribution",
-    "docs_scd2",
-    "docs_asof_version",
-    "skew_split_join",
-    # round-8 additions
-    "decontaminate_fuzzy",
-    "dedup_recall_embedding",
-    "multimodal_image_quality",
-    "docs_cdc_chunks",
-    "dedup_components_bucket",
-    "pipeline_dedup_bucket",
-    "docs_quality_zscore",
-    "unigram_vocab",
-    "dedup_bucket_precision",
-    "docs_novelty",
-    # round-9 additions
-    "wordpiece_merges",
-    "wordpiece_fertility",
-    "unigram_fertility",
-    "docs_warc_ingest",
-    "docs_dedup_homoglyph",
-    "docs_lang_mix",
-    "docs_lpa_communities",
-    "docs_ict_pairs",
-    "embedding_balanced_sample",
-    "dedup_components_lpa",
-    "dedup_lpa_precision",
-    "pq_reconstruction",
-    # round-10 additions
-    "docs_warc_gz_ingest",
-    "bitext_margin_pairs",
-    "bitext_margin_best",
-    "docs_token_shards",
-    "docs_fim_split",
-    "docs_crop_pairs",
-    "docs_weighted_sample",
-    "docs_url_spam",
-    "corpus_overlap_est",
-    "pipeline_fim_pack",
-    "docs_weighted_sample_by_lang",
-    # round-11 additions
-    "ann_recall_ivfpq",
-    "corpus_overlap_manifest",
-    "docs_fim_spm",
-    "corpus_overlap_matrix",
-    "docs_batch_padding",
-    "docs_zipf_fit",
-    "embedding_covariance",
-    "docs_bootstrap_ci",
-    "docs_clf_auc",
-    "docs_clf_calibration",
-    "docs_lang_segments",
-    "docs_english_salvage",
-    "rm3_search",
-    "token_skipgrams",
-    "token_negatives",
-    "events_user_sequences",
-    "docs_source_lang_cube",
-    "docs_truncation_report",
-    "pipeline_seq_prep",
-    "docs_triangle_stats",
-    "lm_greedy_continuation",
-    "docs_dup_ngram_frac",
-    # round-12 additions
-    "embedding_whiten",
-    "token_cms_manifest",
-    "docs_node_clustering",
-    "docs_clf_isotonic",
-    "rocchio_search",
-    "docs_stream_manifest",
-    "docs_quality_rank_norm",
-    "docs_span_corruption",
-    "docs_jaccard_exact_pairs",
-    "corpus_overlap_minhash",
-    "docs_neyman_alloc",
-    "token_burstiness",
-    "source_token_gini",
-    "events_gap_quantiles",
-    "docs_readability",
-    "wordpiece_unk_by_lang",
-    "corpus_triage_manifest",
-    "events_transition_matrix",
-    "events_gap_quantiles_by_type",
-    # round-13 additions
-    "corpus_membership_manifest",
-    "docs_clf_ml_agreement",
-    "docs_clf_pr_auc",
-    "docs_clf_brier_ece",
-    "events_cusum",
-    "source_js_divergence",
-    "source_token_entropy",
-    "layout_prune_audit",
-    "ql_search",
-    "docs_ngram_coverage",
-    "corpus_lenhist_manifest",
-    "docs_script_mix",
-    "docs_length_robust_z",
-    "source_dup_rate",
-    "corpus_psi_manifest",
-    "embedding_effective_rank",
-    "events_cusum_by_type",
-    "docs_split_stratified",
-    "events_anomaly_robust",
-    "corpus_freq_drift_manifest",
-    "ann_recall_bq",
-    "source_winsorized_len",
-    "events_funnel_latency",
-    # round-14 additions
-    "kmeans_lloyd",
-    "mix_doremi",
-    "embedding_anisotropy",
-    "source_ks_distance",
-    "docs_clf_conformal",
-    "events_ewma",
-    "events_seasonal_error",
-    "corpus_ks_manifest",
-    "docs_dup_cluster_stats",
-    "mix_doremi_sample",
-    "embedding_coreset",
-    "docs_length_tail",
-]
+BENCH_QUERIES = [name for name, e in entry.REGISTRY.items() if e.bench]
 
 
-def main() -> None:
+def session(app_name: str = "tidyvec_spark_bench"):
+    """The harness session: ``tidyvec_spark.session.configure`` at
+    ``shuffle.partitions=$SPARK_GRAFT_CPUS``, plus host settings and
+    ``SESSION_CONFS``."""
     from pyspark.sql import SparkSession
 
-    import __spark_entry__ as entry
+    from tidyvec_spark.session import configure
 
-    builder = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("tidyvec_spark_bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.ui.enabled", "false")
+    builder = configure(
+        SparkSession.builder.master(f"local[{CPUS}]").appName(app_name),
+        shuffle_partitions=CPUS,
+    )
+    builder = builder.config("spark.driver.memory", "32g").config(
+        "spark.ui.enabled", "false"
     )
     for k, v in SESSION_CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def cleanup(spark) -> None:
+    """Release what a query left behind (run outside the timed window).
+
+    Intra-plan persists (LSH signature tables) and memory-sink tables
+    from ``run_available_now`` are scoped to their query. clearCache only
+    covers catalog-registered caches: localCheckpoint() blocks
+    (pagerank, connected components, LPA) live at the RDD layer and stay
+    pinned while Python-side DataFrames hold py4j refs; left alone they
+    pile up and squeeze execution memory until checkpoint-heavy queries
+    run 2-3x slower in later sweeps. Python gc drops the refs, explicit
+    unpersist releases whatever survives, and the JVM gc reclaims the
+    freed blocks (~0.3 s)."""
+    spark.catalog.clearCache()
+    for t in spark.catalog.listTables():
+        if t.isTemporary:
+            spark.catalog.dropTempView(t.name)
+    gc.collect()
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
+    while it.hasNext():
+        it.next().unpersist(False)
+    spark.sparkContext._jvm.System.gc()
+
+
+def _plan_metrics(spark, names, trials) -> dict[str, dict]:
+    """Plan-shape metrics plus each entry's median and min/max wall time.
+
+    Shuffle/scan counts don't swing run-to-run the way wall time does,
+    so a regression becomes attributable to the plan. AQE is OFF for
+    this pass: an un-executed AdaptiveSparkPlan hides its
+    WholeStageCodegen markers, and the static plan is the reproducible
+    artifact anyway."""
+    from tidyvec_spark import plans as P
 
     qs = entry.queries()
-
-    def _between_queries() -> None:
-        # intra-plan persists (LSH signature tables) are scoped to
-        # their query; dropping them between queries keeps executor
-        # memory flat. clearCache only covers CATALOG-registered
-        # caches: localCheckpoint() blocks (pagerank, connected
-        # components, LPA) live at the RDD layer and stay pinned as
-        # long as the Python-side DataFrame objects hold py4j refs —
-        # measured in this round's baseline, they accumulated to 20+
-        # leaked persistent RDDs after a few queries, squeezing
-        # execution memory until checkpoint-heavy queries ran 2-3×
-        # slower in later sweeps (docs_pagerank 16.8 s -> 43.9 s
-        # within one bench run). Python gc drops the refs, explicit
-        # unpersist releases whatever survives, and the JVM gc then
-        # reclaims the freed blocks — persistent-RDD count stays 0
-        # between queries (~0.3 s, outside the timed window).
-        import gc as _gc
-
-        spark.catalog.clearCache()
-        _gc.collect()
-        it = (
-            spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-        )
-        while it.hasNext():
-            it.next().unpersist(False)
-        spark.sparkContext._jvm.System.gc()
-
-    # Untimed warm-up at the smallest SF: first execution of each plan
-    # pays one-time Janino/whole-stage-codegen compilation (measured
-    # 6-13s for the wide md5-fold kernels) that is amortized to zero on
-    # a long-running cluster; warming on sf0.001 compiles the same
-    # generated classes so the timed loop below measures the
-    # distributed plan, not the compiler.
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir) and os.path.abspath(warm_dir) != os.path.abspath(
-        SF_DIR
-    ):
-        for name in BENCH_QUERIES:
-            try:
-                qs[name](spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass
-            _between_queries()
-
-    # median-of-3 over INTERLEAVED sweeps (r13 verdict item 3):
-    # GC/virtualized-I/O hiccups on this shared VM are temporally
-    # correlated, so back-to-back trials of one query eat the same bad
-    # patch — a full sweep between trials decorrelates the noise. r13
-    # showed best-of-2 min still lets a 1.5× swing through
-    # (docs_bootstrap_ci, plan unchanged); the median of 3 discards
-    # one bad sweep per query in EITHER direction, so a >1.3×
-    # round-over-round wall_s move is attributable to the plan, not
-    # the weather.
-    trials: dict[str, list[float]] = {name: [] for name in BENCH_QUERIES}
-    for _sweep in range(3):
-        for name in BENCH_QUERIES:
-            t0 = time.perf_counter()
-            df = qs[name](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            trials[name].append(time.perf_counter() - t0)
-            _between_queries()
-    timings = {
-        k: round(sorted(v)[len(v) // 2], 3) for k, v in trials.items()
-    }
-
-    # plan-shape metrics: wall time on a shared VM swings 2×
-    # run-to-run, shuffle/scan counts don't — round-over-round
-    # regressions become attributable to the plan, not the weather.
-    # AQE OFF for this pass: an un-executed AdaptiveSparkPlan hides
-    # its WholeStageCodegen markers entirely (every lazy frame read
-    # codegen_stages=0 through r5's first sweep), and the static plan
-    # is the reproducible round-over-round artifact anyway.
-    plan_metrics: dict[str, dict] = {}
+    out: dict[str, dict] = {}
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        for name in BENCH_QUERIES:
+        for name in names:
             try:
-                from tidyvec_spark import plans as P
-
                 df = qs[name](spark, SF_DIR)
-                plan_metrics[name] = {
+                out[name] = {
                     "shuffles": P.num_shuffles(df),
                     "scans": len(P.read_schemas(df)),
                     "codegen_stages": P.codegen_stage_count(df),
                 }
             except Exception:
-                plan_metrics[name] = {}
-            # persist the wall time per plan too: the driver's
-            # BENCH_r*.json keeps only a truncated stdout tail (~68 of
-            # 268 queries visible in r12), so PLANS.json is the durable
-            # round-over-round record of EVERY query's timing
-            w = timings.get(name)
-            if w is not None:
-                plan_metrics[name]["wall_s"] = w
-                # the per-trial spread makes "is this move noise?"
-                # answerable without a re-run: a wide min..max band
-                # with a stable median IS session noise
-                ts = trials.get(name) or []
-                if ts:
-                    plan_metrics[name]["wall_min_s"] = round(min(ts), 3)
-                    plan_metrics[name]["wall_max_s"] = round(max(ts), 3)
-            spark.catalog.clearCache()
+                out[name] = {}
+            ts = trials[name]
+            out[name]["wall_s"] = round(sorted(ts)[len(ts) // 2], 3)
+            out[name]["wall_min_s"] = round(min(ts), 3)
+            out[name]["wall_max_s"] = round(max(ts), 3)
+            cleanup(spark)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    return out
 
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    # The full plan-metrics dict goes to a FILE: the driver tail-
-    # captures stdout, so a long plans line gets head-truncated (r4
-    # lost ~40 of 52 entries); the file is the durable round-over-round
-    # plan-attribution artifact. A (possibly truncated) stdout copy
-    # remains for quick eyeballing.
-    plans_payload = {"plans": plan_metrics, "sf": float(sf)}
-    plans_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "PLANS.json"
-    )
-    with open(plans_path, "w") as f:
-        json.dump(plans_payload, f, indent=1, sort_keys=True)
-    print(json.dumps(plans_payload))
-    out = {
-        "metric": "headline_queries_total_wall",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": float(sf),
-    }
-    print(json.dumps(out))
-    spark.stop()
+
+def main(names: list[str]) -> None:
+    qs = entry.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"not registry entries: {unknown}")
+    run = names or BENCH_QUERIES
+    # builders stage files with tempfile.mkdtemp; keep them all under one
+    # per-run directory that is removed at exit
+    tmp = tempfile.mkdtemp(prefix="tidyvec_bench_")
+    tempfile.tempdir = tmp
+    spark = session()
+    try:
+        # Untimed warm-up at the smallest SF: first execution of each
+        # plan pays one-time whole-stage-codegen compilation (6-13 s for
+        # the wide md5-fold kernels) that is amortized to zero on a
+        # long-running cluster; warming on sf0.001 compiles the same
+        # generated classes so the timed loop measures the plan, not
+        # the compiler.
+        warm_dir = "/root/testdata/sf0.001"
+        if os.path.isdir(warm_dir) and os.path.abspath(
+            warm_dir
+        ) != os.path.abspath(SF_DIR):
+            for name in run:
+                try:
+                    qs[name](spark, warm_dir).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
+                except Exception:
+                    pass
+                cleanup(spark)
+
+        # median-of-3 over INTERLEAVED sweeps: GC and I/O hiccups on a
+        # shared VM are temporally correlated, so back-to-back trials of
+        # one query eat the same bad patch — a full sweep between trials
+        # decorrelates the noise, and the median discards one bad sweep
+        # per query in either direction.
+        trials: dict[str, list[float]] = {name: [] for name in run}
+        for _sweep in range(3):
+            for name in run:
+                t0 = time.perf_counter()
+                df = qs[name](spark, SF_DIR)
+                df.write.format("noop").mode("overwrite").save()
+                trials[name].append(time.perf_counter() - t0)
+                cleanup(spark)
+        timings = {
+            k: round(sorted(v)[len(v) // 2], 3) for k, v in trials.items()
+        }
+
+        sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
+        if not names:
+            plans_payload = {
+                "plans": _plan_metrics(spark, run, trials),
+                "sf": sf,
+            }
+            with open(os.path.join(ROOT, "PLANS.json"), "w") as f:
+                json.dump(plans_payload, f, indent=1, sort_keys=True)
+            print(json.dumps(plans_payload))
+        out = {
+            "metric": "headline_queries_total_wall",
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": timings,
+            "sf": sf,
+        }
+        print(json.dumps(out))
+    finally:
+        spark.stop()
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

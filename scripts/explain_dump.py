@@ -1,23 +1,45 @@
 #!/usr/bin/env python
-"""Dump ``explain("formatted")`` for named registry queries.
+"""Dump normalised ``explain("formatted")`` text for registry entries.
 
-Usage: python scripts/explain_dump.py <out_dir> <suffix> [query ...]
+Usage: python scripts/explain_dump.py <out_dir> <suffix> [name ...]
 
-Writes ``<out_dir>/<query>_<suffix>.txt`` for each query (all bench
-queries when none named). The round-14 optimization evidence
-(`plans/r14/<query>_before.txt` / `_after.txt`) is produced with this
-script so the judge can check plan claims without running Spark.
+Writes ``<out_dir>/<name>_<suffix>.txt`` for each named entry, or for
+every registry entry when none are named, built at $SPARK_GRAFT_SF_DIR
+(default sf0.1) on the bench session (``bench.session``) with AQE off:
+an un-executed AdaptiveSparkPlan hides the operator details this dump
+exists to show. Expression ids (``#123``), ``plan_id=`` values, RDD ids
+and the random names of ``tempfile.mkdtemp`` staging dirs are replaced
+by placeholders, so two checkouts that build the same plans write
+byte-identical files. The script imports the registry of the checkout
+it sits in, and Spark's Python workers import ``tidyvec_spark`` from the
+working directory: run a copy from the root of each checkout and
+``diff -r`` the two output directories.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
+import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_VOLATILE = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s\],]+"), "TMPDIR"),
+)
+
+
+def normalise(text: str) -> str:
+    for pattern, placeholder in _VOLATILE:
+        text = pattern.sub(placeholder, text)
+    return text
 
 
 def main() -> None:
@@ -25,35 +47,13 @@ def main() -> None:
     names = sys.argv[3:]
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from bench import cleanup, session
 
-    from bench import SESSION_CONFS
-
-    builder = (
-        SparkSession.builder.master("local[8]")
-        .appName("explain_dump")
-        .config("spark.sql.shuffle.partitions", "8")
-        # static plan: an un-executed AdaptiveSparkPlan hides the
-        # operator details this artifact exists to show
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-    )
-    # the bench's session tuning, so dumped plans match what the bench
-    # actually runs (preferSortMergeJoin affects the static plan)
-    for k, v in SESSION_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = session("explain_dump")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     qs = entry.queries()
-    if not names:
-        names = list(qs)
-    for name in names:
+    for name in names or list(qs):
         try:
             df = qs[name](spark, SF_DIR)
             buf = io.StringIO()
@@ -64,11 +64,11 @@ def main() -> None:
                 sys.stdout = stdout
             path = os.path.join(out_dir, f"{name}_{suffix}.txt")
             with open(path, "w") as f:
-                f.write(buf.getvalue())
+                f.write(normalise(buf.getvalue()))
             print(f"wrote {path}")
         except Exception as exc:  # noqa: BLE001
             print(f"FAILED {name}: {exc}")
-        spark.catalog.clearCache()
+        cleanup(spark)
     spark.stop()
 
 

@@ -1,15 +1,14 @@
 """Mirror of the driver's correctness gate, in pytest, at sf0.001.
 
 Runs a representative subset of ``__spark_entry__.queries()`` against
-their ``oracle_sql()`` twins on DuckDB over the same parquet — the same
-order-insensitive (sorted columns, sorted rows, rounded doubles)
-comparison the driver applies at sf0.01. The full sweep lives in
-``scripts/check_oracle.py``; this subset keeps the suite fast while
-covering every operator family (knn, ANN, tfidf, text, dedup,
-relational, sessionization, streaming-twin).
+their ``oracle_sql()`` twins on DuckDB over the same parquet, with the
+compare of ``scripts/check_oracle.py`` (sorted columns, sorted rows,
+rounded doubles, signed zeros kept apart and flagged) that mirrors the
+driver's at sf0.01. The full sweep lives in that script; this subset
+keeps the suite fast while covering every operator family (knn, ANN,
+tfidf, text, dedup, relational, sessionization, streaming-twin).
 """
 
-import math
 import os
 
 import duckdb
@@ -22,10 +21,8 @@ SF = "/root/testdata/sf0.001"
 os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF
 
 import __spark_entry__ as entry
-TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
+from scripts.check_oracle import TABLES, _has_negzero, canon
+
 # The driver's gate checks only the FIRST 50 entries of queries(), so
 # every oracle-backed entry PAST position 50 gets its oracle check here
 # instead — computed dynamically so any future window rotation keeps
@@ -53,26 +50,6 @@ _WINDOW_REPS = [
 SUBSET = _NEWLY_WINDOWED + _WINDOW_REPS + _TAIL
 
 
-def canon(rows, columns):
-    idx = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = []
-    for row in rows:
-        vals = []
-        for i in idx:
-            v = row[i]
-            if isinstance(v, float):
-                if math.isnan(v):
-                    v = "NaN"
-                else:
-                    v = round(v, 9)
-                    if v == 0:
-                        v = 0.0
-            vals.append((type(v).__name__ if v is not None else "none", str(v)))
-        out.append(tuple(vals))
-    out.sort()
-    return [columns[i] for i in idx], out
-
-
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
@@ -85,13 +62,16 @@ def duck():
 
 @pytest.mark.parametrize("name", SUBSET)
 def test_query_matches_oracle(spark, duck, name):
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
-    assert name in qs and name in oracles
-    sdf = qs[name](spark, SF)
-    sc, sv = canon([tuple(r) for r in sdf.collect()], sdf.columns)
-    rel = duck.sql(oracles[name])
-    dc, dv = canon(rel.fetchall(), rel.columns)
+    sdf = entry.queries()[name](spark, SF)
+    s_rows = [tuple(r) for r in sdf.collect()]
+    rel = duck.sql(_ORACLES[name])
+    d_rows = rel.fetchall()
+    for engine, rows in (("spark", s_rows), ("duckdb", d_rows)):
+        assert not any(map(_has_negzero, (v for r in rows for v in r))), (
+            f"{engine} emitted -0.0: fold with + 0.0 after rounding"
+        )
+    sc, sv = canon(s_rows, sdf.columns)
+    dc, dv = canon(d_rows, rel.columns)
     assert sc == dc, f"schema: {sc} vs {dc}"
     assert len(sv) == len(dv), f"rowcount: {len(sv)} vs {len(dv)}"
     assert sv == dv

@@ -24,6 +24,8 @@ import os
 
 import pytest
 
+from scripts.check_oracle import TABLES, _has_negzero
+
 SIGNED_OUTPUT_QUERIES = [
     "embedding_covariance",
     "embedding_whiten",
@@ -37,25 +39,13 @@ SIGNED_OUTPUT_QUERIES = [
     "embedding_drift",
 ]
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
-
 
 def _negzero_cells(rows):
-    def neg(v):
-        if isinstance(v, float):
-            return v == 0.0 and math.copysign(1.0, v) < 0
-        if isinstance(v, (list, tuple)):
-            return any(neg(x) for x in v)
-        return False
-
     return [
         (i, j)
         for i, row in enumerate(rows)
         for j, v in enumerate(row)
-        if neg(v)
+        if _has_negzero(v)
     ]
 
 
