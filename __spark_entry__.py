@@ -5002,12 +5002,14 @@ def _incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _docs_stream_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online LSH banding end-to-end
     (streaming/pipelines.py::near_dup_pairs_stream): the synthetic dup
-    corpus staged as a landing file, streamed through the stateful
-    band-bucket operator, availableNow drain. A pair surfacing from
-    several bands is folded by the terminal distinct, so the result
-    equals the batch banded self-join's candidate set and the oracle is
-    the shared MinHash SQL stopped at the candidate stage (no Jaccard
-    verify — verification stays a downstream batch join)."""
+    corpus staged as a landing file, streamed through the banded
+    self-join as a native stream-stream join, availableNow drain. A
+    pair surfacing from several bands is folded by the terminal
+    distinct, so the result equals the batch banded self-join's
+    candidate set and the oracle is the shared MinHash SQL stopped at
+    the candidate stage (no Jaccard verify — verification stays a
+    downstream batch join)."""
+    import shutil
     import tempfile
 
     from tidyvec_spark.streaming import (
@@ -5023,6 +5025,7 @@ def _docs_stream_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         near_dup_pairs_stream(stream, "text", "doc_id"), table,
         output_mode="append",
     )
+    shutil.rmtree(d)
     return spark.table(table).distinct()
 
 
@@ -10286,6 +10289,7 @@ def _events_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         hourly_rollup(stream, watermark="2 hours"), table,
         shuffle_partitions=stream_shuffle_partitions(spark, d),
     )
+    shutil.rmtree(d)
     return spark.table(table)
 
 
@@ -10317,6 +10321,7 @@ def _events_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         zscore_anomaly_stream(stream), table, output_mode="append",
         shuffle_partitions=stream_shuffle_partitions(spark, d),
     )
+    shutil.rmtree(d)
     return spark.table(table)
 
 
@@ -10405,6 +10410,7 @@ def _events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, d)
     table = f"events_stream_sess_{next(_STREAM_RUN_SEQ)}"
     run_available_now(sessionize_stream(stream), table, output_mode="append")
+    shutil.rmtree(d)
     return spark.table(table)
 
 
@@ -10480,6 +10486,7 @@ def _events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     table = f"events_stream_ij_{next(_STREAM_RUN_SEQ)}"
     run_available_now(joined, table)
+    shutil.rmtree(d)
     return (
         spark.table(table)
         .groupBy(F.col("l_event_id").alias("event_id"))
@@ -10496,13 +10503,13 @@ DOC_STREAM_SCHEMA = (
 
 
 def _docs_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator end-to-end: the documents corpus staged
-    as a landing directory, streamed through applyInPandasWithState
-    keep-min-id dedup (streaming/pipelines.py::stateful_dedup_stream),
-    availableNow drain, update mode. A re-emission (min improving
-    across micro-batches) is folded by the terminal groupBy-min, so
-    the result equals batch ``groupBy(hash).min(id)`` and the DuckDB
-    twin is plain SQL."""
+    """Keep-min-id dedup end-to-end: the documents corpus staged as a
+    landing directory, streamed through the native streaming
+    aggregation of streaming/pipelines.py::stateful_dedup_stream,
+    availableNow drain, update mode. Re-emissions (every key a
+    micro-batch touches re-emits its current min) are folded by the
+    terminal groupBy-min, so the result equals batch
+    ``groupBy(hash).min(id)`` and the DuckDB twin is plain SQL."""
     import os
     import shutil
     import tempfile
@@ -10523,6 +10530,7 @@ def _docs_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateful_dedup_stream(stream, "text", "doc_id"), table,
         output_mode="update",
     )
+    shutil.rmtree(d)
     return (
         spark.table(table)
         .groupBy("h")
@@ -10548,6 +10556,7 @@ def _docs_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches. Terminal fold applies the same max-by rule to
     re-emissions, so the result equals batch max(struct(version,
     values)) per key — plain SQL for the oracle."""
+    import shutil
     import tempfile
 
     from tidyvec_spark.streaming import (
@@ -10578,6 +10587,7 @@ def _docs_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         output_mode="update",
     )
+    shutil.rmtree(d)
     packed = (
         spark.table(table)
         .groupBy("doc_id")
@@ -10613,9 +10623,10 @@ def _docs_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest_dedup_stream): the documents corpus streams through a
     landing directory while the persisted index (here: the keys of
     doc_id < 250) anti-joins away already-known content per
-    micro-batch; in-stream duplicates collapse keep-min via the
-    stateful operator. Admitted = exactly the content a production
-    ingest would append to corpus + index."""
+    micro-batch; in-stream duplicates collapse keep-min via the native
+    streaming aggregation, whose re-emissions the terminal groupBy-min
+    folds. Admitted = exactly the content a production ingest would
+    append to corpus + index."""
     import os
     import shutil
     import tempfile
@@ -10642,6 +10653,7 @@ def _docs_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ingest_dedup_stream(stream, index, "text", "doc_id"), table,
         output_mode="update",
     )
+    shutil.rmtree(d)
     return (
         spark.table(table)
         .groupBy("h")
@@ -10697,6 +10709,7 @@ def _docs_stream_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_mode="append",
         shuffle_partitions=stream_shuffle_partitions(spark, d),
     )
+    shutil.rmtree(d)
     return spark.table(table).select("doc_id", "lang", "n_chars")
 
 
@@ -11934,6 +11947,7 @@ def _events_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_mode="update",
         shuffle_partitions=stream_shuffle_partitions(spark, d),
     )
+    shutil.rmtree(d)
     return (
         spark.table(table)
         .groupBy("key")

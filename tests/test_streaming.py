@@ -1,6 +1,7 @@
 """Structured Streaming tests: the stream pipelines must produce the
 same results as their batch twins (same functions, batch DataFrame)."""
 
+import datetime
 import shutil
 
 import pytest
@@ -122,6 +123,47 @@ def test_stateful_dedup_batch_parity_with_sql(spark):
     assert len(got) == 2 and {k for _, k in got} == {2, 5}
 
 
+def test_stateful_dedup_stream_null_inputs_match_batch(spark, tmp_path):
+    """NULL text groups under the NULL key and a NULL id stays a key of
+    its own, on the stream exactly as in the batch twin."""
+    schema = "doc_id bigint, text string"
+    d = tmp_path / "null_land"
+    d.mkdir()
+    spark.createDataFrame([(1, None), (2, "a b")], schema).coalesce(1).write.parquet(
+        str(d / "f0.parquet")
+    )
+    spark.createDataFrame([(None, "c"), (4, None)], schema).coalesce(1).write.parquet(
+        str(d / "f1.parquet")
+    )
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(d) + "/*")
+    )
+    S.run_available_now(
+        S.stateful_dedup_stream(stream, "text", "doc_id"),
+        "stateful_dedup_null_t",
+        output_mode="update",
+    )
+    got = {
+        (r["h"], r["keep_id"])
+        for r in spark.table("stateful_dedup_null_t")
+        .groupBy("h")
+        .agg(F.min("keep_id").alias("keep_id"))
+        .collect()
+    }
+    batch = {
+        (r["h"], r["keep_id"])
+        for r in S.stateful_dedup_stream(
+            spark.read.parquet(str(d) + "/*"), "text", "doc_id"
+        ).collect()
+    }
+    md5 = {
+        t: spark.range(1).select(F.md5(F.lit(t))).first()[0] for t in ("a b", "c")
+    }
+    assert got == batch == {(md5["a b"], 2), (md5["c"], None), (None, 1)}
+
+
 def test_interval_join_stream_equals_batch(spark, event_dir, batch_events):
     err = batch_events.filter(F.col("event_type") == "error")
     clicks = batch_events.filter(F.col("event_type") == "click")
@@ -187,7 +229,7 @@ def test_interval_join_stream_multi_batch(spark, tmp_path, batch_events):
 
 
 def test_budget_filter_stream_single_batch_equals_batch(spark, tmp_path):
-    # transformWithStateInPandas path: one staged file -> one
+    # applyInPandasWithState path: one staged file -> one
     # micro-batch -> admission order is doc_id order, so the result
     # must equal the batch cumsum twin exactly
     d = tmp_path / "budget_land"
@@ -344,45 +386,6 @@ def test_budget_filter_rejects_bad_budget(spark):
     df = spark.createDataFrame([(1, "en", 5)], "doc_id bigint, lang string, n_toks bigint")
     with pytest.raises(ValueError):
         S.budget_filter_stream(df, "n_toks", "lang", budget=0, id_col="doc_id")
-
-
-def test_budget_filter_tws_gated_or_works(spark, tmp_path):
-    """The transformWithStateInPandas path: runs when protobuf exists,
-    raises the documented ImportError otherwise (this container has no
-    protobuf — same optional-dep policy as the HF embedders)."""
-    d = tmp_path / "budget_tws"
-    d.mkdir()
-    spark.createDataFrame(
-        [(1, "en", 10), (2, "en", 20)], "doc_id bigint, lang string, n_toks bigint"
-    ).coalesce(1).write.parquet(str(d / "f0.parquet"))
-    stream = spark.readStream.schema(
-        "doc_id bigint, lang string, n_toks bigint"
-    ).parquet(str(d) + "/*")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        has_pb = True
-    except ImportError:
-        has_pb = False
-    if not has_pb:
-        with pytest.raises(ImportError):
-            S.budget_filter_stream(
-                stream, "n_toks", "lang", budget=25, id_col="doc_id", api="tws"
-            )
-    else:
-        S.run_available_now(
-            S.budget_filter_stream(
-                stream, "n_toks", "lang", budget=25, id_col="doc_id", api="tws"
-            ),
-            "budget_tws_t",
-            output_mode="append",
-        )
-        assert sorted(
-            r["doc_id"] for r in spark.table("budget_tws_t").collect()
-        ) == [1]
-    with pytest.raises(ValueError):
-        S.budget_filter_stream(
-            stream, "n_toks", "lang", budget=25, id_col="doc_id", api="arrowflight"
-        )
 
 
 def test_embed_on_stream_equals_batch(spark, tmp_path):
@@ -695,6 +698,49 @@ def test_near_dup_pairs_stream_horizon_ttl(spark, tmp_path):
     assert stale == [], f"cross-horizon pairs leaked: {stale}"
 
 
+def test_near_dup_pairs_horizon_edge_is_exact(spark, tmp_path):
+    """The horizon compares full event timestamps in batch and stream
+    alike: docs 600.8 s apart fall outside H=600 (whole-second
+    truncation would keep them), docs 599.8 s and 1.0 s apart fall
+    inside."""
+    text = "spark streaming near duplicate horizon edge test corpus"
+    schema = "doc_id bigint, text string, ts timestamp"
+    land = tmp_path / "edge_land"
+    land.mkdir()
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "doc_id bigint, text string, s double").select(
+            "doc_id", "text", F.timestamp_seconds("s").alias("ts")
+        )
+
+    waves = [[(1, text, 5000.1)], [(2, text, 5600.9), (3, text, 5599.9)]]
+    for i, w in enumerate(waves):
+        frame(w).coalesce(1).write.parquet(str(land / f"f{i}.parquet"))
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(land) + "/*")
+    )
+    S.run_available_now(
+        S.near_dup_pairs_stream(
+            stream, "text", "doc_id", ts_col="ts", horizon_seconds=600
+        ),
+        "t_near_pairs_edge",
+        output_mode="append",
+    )
+    got = sorted(
+        tuple(r) for r in spark.table("t_near_pairs_edge").distinct().collect()
+    )
+    batch = sorted(
+        tuple(r)
+        for r in S.near_dup_pairs_stream(
+            frame(waves[0] + waves[1]), "text", "doc_id",
+            ts_col="ts", horizon_seconds=600,
+        ).collect()
+    )
+    assert got == batch == [(1, 3), (2, 3)]
+
+
 def test_near_dup_pairs_horizon_validation(spark):
     df = spark.createDataFrame([(1, "x", None)], "doc_id bigint, text string, ts timestamp")
     with pytest.raises(ValueError, match="together"):
@@ -879,29 +925,87 @@ def test_upsert_null_value_columns_survive(spark, tmp_path):
     assert rows[2] == (1, None)
 
 
-def test_upsert_stream_plan_is_native_aggregation(spark, tmp_path):
-    """The streaming upsert runs as a native stateful aggregation: the
-    executed micro-batch plan saves state through StateStoreSave and
-    holds no Python state operator (FlatMapGroupsInPandasWithState)."""
-    d = str(tmp_path / "in")
-    spark.createDataFrame(
-        [(1, 1, "a"), (1, 2, "b"), (2, 1, "c")], "k long, version int, v string"
-    ).write.parquet(d)
-    stream = spark.readStream.schema("k long, version int, v string").parquet(d)
+_PAIRS_TEXT = "spark streaming native join state eviction test corpus"
+_T0 = datetime.datetime(2026, 1, 1)
+
+# kind -> (schema, waves, operator, output mode, plan marker, rows)
+_NATIVE_STREAM_CASES = {
+    "upsert": (
+        "k long, version int, v string",
+        [[(1, 1, "a"), (1, 2, "b"), (2, 1, "c")]],
+        lambda s: S.upsert_latest_stream(s, "k", "version", ["v"]),
+        "update",
+        "StateStoreSave",
+        [(1, 2, "b"), (2, 1, "c")],
+    ),
+    "keep_min": (
+        "doc_id bigint, text string",
+        [[(5, "a b"), (2, "c")], [(3, "A  B")]],
+        lambda s: S.stateful_dedup_stream(s, "text", "doc_id"),
+        "update",
+        "StateStoreSave",
+        None,
+    ),
+    # a horizon run: one wave every 10 minutes against a 1-minute
+    # horizon, so each wave's members leave the join state later
+    "pairs": (
+        "doc_id bigint, text string, ts timestamp",
+        [
+            [(2 * w, _PAIRS_TEXT, _T0 + datetime.timedelta(minutes=10 * w)),
+             (2 * w + 1, _PAIRS_TEXT, _T0 + datetime.timedelta(minutes=10 * w))]
+            for w in range(5)
+        ],
+        lambda s: S.near_dup_pairs_stream(
+            s, "text", "doc_id", ts_col="ts", horizon_seconds=60
+        ),
+        "append",
+        "StreamingSymmetricHashJoin",
+        [(2 * w, 2 * w + 1) for w in range(5)],
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_NATIVE_STREAM_CASES))
+def test_upsert_stream_plan_is_native_aggregation(spark, tmp_path, kind):
+    """The upsert, keep-min and pair operators run as native stateful
+    operators: the executed micro-batch plan holds no Python state
+    operator (FlatMapGroupsInPandasWithState); the aggregations save
+    state through StateStoreSave, the pairs run a stream-stream join
+    whose horizon evicts state."""
+    schema, waves, op, mode, marker, expect = _NATIVE_STREAM_CASES[kind]
+    d = tmp_path / "in"
+    d.mkdir()
+    for i, w in enumerate(waves):
+        spark.createDataFrame(w, schema).coalesce(1).write.parquet(
+            str(d / f"f{i}.parquet")
+        )
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(d) + "/*")
+    )
     q = (
-        S.upsert_latest_stream(stream, "k", "version", ["v"])
+        op(stream)
         .writeStream.format("memory")
-        .queryName("upsert_plan_t")
-        .outputMode("update")
+        .queryName(f"native_plan_{kind}_t")
+        .outputMode(mode)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     plan = q._jsq.explainInternal(False)
-    assert "StateStoreSave" in plan
+    assert marker in plan
     assert "FlatMapGroupsInPandasWithState" not in plan
-    got = sorted(tuple(r) for r in spark.table("upsert_plan_t").collect())
-    assert got == [(1, 2, "b"), (2, 1, "c")]
+    got = sorted(
+        tuple(r) for r in spark.table(f"native_plan_{kind}_t").distinct().collect()
+    )
+    if expect is not None:
+        assert got == expect
+    if kind == "pairs":
+        removed = sum(
+            o["numRowsRemoved"] for p in q.recentProgress for o in p["stateOperators"]
+        )
+        assert removed > 0
 
 
 def test_heavy_hitters_stream_exact_when_capacity_suffices(spark, tmp_path):
