@@ -5045,17 +5045,17 @@ _INCREMENTAL_LSH_SQL = _MINHASH_LSH_SQL.replace(
 
 def _decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination
-    (operators/dedup.py::decontaminate_against): the synthesized
+    (operators/dedup.py::decontaminate_fuzzy): the synthesized
     truncated copies act as an eval set; every corpus document
     near-duplicating one is dropped (banded corpus × benchmark join —
-    never corpus × corpus — then a broadcast anti-join). Oracle: the
+    never corpus × corpus — then an anti-join). Oracle: the
     full-corpus LSH pair SQL restricted to cross pairs, anti-joined."""
-    from tidyvec_spark.operators.dedup import decontaminate_against
+    from tidyvec_spark.operators.dedup import decontaminate_fuzzy
 
     full = _dup_corpus(spark, sf_dir)
     corpus = _read(spark, sf_dir, "documents")
     benchmark = full.filter(F.col("doc_id") >= 10000)
-    clean = decontaminate_against(
+    clean = decontaminate_fuzzy(
         corpus, benchmark, "text", "doc_id",
         num_hashes=16, bands=4, shingle_n=3, threshold=0.5,
     )
@@ -14041,15 +14041,15 @@ def _corpus_overlap_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact audit in ONE scan: both sides derive from the same table,
     # so flag membership per row instead of re-scanning per side
     # (the operator itself is the one-scan-per-corpus contract; the
-    # scaffold should not triple the entry's scan count)
+    # scaffold should not triple the entry's scan count). One distinct
+    # then plain conditional counts: three countDistincts would plan
+    # an Expand whose group order varies from run to run.
     in_a = F.col("doc_id") % 4 < 3
     in_b = F.col("doc_id") % 3 == 0
-    ex = docs.agg(
-        F.countDistinct(F.when(in_a, F.col("doc_id"))).alias("n_a"),
-        F.countDistinct(F.when(in_b, F.col("doc_id"))).alias("n_b"),
-        F.countDistinct(F.when(in_a & in_b, F.col("doc_id"))).alias(
-            "n_intersection"
-        ),
+    ex = docs.distinct().agg(
+        F.count(F.when(in_a, F.col("doc_id"))).alias("n_a"),
+        F.count(F.when(in_b, F.col("doc_id"))).alias("n_b"),
+        F.count(F.when(in_a & in_b, F.col("doc_id"))).alias("n_intersection"),
     ).withColumn(
         "n_union", F.col("n_a") + F.col("n_b") - F.col("n_intersection")
     )

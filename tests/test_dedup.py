@@ -281,6 +281,52 @@ def test_release_frees_pair_generator_cache(spark, corpus):
     assert all(not h.storageLevel.useMemory for h in handles)
 
 
+@pytest.mark.parametrize(
+    "op",
+    [
+        "minhash_lsh_pairs",
+        "incremental_near_dup_pairs",
+        "fuzzy_contamination_hits",
+        "decontaminate_fuzzy",
+        "near_dup_groups_bucket",
+        "leakage_free_split",
+    ],
+)
+def test_release_frees_every_minhash_cache(spark, corpus, op):
+    """Every MinHash operator either frees its signature cache itself
+    or rides it on its result: after collecting the result and calling
+    release(), the session's cache manager holds nothing."""
+    other = spark.createDataFrame(
+        [(900, "the quick brown fox jumps over the lazy dog again and more")],
+        ["doc_id", "text"],
+    )
+    build = {
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(
+            corpus, "text", "doc_id"
+        ),
+        "incremental_near_dup_pairs": lambda: dedup.incremental_near_dup_pairs(
+            other, dedup.minhash_sign(corpus, "text", "doc_id"), "text", "doc_id"
+        ),
+        "fuzzy_contamination_hits": lambda: dedup.fuzzy_contamination_hits(
+            corpus, other, "text", "doc_id"
+        ),
+        "decontaminate_fuzzy": lambda: dedup.decontaminate_fuzzy(
+            corpus, other, "text", "doc_id"
+        ),
+        "near_dup_groups_bucket": lambda: dedup.near_dup_groups(
+            corpus, "text", "doc_id", method="bucket"
+        ),
+        "leakage_free_split": lambda: dedup.leakage_free_split(
+            corpus, "text", "doc_id"
+        ),
+    }[op]
+    spark.catalog.clearCache()
+    out = build()
+    assert out.collect()
+    dedup.release(out)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_two_phase_components_match_label_prop(spark):
     # large-star/small-star must produce the same components as
     # label propagation on every graph shape: random, chain, star,
@@ -478,7 +524,7 @@ def test_incremental_near_dup_equals_full_recompute(spark, corpus):
         )
 
 
-def test_decontaminate_against_drops_only_contaminated(spark, corpus):
+def test_decontaminate_fuzzy_drops_only_contaminated(spark, corpus):
     """Benchmark decontamination: corpus docs near-duplicating an eval
     item are dropped; everything else survives; eval-internal and
     corpus-internal duplicates are irrelevant."""
@@ -490,7 +536,7 @@ def test_decontaminate_against_drops_only_contaminated(spark, corpus):
         ],
         ["doc_id", "text"],
     )
-    clean = dedup.decontaminate_against(
+    clean = dedup.decontaminate_fuzzy(
         corpus, benchmark, "text", "doc_id", threshold=0.5
     )
     kept = sorted(r["doc_id"] for r in clean.collect())
@@ -515,7 +561,7 @@ def test_decontaminate_against_drops_only_contaminated(spark, corpus):
     assert 2 in kept and 4 in kept  # unrelated + unshingleable survive
     assert 0 not in kept
     with pytest.raises(ValueError):
-        dedup.decontaminate_against(corpus, benchmark, "text", "doc_id", bands=5)
+        dedup.decontaminate_fuzzy(corpus, benchmark, "text", "doc_id", bands=5)
 
 
 def test_drop_near_dups_keep_best(spark):

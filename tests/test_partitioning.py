@@ -58,3 +58,14 @@ def test_single_file_scan_is_widened(spark, sf_dir):
     assert jobs == 0
     assert out.rdd.getNumPartitions() == target
     assert P.num_shuffles(out) == 1
+
+
+def test_stream_passes_through_without_a_job(spark, tmp_path):
+    """A file-source stream has no partition count to ask for (its
+    RDD is not reachable before the query starts): it comes back as
+    the same frame, and no job runs."""
+    land, schema = str(tmp_path / "land"), "doc_id long, text string"
+    spark.createDataFrame([(1, "a"), (2, "b")], schema).write.parquet(land)
+    stream = spark.readStream.schema(schema).parquet(land)
+    out, jobs = _with_jobs(spark, lambda: ensure_parallelism(stream))
+    assert out is stream and jobs == 0

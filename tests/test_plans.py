@@ -790,6 +790,16 @@ def test_hll_overlap_scans_each_corpus_once(spark, qs):
     P.assert_no_cartesian(df)
 
 
+def test_corpus_overlap_est_plan_has_no_expand(spark, qs):
+    """corpus_overlap_est's exact audit is one distinct plus plain
+    conditional counts. Several countDistincts in one aggregate plan an
+    Expand whose group order varies between runs of one build, so its
+    explain text could not be compared across checkouts."""
+    df = qs["corpus_overlap_est"](spark, SF)
+    df.collect()
+    assert "Expand" not in {name for name, _ in P._physical_nodes(df)}
+
+
 def test_whiten_fit_is_one_scan_one_collect(spark, monkeypatch):
     """whiten_embeddings' fitting contract, pinned (r11 verdict's one
     weak item): covariance AND per-dimension means come off ONE

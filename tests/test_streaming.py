@@ -574,9 +574,10 @@ def test_ingest_dedup_checkpoint_restart(spark, tmp_path):
 
 
 def test_near_dup_pairs_checkpoint_restart(spark, tmp_path):
-    """Kill-and-resume for the band-bucket state: near-copies arriving
-    AFTER the restart must still pair with originals seen BEFORE it —
-    the bucket member lists must survive in the checkpoint."""
+    """Kill-and-resume for the stream-stream join state: near-copies
+    arriving AFTER the restart must still pair with originals seen
+    BEFORE it — both join sides' buffered banded rows must survive in
+    the checkpoint."""
     import __spark_entry__ as entry
 
     corpus = entry._dup_corpus(spark, "/root/testdata/sf0.001")
@@ -624,12 +625,11 @@ def test_near_dup_pairs_checkpoint_restart(spark, tmp_path):
 
 def test_near_dup_pairs_stream_horizon_ttl(spark, tmp_path):
     """Dedup-horizon mode (r5 verdict item 2): pairs form only within
-    |Δt| <= horizon; bucket members a full horizon behind the
-    watermark are evicted and idle buckets drop their state via an
-    event-time timeout. Checkpoint-restart between every arrival wave
-    proves in-horizon pairs survive a restart while stale members
-    never pair again. Batch twin: banded self-join + the same |Δt|
-    predicate."""
+    |Δt| <= horizon; the stream-stream join evicts buffered rows a
+    full horizon behind the event-time watermark from its state.
+    Checkpoint-restart between every arrival wave proves in-horizon
+    pairs survive a restart while evicted rows never pair again.
+    Batch twin: banded self-join + the same |Δt| predicate."""
     base = "spark streaming near duplicate horizon eviction test corpus"
 
     def doc(i, minute):

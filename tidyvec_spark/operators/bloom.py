@@ -38,7 +38,7 @@ Physical shape, stage by stage (all sizes per 100 TB corpus):
 Reference parity: the reference has no decontamination surface at all
 (R/tidyvec has no corpus ops); this extends the engine's curation
 stack per the published recipes, next to
-``decontaminate_against``/``decontaminate_ngram_hits``.
+``decontaminate_fuzzy``/``decontaminate_ngram_hits``.
 """
 
 from __future__ import annotations

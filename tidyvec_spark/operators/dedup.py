@@ -263,34 +263,63 @@ def minhash_sign(
     shingle_n: int = 3,
 ) -> DataFrame:
     """(__id, __sh, __sig): distinct shingle array + MinHash signature
-    per document — the map-side stage shared by the batch LSH pipeline
-    and the incremental-ingest path. At scale this IS the persisted
-    near-dup index: write it once (ideally bucketed by a band hash) and
-    every arriving batch signs itself and joins against it instead of
-    re-shingling the corpus."""
+    per document — the one map-side signing stage behind every MinHash
+    operator here (batch pairs, bucket-star edges, decontamination,
+    incremental ingest, streaming pair discovery). At scale this IS the
+    persisted near-dup index: write it once (ideally bucketed by a band
+    hash) and every arriving batch signs itself and joins against it
+    instead of re-shingling the corpus."""
+    return _sign(df, text_col, id_col, num_hashes, shingle_n)
+
+
+def _sign(df, text_col, id_col, num_hashes, shingle_n, *carry) -> DataFrame:
+    """:func:`minhash_sign`, keeping the extra ``carry`` columns
+    (expressions over ``df``) between ``__sh`` and ``__sig`` — how the
+    streaming pair discovery carries its event time through signing."""
     return (
         ensure_parallelism(df)
         .select(
             F.col(id_col).alias("__id"),
             F.array_distinct(X.ngrams(text_col, shingle_n)).alias("__sh"),
+            *carry,
         )
         .filter(F.size("__sh") > 0)
         .withColumn("__sig", minhash_signature("__sh", num_hashes))
     )
 
 
-def _band(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+def _band(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """One row per (document, LSH band) of a signed frame, every column
+    of ``sigs`` kept, plus the band-join key (``__b``, ``__bh``).
+
+    Callers band BEFORE persisting the signatures, so a bad split
+    raises before anything is cached."""
+    if num_hashes % bands != 0:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     return sigs.select(
-        "__id",
-        "__sh",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__b"),
-        "__sig",
-    ).withColumn("__bh", band_hash("__sig", F.col("__b"), rows_per_band))
+        "*", F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__b")
+    ).withColumn("__bh", band_hash("__sig", F.col("__b"), num_hashes // bands))
 
 
-def _verify_jaccard(cand: DataFrame, threshold, round_to) -> DataFrame:
+def _side(banded: DataFrame, id_alias: str, sh_alias: str) -> DataFrame:
+    """One side of a band join: id and shingles renamed, join key kept.
+    Carrying the shingles through the join lets verification run
+    without a second join back to the corpus."""
+    return banded.select(
+        F.col("__id").alias(id_alias), F.col("__sh").alias(sh_alias), "__b", "__bh"
+    )
+
+
+def _verify_jaccard(cand, threshold, round_to, ids=("id_a", "id_b")) -> DataFrame:
     """Exact-Jaccard verify on banded candidates carrying both shingle
-    arrays; threshold BEFORE the pair-dedup shuffle."""
+    arrays (``sh_a``, ``sh_b``).
+
+    Verify-then-dedup: the exact Jaccard is a pure function of the
+    pair, so it runs map-side on the band-join output and the threshold
+    prunes BEFORE the distinct — the dedup shuffle carries only
+    surviving triples (≤ bands copies each), not every banded candidate
+    with its shingle arrays. ``ids`` are the two pair-id columns to
+    emit (names or aliased columns); pairs are deduplicated on them."""
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
     jac = inter / union
@@ -299,7 +328,8 @@ def _verify_jaccard(cand: DataFrame, threshold, round_to) -> DataFrame:
     out = cand.withColumn("jaccard", jac)
     if threshold is not None:
         out = out.filter(F.col("jaccard") >= float(threshold))
-    return out.select("id_a", "id_b", "jaccard").dropDuplicates(["id_a", "id_b"])
+    out = out.select(*ids, "jaccard")
+    return out.dropDuplicates(out.columns[:2])
 
 
 def incremental_near_dup_pairs(
@@ -328,25 +358,11 @@ def incremental_near_dup_pairs(
     (new) × (index ∪ new), verify-then-dedup. Cost scales with batch
     size × collision rate, not corpus size.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    rows_per_band = num_hashes // bands
-    new_sigs = minhash_sign(
-        new_df, text_col, id_col, num_hashes, shingle_n
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    new_banded = _band(new_sigs, bands, rows_per_band)
-    all_banded = _band(
-        index.select("__id", "__sh", "__sig").unionByName(new_sigs),
-        bands,
-        rows_per_band,
-    )
-    a = new_banded.select(
-        F.col("__id").alias("na"), F.col("__sh").alias("sha"), "__b", "__bh"
-    )
-    b = all_banded.select(
-        F.col("__id").alias("nb"), F.col("__sh").alias("shb"), "__b", "__bh"
-    )
+    new_sigs = minhash_sign(new_df, text_col, id_col, num_hashes, shingle_n)
+    a = _side(_band(new_sigs, num_hashes, bands), "na", "sha")
+    all_sigs = index.select("__id", "__sh", "__sig").unionByName(new_sigs)
+    b = _side(_band(all_sigs, num_hashes, bands), "nb", "shb")
+    new_sigs.persist(StorageLevel.MEMORY_AND_DISK)
     cand = (
         a.join(b, on=["__b", "__bh"])
         .filter(F.col("na") != F.col("nb"))
@@ -383,11 +399,11 @@ def leakage_free_split(
     data can never leak into training via a near-copy — the
     contamination failure plain random splits have on crawled corpora.
 
-    Pipeline: MinHash-LSH pairs → connected components → split decided
-    by a salted hash of the component label (singletons use their own
-    id). The split is a pure function of content + salt: deterministic,
-    engine-portable (SQL-oracle-checkable), stable under re-runs and
-    corpus repartitioning. Adds one left join to the dedup pipeline's
+    Pipeline: :func:`near_dup_groups` (MinHash-LSH pairs → connected
+    components) → split decided by a salted hash of the component label
+    (singletons use their own id). The split is a pure function of
+    content + salt: deterministic, engine-portable (SQL-oracle-
+    checkable), stable under re-runs and corpus repartitioning. Adds one left join to the dedup pipeline's
     cost; the split itself is a map-side expression.
 
     Returns the input columns plus ``split_group`` (the component/id
@@ -397,12 +413,11 @@ def leakage_free_split(
 
     if not 0.0 <= float(test_fraction) <= 1.0:
         raise ValueError(f"test_fraction must be in [0, 1], got {test_fraction}")
-    pairs = minhash_lsh_pairs(
+    comp = near_dup_groups(
         df, text_col, id_col,
         num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
         threshold=threshold,
     )
-    comp = connected_components(pairs)
     out = df.join(
         comp.select(
             F.col("id").alias("__cid"), F.col("component").alias("__comp")
@@ -416,54 +431,6 @@ def leakage_free_split(
     ).otherwise(F.lit("train"))
     return out.select(
         *df.columns, group.alias("split_group"), split.alias("split")
-    )
-
-
-def decontaminate_against(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    threshold: Optional[float] = 0.5,
-) -> DataFrame:
-    """Drop every corpus document that near-duplicates a benchmark/eval
-    document — training-data decontamination (the GPT-3 §C / PaLM
-    n-gram-overlap step, here with MinHash-LSH + exact-Jaccard verify
-    instead of raw n-gram hits).
-
-    Physical shape: both sides sign map-side, ONE banded equi-join of
-    corpus × benchmark (never corpus × corpus — the benchmark is the
-    small side), verify, then a broadcast anti-join removes the
-    contaminated ids. Cost scales with |benchmark| × collision rate;
-    the 100 TB corpus is scanned once.
-
-    The corpus and benchmark id spaces may overlap (ids are only used
-    within their own side); returns the clean corpus with its original
-    columns.
-    """
-    if num_hashes % bands != 0:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    rows_per_band = num_hashes // bands
-    c_sigs = minhash_sign(corpus, text_col, id_col, num_hashes, shingle_n)
-    b_sigs = minhash_sign(benchmark, text_col, id_col, num_hashes, shingle_n)
-    c_band = _band(c_sigs, bands, rows_per_band).select(
-        F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"), "__b", "__bh"
-    )
-    b_band = _band(b_sigs, bands, rows_per_band).select(
-        F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"), "__b", "__bh"
-    )
-    contaminated = (
-        _verify_jaccard(c_band.join(b_band, on=["__b", "__bh"]), threshold, None)
-        .select(F.col("id_a").alias("__bad"))
-        .distinct()
-    )
-    return corpus.join(
-        F.broadcast(contaminated),
-        corpus[id_col] == F.col("__bad"),
-        "left_anti",
     )
 
 
@@ -529,7 +496,7 @@ def decontaminate_ngram_hits(
     §C / PaLM rule verbatim: a training document is contaminated if it
     shares at least ``min_hits`` distinct ``n``-gram(s) (13 tokens in
     the papers) with any benchmark/eval document. Catches the case
-    MinHash-Jaccard (:func:`decontaminate_against`) structurally
+    MinHash-Jaccard (:func:`decontaminate_fuzzy`) structurally
     misses: a short eval item quoted inside a long document has huge
     containment but tiny Jaccard.
 
@@ -573,39 +540,6 @@ def decontaminate_ngram_hits(
     )
 
 
-def _minhash_banded(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-):
-    """Shared MinHash signature + banding stage behind the self-join
-    (:func:`minhash_lsh_pairs`) and the asymmetric train-vs-benchmark
-    join (:func:`fuzzy_contamination_hits`): returns ``(sigs,
-    banded)`` — the PERSISTED (__id, __sh, __sig) signature frame
-    (the banded join would otherwise recompute the md5 minhash
-    expressions on both sides, once per band after Catalyst
-    project-collapse; at scale this table is written once and joined)
-    and its per-band explosion with the (__b, __bh) join key."""
-    rows_per_band = num_hashes // bands
-    docs = ensure_parallelism(df).select(
-        F.col(id_col).alias("__id"),
-        F.array_distinct(X.ngrams(text_col, shingle_n)).alias("__sh"),
-    ).filter(F.size("__sh") > 0)
-    sigs = docs.withColumn("__sig", minhash_signature("__sh", num_hashes)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    banded = sigs.select(
-        "__id",
-        "__sh",
-        "__sig",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__b"),
-    ).withColumn("__bh", band_hash("__sig", F.col("__b"), rows_per_band))
-    return sigs, banded
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -627,43 +561,21 @@ def minhash_lsh_pairs(
       3. exact Jaccard verify on candidates only, via the distinct
          shingle arrays carried per doc (array_intersect — JVM-side).
 
+    The signature table is persisted (the banded self-join would
+    otherwise recompute the md5 minhash expressions on both sides);
+    :func:`release` frees it after the terminal action.
+
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    sigs, banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n)
-    # carrying __sh through the band join lets verification run without
-    # a second join back to the corpus
-    a = banded.select(
-        F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"), "__b", "__bh"
-    )
-    b = banded.select(
-        F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"), "__b", "__bh"
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - F.size(
-        F.array_intersect("sh_a", "sh_b")
-    ).cast("double")
-    jac = inter / union
-    if round_to is not None:
-        jac = F.round(jac, round_to)
-
-    # verify-then-dedup: the exact Jaccard is a pure function of the
-    # pair, so it runs map-side on the band-join output and the threshold
-    # prunes BEFORE the distinct — the dedup shuffle carries only
-    # surviving (id_a, id_b, jaccard) triples (≤ bands copies each), not
-    # every banded candidate with its shingle arrays
-    out = (
-        a.join(b, on=["__b", "__bh"])
+    sigs = minhash_sign(df, text_col, id_col, num_hashes, shingle_n)
+    banded = _band(sigs, num_hashes, bands)
+    sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    cand = (
+        _side(banded, "id_a", "sh_a")
+        .join(_side(banded, "id_b", "sh_b"), on=["__b", "__bh"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("jaccard", jac)
     )
-    if threshold is not None:
-        out = out.filter(F.col("jaccard") >= float(threshold))
-    return _with_persisted(
-        out.select("id_a", "id_b", "jaccard").dropDuplicates(["id_a", "id_b"]),
-        [sigs],
-    )
+    return _with_persisted(_verify_jaccard(cand, threshold, round_to), [sigs])
 
 
 def fuzzy_contamination_hits(
@@ -686,46 +598,28 @@ def fuzzy_contamination_hits(
     the band join is ASYMMETRIC (corpus side × benchmark side), so
     cost scales with corpus + benchmark + verified candidates — never
     corpus × benchmark. The benchmark side is typically broadcast-
-    sized; AQE picks the broadcast automatically.
+    sized; AQE picks the broadcast automatically. The corpus and
+    benchmark id spaces may overlap: ids are only used within their
+    own side.
 
     Returns (``id_col``, bench_id, jaccard) — one row per (corpus
     doc, benchmark doc) pair with verified shingle-Jaccard ≥
-    ``threshold``.
+    ``threshold``. Both signature tables ride on the result for
+    :func:`release`.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    csigs, cbanded = _minhash_banded(
-        corpus, text_col, id_col, num_hashes, bands, shingle_n
+    csigs = minhash_sign(corpus, text_col, id_col, num_hashes, shingle_n)
+    a = _side(_band(csigs, num_hashes, bands), "__cid", "sh_a")
+    bsigs = minhash_sign(benchmark, text_col, id_col, num_hashes, shingle_n)
+    b = _side(_band(bsigs, num_hashes, bands), "__bid", "sh_b")
+    csigs.persist(StorageLevel.MEMORY_AND_DISK)
+    bsigs.persist(StorageLevel.MEMORY_AND_DISK)
+    hits = _verify_jaccard(
+        a.join(b, on=["__b", "__bh"]),
+        threshold,
+        round_to,
+        ids=(F.col("__cid").alias(id_col), F.col("__bid").alias("bench_id")),
     )
-    bsigs, bbanded = _minhash_banded(
-        benchmark, text_col, id_col, num_hashes, bands, shingle_n
-    )
-    a = cbanded.select(
-        F.col("__id").alias("__cid"), F.col("__sh").alias("sh_a"), "__b", "__bh"
-    )
-    b = bbanded.select(
-        F.col("__id").alias("__bid"), F.col("__sh").alias("sh_b"), "__b", "__bh"
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - F.size(
-        F.array_intersect("sh_a", "sh_b")
-    ).cast("double")
-    jac = inter / union
-    if round_to is not None:
-        jac = F.round(jac, round_to)
-    out = (
-        a.join(b, on=["__b", "__bh"])
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= float(threshold))
-    )
-    return _with_persisted(
-        out.select(
-            F.col("__cid").alias(id_col),
-            F.col("__bid").alias("bench_id"),
-            "jaccard",
-        ).dropDuplicates([id_col, "bench_id"]),
-        [csigs, bsigs],
-    )
+    return _with_persisted(hits, [csigs, bsigs])
 
 
 def decontaminate_fuzzy(
@@ -739,20 +633,25 @@ def decontaminate_fuzzy(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Drop every corpus document with a verified near-duplicate in
-    the benchmark (``fuzzy_contamination_hits`` ≥ ``threshold``) —
-    the act stage: one anti-join against the (small) contaminated-id
-    set. Keeps all corpus columns."""
-    victims = (
-        fuzzy_contamination_hits(
-            corpus, benchmark, text_col, id_col,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-            threshold=threshold,
-        )
-        .select(F.col(id_col).alias("__victim"))
-        .distinct()
+    the benchmark — training-data decontamination (the GPT-3 §C /
+    PaLM n-gram-overlap step, here with MinHash-LSH + exact-Jaccard
+    verify instead of raw n-gram hits).
+
+    Physical shape: :func:`fuzzy_contamination_hits` (both sides sign
+    map-side, ONE banded corpus × benchmark equi-join — never corpus ×
+    corpus — and verify), then one anti-join against the small
+    contaminated-id set. The 100 TB corpus is scanned once. Returns
+    the clean corpus with its original columns; the signature tables
+    ride on it for :func:`release`."""
+    hits = fuzzy_contamination_hits(
+        corpus, benchmark, text_col, id_col,
+        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+        threshold=threshold,
     )
-    return corpus.join(
-        victims, corpus[id_col] == victims["__victim"], "left_anti"
+    victims = hits.select(F.col(id_col).alias("__victim")).distinct()
+    return _with_persisted(
+        corpus.join(victims, corpus[id_col] == victims["__victim"], "left_anti"),
+        hits._tidyvec_persisted,
     )
 
 
@@ -1400,13 +1299,11 @@ def lsh_bucket_star_edges(
 
     Returns (id_a, id_b) with id_a = the bucket root (min id).
     """
-    if num_hashes % bands != 0:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     from pyspark.sql import Window
 
-    sigs, banded = _minhash_banded(
-        df, text_col, id_col, num_hashes, bands, shingle_n
-    )
+    sigs = minhash_sign(df, text_col, id_col, num_hashes, shingle_n)
+    banded = _band(sigs, num_hashes, bands)
+    sigs.persist(StorageLevel.MEMORY_AND_DISK)
     wroot = Window.partitionBy("__b", "__bh")
     edges = (
         banded.select("__id", "__b", "__bh")

@@ -121,13 +121,15 @@ def ensure_parallelism(df: DataFrame, min_partitions: Optional[int] = None) -> D
     """Repartition an un-shuffled ``df`` up to ``min_partitions``
     (default: the session's ``sparkContext.defaultParallelism``) iff it
     currently has fewer. Never coalesces — a well-split source passes
-    through untouched — and never fires a Spark job: a frame whose
-    plan already shuffles (:func:`_has_shuffle`) is returned as is,
-    and only shuffle-free plans (scans, local relations, checkpointed
-    RDDs) are asked for their partition count, which Spark answers
-    from the file listing or the RDD without running anything.
+    through untouched — and never fires a Spark job: a streaming frame
+    (whose micro-batches have no partition count to ask for) or a
+    frame whose plan already shuffles (:func:`_has_shuffle`) is
+    returned as is, and only shuffle-free batch plans (scans, local
+    relations, checkpointed RDDs) are asked for their partition count,
+    which Spark answers from the file listing or the RDD without
+    running anything.
     """
-    if _has_shuffle(df):
+    if df.isStreaming or _has_shuffle(df):
         return df
     sc = df.sparkSession.sparkContext
     target = int(min_partitions) if min_partitions else sc.defaultParallelism

@@ -228,7 +228,6 @@ def ingest_dedup_stream(
     text_col: str,
     id_col: str,
     index_hash_col: str = "h",
-    key_fn=None,
 ) -> DataFrame:
     """Landing-zone ingest dedup against the EXISTING corpus: arriving
     documents whose exact-dedup key is already in the persisted index
@@ -253,10 +252,7 @@ def ingest_dedup_stream(
     """
     from tidyvec_spark.operators.dedup import normalized_text_key
 
-    # key_fn plugs an alternative canonicalization (e.g. the homoglyph
-    # confusable fold) — the index must be built under the SAME law
-    key_fn = key_fn or normalized_text_key
-    keyed = new_docs.withColumn("__ih", key_fn(text_col))
+    keyed = new_docs.withColumn("__ih", normalized_text_key(text_col))
     fresh = keyed.join(
         index.select(F.col(index_hash_col).alias("__ih")).distinct(),
         "__ih",
@@ -283,10 +279,11 @@ def near_dup_pairs_stream(
     LSH band bucket.
 
     One plan for batch and streaming frames: shingle → sign → band
-    entirely map-side (the identical codegen expressions as
-    ``operators.dedup.minhash_lsh_pairs``), then the banded self-join
-    on the band hash. On a stream the self-join runs as a native
-    stream-stream join (``StreamingSymmetricHashJoin``): each side's
+    entirely map-side, through the same signing and banding functions
+    as ``operators.dedup.minhash_lsh_pairs`` (``minhash_sign`` and its
+    band step), then the banded self-join on the band hash. On a
+    stream the self-join runs as a native stream-stream join
+    (``StreamingSymmetricHashJoin``): each side's
     join state is the band bucket's members, and a new document pairs
     with every earlier member of each bucket it lands in, whether that
     member arrived in this micro-batch or an earlier one. Candidate
@@ -317,47 +314,27 @@ def near_dup_pairs_stream(
     of this operator hold a different state schema and cannot be
     resumed — start such a query from a fresh checkpoint.
     """
-    from tidyvec_spark.functions import text as X
-    from tidyvec_spark.functions.hashing import band_hash, minhash_signature
+    from tidyvec_spark.operators.dedup import _band, _sign
 
-    if num_hashes % bands != 0:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     if (horizon_seconds is None) != (ts_col is None):
         raise ValueError("ts_col and horizon_seconds must be given together")
     if horizon_seconds is not None and horizon_seconds < 1:
         raise ValueError("horizon_seconds must be >= 1")
-    rpb = num_hashes // bands
-
-    cols = [
-        F.col(id_col).alias("__id"),
-        F.array_distinct(X.ngrams(text_col, shingle_n)).alias("__sh"),
-    ]
-    if ts_col is not None:
-        cols.append(event_ts_of(df, ts_col).alias("__ts"))
-    signed = (
-        df.select(*cols)
-        .filter(F.size("__sh") > 0)
-        .withColumn("__sig", minhash_signature("__sh", num_hashes))
-        .select(
-            "__id",
-            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__b"),
-            "__sig",
-            *(["__ts"] if ts_col is not None else []),
-        )
-        .withColumn("__bh", band_hash("__sig", F.col("__b"), rpb))
-        .select(
-            "__id", "__bh", *(["__ts"] if ts_col is not None else [])
-        )
+    carry = [] if ts_col is None else [event_ts_of(df, ts_col).alias("__ts")]
+    banded = _band(
+        _sign(df, text_col, id_col, num_hashes, shingle_n, *carry),
+        num_hashes,
+        bands,
     )
 
     a_cols = [F.col("__id").alias("id_a"), F.col("__bh")]
     b_cols = [F.col("__id").alias("id_b"), F.col("__bh")]
     if ts_col is not None:
-        signed = signed.withWatermark("__ts", watermark_delay)
+        banded = banded.withWatermark("__ts", watermark_delay)
         a_cols.append(F.col("__ts").alias("__ts_a"))
         b_cols.append(F.col("__ts").alias("__ts_b"))
-    a = signed.select(*a_cols)
-    b = signed.select(*b_cols)
+    a = banded.select(*a_cols)
+    b = banded.select(*b_cols)
     j = a.join(b, "__bh").filter(F.col("id_a") < F.col("id_b"))
     if ts_col is not None:
         h = F.expr(f"INTERVAL {int(horizon_seconds)} SECONDS")
@@ -601,10 +578,12 @@ def stream_shuffle_partitions(
 
     Use it for bounded-key streams (event types, languages, one
     global heavy-hitter key), where that fixed cost dominates. Streams
-    keyed by users, document hashes or band buckets keep the session
-    default: on ``applyInPandasWithState`` every key group pays its
-    own Python round trip, and byte-sized partitions made those
-    streams 3–6× slower by running the calls on fewer tasks."""
+    keyed by users (sessionize) keep the session default: on
+    ``applyInPandasWithState`` every key group pays its own Python
+    round trip, and byte-sized partitions made such streams 3–6×
+    slower by running the calls on fewer tasks. The document-hash and
+    band-bucket streams (keep-min dedup, LSH pair discovery) are
+    native state-store operators and pay no per-group Python cost."""
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         total = sum(
