@@ -985,6 +985,25 @@ def _bq_topk_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_topk_sidecar(spark, path, q, "vec_id", k=10)
 
 
+def _perturbed_embeddings(spark: SparkSession, sf_dir: str):
+    """(base, corpus) for the embedding near-dup queries: ``base`` is
+    the embeddings table as (vec_id, array<double>), ``corpus`` is base
+    unioned with perturbed copies (vec_id + 100000, first component
+    + 0.1), so near-dups exist by construction. The oracles spell the
+    same corpus as their ``base``/``pert``/``allv`` CTEs."""
+    e = _read(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    pert = e.select(
+        (F.col("vec_id") + 100000).alias("vec_id"),
+        F.concat(
+            F.array(F.element_at("embedding", 1) + F.lit(0.1)),
+            F.slice("embedding", 2, 1_000_000),
+        ).alias("embedding"),
+    )
+    return e, e.unionByName(pert)
+
+
 def _embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate detection. The corpus is the
     embeddings table unioned with perturbed copies (vec_id + 100000,
@@ -999,17 +1018,7 @@ def _embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     num_blocks × input. Same double arithmetic as dot/(na*nb)."""
     from tidyvec_spark.operators.dedup import embedding_near_dup_pairs
 
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    pert = e.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("embedding", 1) + F.lit(0.1)),
-            F.slice("embedding", 2, 1_000_000),
-        ).alias("embedding"),
-    )
-    allv = e.unionByName(pert)
+    _, allv = _perturbed_embeddings(spark, sf_dir)
     return embedding_near_dup_pairs(
         allv, "embedding", "vec_id", threshold=0.98, round_to=R
     )
@@ -1041,17 +1050,7 @@ def _semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade the clustering buys its cost bound with."""
     from tidyvec_spark.operators.semdedup import semantic_dedup
 
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    pert = e.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("embedding", 1) + F.lit(0.1)),
-            F.slice("embedding", 2, 1_000_000),
-        ).alias("embedding"),
-    )
-    allv = e.unionByName(pert)
+    e, allv = _perturbed_embeddings(spark, sf_dir)
     cents = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("centroid"),
@@ -1100,17 +1099,7 @@ def _lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose pair shares a bucket — deterministic given the fixed planes."""
     from tidyvec_spark.operators.dedup import lsh_near_dup_pairs
 
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    pert = e.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("embedding", 1) + F.lit(0.1)),
-            F.slice("embedding", 2, 1_000_000),
-        ).alias("embedding"),
-    )
-    allv = e.unionByName(pert)
+    _, allv = _perturbed_embeddings(spark, sf_dir)
     return lsh_near_dup_pairs(
         allv, "embedding", "vec_id", planes=_ann_planes(),
         threshold=0.98, round_to=R,
@@ -1125,17 +1114,7 @@ def _bucketed_gemm_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     share a bucket), so the oracle SQL is identical."""
     from tidyvec_spark.operators.dedup import bucket_gemm_near_dup_pairs
 
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    pert = e.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("embedding", 1) + F.lit(0.1)),
-            F.slice("embedding", 2, 1_000_000),
-        ).alias("embedding"),
-    )
-    allv = e.unionByName(pert)
+    _, allv = _perturbed_embeddings(spark, sf_dir)
     return bucket_gemm_near_dup_pairs(
         allv, "embedding", "vec_id", planes=_ann_planes(),
         threshold=0.98, round_to=R,
@@ -1151,17 +1130,7 @@ def _lsh_near_dup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidyvec_spark.operators.ann import random_planes
     from tidyvec_spark.operators.dedup import lsh_near_dup_pairs_multi
 
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    pert = e.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("embedding", 1) + F.lit(0.1)),
-            F.slice("embedding", 2, 1_000_000),
-        ).alias("embedding"),
-    )
-    allv = e.unionByName(pert)
+    _, allv = _perturbed_embeddings(spark, sf_dir)
     tables = [
         random_planes(_ANN_DIM, nbits=_ANN_NBITS, seed=s) for s in (42, 43)
     ]
@@ -1243,17 +1212,7 @@ def _dedup_recall_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_near_dup_pairs,
     )
 
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    pert = e.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("embedding", 1) + F.lit(0.1)),
-            F.slice("embedding", 2, 1_000_000),
-        ).alias("embedding"),
-    )
-    allv = e.unionByName(pert)
+    _, allv = _perturbed_embeddings(spark, sf_dir)
     truth = embedding_near_dup_pairs(
         allv, "embedding", "vec_id", threshold=0.98
     ).select("id_a", "id_b").persist()

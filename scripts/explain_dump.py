@@ -7,13 +7,14 @@ Writes ``<out_dir>/<name>_<suffix>.txt`` for each named entry, or for
 every registry entry when none are named, built at $SPARK_GRAFT_SF_DIR
 (default sf0.1) on the bench session (``bench.session``) with AQE off:
 an un-executed AdaptiveSparkPlan hides the operator details this dump
-exists to show. Expression ids (``#123``), ``plan_id=`` values, RDD ids
-and the random names of ``tempfile.mkdtemp`` staging dirs are replaced
-by placeholders, so two checkouts that build the same plans write
-byte-identical files. The script imports the registry of the checkout
-it sits in, and Spark's Python workers import ``tidyvec_spark`` from the
-working directory: run a copy from the root of each checkout and
-``diff -r`` the two output directories.
+exists to show. Expression ids (``#123``), ``plan_id=`` values, RDD ids,
+the random names of ``tempfile.mkdtemp`` staging dirs and the numbers
+of lambda variables (``lambda x_1141``, from a process-wide PySpark
+counter) are replaced by placeholders, so two checkouts that build the
+same plans write byte-identical files. The script imports the registry
+of the checkout it sits in, and Spark's Python workers import
+``tidyvec_spark`` from the working directory: run a copy from the root
+of each checkout and ``diff -r`` the two output directories.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ _VOLATILE = (
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s\],]+"), "TMPDIR"),
+    (re.compile(r"lambda (\w+)_\d+\b"), r"lambda \1_N"),
 )
 
 

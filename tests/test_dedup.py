@@ -481,6 +481,71 @@ def test_bucket_gemm_invariant_to_sub_blocks(spark, emb_corpus):
         assert got == base, f"sub_blocks={nb}"
 
 
+def test_gemm_near_dup_operators_share_one_kernel(spark, emb_corpus):
+    # the exact, bucketed and semantic operators run one tile kernel:
+    # three blocks over one group (no key, the bucket 0 of zero planes,
+    # one centroid) and one block per cluster give the identical set
+    from tidyvec_spark.operators.semdedup import semantic_dedup_pairs
+
+    def pairset(df):
+        return {(r["id_a"], r["id_b"], r["similarity"]) for r in df.collect()}
+
+    kw = dict(threshold=0.9, round_to=6)
+    exact = pairset(
+        dedup.embedding_near_dup_pairs(
+            emb_corpus, "embedding", "vec_id", num_blocks=3, **kw
+        )
+    )
+    assert exact, "planted near-dups must produce pairs"
+    bucketed = pairset(
+        dedup.bucket_gemm_near_dup_pairs(
+            emb_corpus, "embedding", "vec_id", planes=[], sub_blocks=3, **kw
+        )
+    )
+    assert bucketed == exact
+    cents = spark.createDataFrame(
+        [(0, [1.0] * 64)], "centroid_id INT, centroid ARRAY<DOUBLE>"
+    )
+    n = emb_corpus.count()
+    tile_rows = -(-n // 3)
+    assert -(-n // tile_rows) == 3  # the one cluster gets 3 blocks
+    tiled = semantic_dedup_pairs(
+        emb_corpus, "embedding", "vec_id", cents, tile_rows=tile_rows, **kw
+    )
+    assert pairset(tiled) == exact
+    dedup.release(tiled)
+    untiled = semantic_dedup_pairs(
+        emb_corpus, "embedding", "vec_id", cents, tile_rows=None, **kw
+    )
+    assert pairset(untiled) == exact
+
+
+def test_banding_knobs_raise_before_any_job(spark):
+    # one _validate_banding per fingerprint family: a bands value that
+    # does not divide the fingerprint width raises before a job fires
+    sc = spark.sparkContext._jsc.sc()
+
+    def last_job_id():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return max(
+            (jobs.apply(i).jobId() for i in range(jobs.size())), default=-1
+        )
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id LONG, text STRING")
+    media = spark.createDataFrame(
+        [(1, bytearray(b"x"))], "doc_id LONG, content BINARY"
+    )
+    before = last_job_id()
+    with pytest.raises(ValueError, match="must divide"):
+        dedup.simhash_pairs(docs, "text", "doc_id", bits=32, bands=5)
+    with pytest.raises(ValueError, match="must divide"):
+        dedup.image_near_dup_pairs(media, "content", "doc_id", bands=5)
+    with pytest.raises(ValueError, match="must divide"):
+        dedup.audio_near_dup_pairs(media, "content", "doc_id", bands=5)
+    assert last_job_id() == before
+
+
 def test_incremental_near_dup_equals_full_recompute(spark, corpus):
     """The continuous-ingest contract: pairs(old) ∪ incremental(new vs
     index) == pairs(old ∪ new). Band membership is per-document, so the
@@ -1359,13 +1424,15 @@ def test_gemm_near_dup_paths_skip_null_embeddings(spark):
     }
     assert got == {(1, 2)}
     planes = random_planes(2, nbits=2, seed=7)
-    got2 = {
-        (r["id_a"], r["id_b"])
-        for r in bucket_gemm_near_dup_pairs(
-            df, "embedding", "vec_id", planes, threshold=0.9,
-        ).collect()
-    }
-    assert got2 == {(1, 2)}
+    for sb in (1, 2):
+        got2 = {
+            (r["id_a"], r["id_b"])
+            for r in bucket_gemm_near_dup_pairs(
+                df, "embedding", "vec_id", planes, threshold=0.9,
+                sub_blocks=sb,
+            ).collect()
+        }
+        assert got2 == {(1, 2)}, f"sub_blocks={sb}"
 
 
 def test_dup_ngram_coverage_exact(spark):

@@ -118,6 +118,7 @@ def test_embedding_near_dup_never_driver_collects():
     from tidyvec_spark.operators import dedup
 
     for fn in (
+        dedup._gemm_pairs,
         dedup.embedding_near_dup_pairs,
         dedup.bucket_gemm_near_dup_pairs,
         dedup.lsh_near_dup_pairs,

@@ -655,18 +655,6 @@ def decontaminate_fuzzy(
     )
 
 
-def _pair_schema(id_type):
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    return StructType(
-        [
-            StructField("id_a", id_type, False),
-            StructField("id_b", id_type, False),
-            StructField("similarity", DoubleType(), False),
-        ]
-    )
-
-
 def _cos_block(ida, A, idb, B, thr, nd, upper_only):
     """One BLAS block of the cosine pair kernel: ``A @ B.T`` with hoisted
     L2 norms, threshold mask, id ordering. ``upper_only`` restricts to
@@ -693,6 +681,74 @@ def _cos_block(ida, A, idb, B, thr, nd, upper_only):
     return pd.DataFrame({"id_a": left, "id_b": right, "similarity": cos[ai, bj]})
 
 
+def _gemm_pairs(src, keys, blocks, threshold, round_to) -> DataFrame:
+    """The one cosine tile kernel of the embedding near-dup operators:
+    (id_a, id_b, similarity) for every pair of an ``(id, v, *keys)``
+    frame that shares all ``keys`` and whose (rounded) cosine clears
+    ``threshold``, id_a < id_b.
+
+    Block-pair tiling: every row is hashed to one of ``blocks`` blocks
+    (deterministic xxhash64; ``blocks`` is an int or a per-row int
+    column) and replicated to each block-pair (min(p,q), max(p,q)) it
+    belongs to, so each unordered same-key pair meets in exactly one
+    ``groupBy(*keys, __lo, __hi)`` group. Each group is one BLAS tile
+    ``A @ B.T`` inside ``applyInPandas``: shuffle volume is
+    ``blocks × input``, per-task memory ``2·|group|/blocks`` rows, and
+    the pair set does not depend on ``blocks``."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    id_type = src.schema["id"].dataType
+    nb = F.lit(blocks) if isinstance(blocks, int) else blocks
+    tasks = (
+        src.withColumn("__blk", F.pmod(F.xxhash64(F.col("id")), nb).cast("int"))
+        .select(
+            "id",
+            "v",
+            *keys,
+            "__blk",
+            F.explode(F.sequence(F.lit(0), nb - 1)).alias("__q"),
+        )
+        .select(
+            "id",
+            "v",
+            *keys,
+            "__blk",
+            F.least("__blk", "__q").alias("__lo"),
+            F.greatest("__blk", "__q").alias("__hi"),
+        )
+    )
+
+    thr = float(threshold)
+    nd = None if round_to is None else int(round_to)
+
+    def gemm_tile(key, pdf):
+        import numpy as np
+        import pandas as pd
+
+        lo, hi = key[-2:]
+        a = pdf if lo == hi else pdf[pdf["__blk"] == lo]
+        b = a if lo == hi else pdf[pdf["__blk"] == hi]
+        if len(a) == 0 or len(b) == 0:
+            return pd.DataFrame(columns=["id_a", "id_b", "similarity"])
+        A = np.vstack(a["v"].to_numpy()).astype(np.float64)
+        B = A if lo == hi else np.vstack(b["v"].to_numpy()).astype(np.float64)
+        return _cos_block(
+            a["id"].to_numpy(), A, b["id"].to_numpy(), B, thr, nd,
+            upper_only=lo == hi,
+        )
+
+    schema = StructType(
+        [
+            StructField("id_a", id_type, False),
+            StructField("id_b", id_type, False),
+            StructField("similarity", DoubleType(), False),
+        ]
+    )
+    return tasks.groupBy(*keys, "__lo", "__hi").applyInPandas(
+        gemm_tile, schema=schema
+    )
+
+
 def embedding_near_dup_pairs(
     df: DataFrame,
     emb_col: str,
@@ -704,16 +760,17 @@ def embedding_near_dup_pairs(
     """Exact all-pairs embedding-cosine near-dup pairs via a fully
     distributed block-pair GEMM — no driver collect, no broadcast.
 
-    The O(n²) pair space is tiled into ``num_blocks²`` block-pairs:
-    every row is hashed to a block (deterministic xxhash64), replicated
-    to each of the ``num_blocks`` block-pairs it participates in, and
-    each block-pair group computes its tile as one ``A @ B.T`` BLAS
-    call inside ``applyInPandas``, emitting only pairs whose (rounded)
-    cosine clears the threshold. Versus one codegen expression per pair
-    this is a ~10x win at equal semantics; versus the previous
-    broadcast formulation it removes the driver-memory ceiling: shuffle
-    volume is ``num_blocks × input``, per-task memory is
-    ``2·n/num_blocks`` rows, and both tune independently of driver RAM.
+    The O(n²) pair space is tiled into ``num_blocks²`` block-pairs by
+    the shared tile kernel (:func:`_gemm_pairs`, with no grouping key):
+    every row is hashed to a block, replicated to each of the
+    ``num_blocks`` block-pairs it participates in, and each block-pair
+    group computes its tile as one ``A @ B.T`` BLAS call inside
+    ``applyInPandas``, emitting only pairs whose (rounded) cosine
+    clears the threshold. Versus one codegen expression per pair this
+    is a ~10x win at equal semantics; versus the previous broadcast
+    formulation it removes the driver-memory ceiling: shuffle volume is
+    ``num_blocks × input``, per-task memory is ``2·n/num_blocks`` rows,
+    and both tune independently of driver RAM.
 
     Scale shape: exact all-pairs is inherently O(n²·d) compute — that
     is the price of exactness, paid in distributed BLAS tiles here. Set
@@ -724,9 +781,6 @@ def embedding_near_dup_pairs(
 
     Returns (id_a, id_b, similarity) with id_a < id_b.
     """
-    import numpy as np
-
-    id_type = df.schema[id_col].dataType
     nb = int(num_blocks)
     if nb < 1:
         raise ValueError(f"num_blocks must be >= 1, got {num_blocks}")
@@ -737,53 +791,8 @@ def embedding_near_dup_pairs(
             F.col(id_col).alias("id"),
             F.col(emb_col).cast("array<double>").alias("v"),
         )
-    ).withColumn("__blk", F.pmod(F.xxhash64(F.col("id")), F.lit(nb)).cast("int"))
-
-    # a row in block p joins every block-pair (min(p,q), max(p,q)) —
-    # each unordered pair of rows meets in exactly one group
-    tasks = src.select(
-        "id",
-        "v",
-        "__blk",
-        F.explode(F.sequence(F.lit(0), F.lit(nb - 1))).alias("__q"),
-    ).select(
-        "id",
-        "v",
-        "__blk",
-        F.least("__blk", "__q").alias("__lo"),
-        F.greatest("__blk", "__q").alias("__hi"),
     )
-
-    thr = float(threshold)
-    nd = None if round_to is None else int(round_to)
-
-    def gemm(key, pdf):
-        import pandas as pd
-
-        lo, hi = key
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=["id_a", "id_b", "similarity"])
-        if lo == hi:
-            ids = pdf["id"].to_numpy()
-            M = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            return _cos_block(ids, M, ids, M, thr, nd, upper_only=True)
-        a = pdf[pdf["__blk"] == lo]
-        b = pdf[pdf["__blk"] == hi]
-        if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame(columns=["id_a", "id_b", "similarity"])
-        return _cos_block(
-            a["id"].to_numpy(),
-            np.vstack(a["v"].to_numpy()).astype(np.float64),
-            b["id"].to_numpy(),
-            np.vstack(b["v"].to_numpy()).astype(np.float64),
-            thr,
-            nd,
-            upper_only=False,
-        )
-
-    return tasks.groupBy("__lo", "__hi").applyInPandas(
-        gemm, schema=_pair_schema(id_type)
-    )
+    return _gemm_pairs(src, [], nb, threshold, round_to)
 
 
 def bucket_gemm_near_dup_pairs(
@@ -797,8 +806,9 @@ def bucket_gemm_near_dup_pairs(
 ) -> DataFrame:
     """LSH-bucket-then-GEMM near-dup — the 100 TB default for
     embedding near-dup: hyperplane bucket (map-side sign-bit
-    expression, operators/ann.py) as the grouping key, the dense GEMM
-    kernel run *within each bucket* via ``applyInPandas``.
+    expression, operators/ann.py) as the grouping key of the shared
+    tile kernel (:func:`_gemm_pairs`), so the dense GEMM runs *within
+    each bucket* via ``applyInPandas``.
 
     Identical result set to :func:`lsh_near_dup_pairs` (pairs
     restricted to same-bucket candidates) but the per-bucket
@@ -810,19 +820,16 @@ def bucket_gemm_near_dup_pairs(
 
     ``sub_blocks`` bounds per-task memory against SKEWED buckets (near-
     dup corpora concentrate by construction — one popular template can
-    own a bucket): each bucket is additionally tiled by the same
-    block-pair decomposition as :func:`embedding_near_dup_pairs`, so a
-    task holds at most ``2·|bucket|/sub_blocks`` rows at the cost of
-    ``sub_blocks×`` replication. The pair set is invariant to the
-    choice (every same-bucket pair meets in exactly one tile).
+    own a bucket): it is the kernel's block count, so each bucket is
+    tiled into ``sub_blocks²`` block-pairs and a task holds at most
+    ``2·|bucket|/sub_blocks`` rows at the cost of ``sub_blocks×``
+    replication. The pair set is invariant to the choice (every
+    same-bucket pair meets in exactly one tile).
 
     Returns (id_a, id_b, similarity) with id_a < id_b.
     """
-    import numpy as np
-
     from tidyvec_spark.operators.ann import hyperplane_bucket_expr
 
-    id_type = df.schema[id_col].dataType
     nb = int(sub_blocks)
     if nb < 1:
         raise ValueError(f"sub_blocks must be >= 1, got {sub_blocks}")
@@ -834,73 +841,7 @@ def bucket_gemm_near_dup_pairs(
         F.col(id_col).alias("id"),
         F.col(emb_col).cast("array<double>").alias("v"),
     ).withColumn("__bucket", hyperplane_bucket_expr("v", planes))
-
-    thr = float(threshold)
-    nd = None if round_to is None else int(round_to)
-
-    if nb == 1:
-
-        def gemm(pdf):
-            import pandas as pd
-
-            if len(pdf) < 2:
-                return pd.DataFrame(columns=["id_a", "id_b", "similarity"])
-            ids = pdf["id"].to_numpy()
-            M = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            return _cos_block(ids, M, ids, M, thr, nd, upper_only=True)
-
-        return src.groupBy("__bucket").applyInPandas(
-            gemm, schema=_pair_schema(id_type)
-        )
-
-    tasks = (
-        src.withColumn(
-            "__blk", F.pmod(F.xxhash64(F.col("id")), F.lit(nb)).cast("int")
-        )
-        .select(
-            "id",
-            "v",
-            "__bucket",
-            "__blk",
-            F.explode(F.sequence(F.lit(0), F.lit(nb - 1))).alias("__q"),
-        )
-        .select(
-            "id",
-            "v",
-            "__bucket",
-            "__blk",
-            F.least("__blk", "__q").alias("__lo"),
-            F.greatest("__blk", "__q").alias("__hi"),
-        )
-    )
-
-    def gemm_tile(key, pdf):
-        import pandas as pd
-
-        _, lo, hi = key
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=["id_a", "id_b", "similarity"])
-        if lo == hi:
-            ids = pdf["id"].to_numpy()
-            M = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            return _cos_block(ids, M, ids, M, thr, nd, upper_only=True)
-        a = pdf[pdf["__blk"] == lo]
-        b = pdf[pdf["__blk"] == hi]
-        if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame(columns=["id_a", "id_b", "similarity"])
-        return _cos_block(
-            a["id"].to_numpy(),
-            np.vstack(a["v"].to_numpy()).astype(np.float64),
-            b["id"].to_numpy(),
-            np.vstack(b["v"].to_numpy()).astype(np.float64),
-            thr,
-            nd,
-            upper_only=False,
-        )
-
-    return tasks.groupBy("__bucket", "__lo", "__hi").applyInPandas(
-        gemm_tile, schema=_pair_schema(id_type)
-    )
+    return _gemm_pairs(src, ["__bucket"], nb, threshold, round_to)
 
 
 def lsh_near_dup_pairs(
@@ -1012,8 +953,7 @@ def simhash_pairs(
 
     Returns (id_a, id_b, hamming) with id_a < id_b.
     """
-    if bits % bands != 0:
-        raise ValueError(f"bands={bands} must divide bits={bits}")
+    _validate_banding(bits, bands, max_hamming, complete=False)
     band_bits = bits // bands
     # persist: the fingerprint (bits × tokens md5 votes) is the expensive
     # map-side expression; without this the self-join evaluates it twice
@@ -2335,7 +2275,6 @@ def image_near_dup_pairs(
     """
     from tidyvec_spark.operators.multimodal import image_ahash
 
-    _validate_banding(64, bands, max_hamming, complete)
     fps = (
         image_ahash(
             ensure_parallelism(df).select(id_col, content_col), content_col
@@ -2351,9 +2290,10 @@ def image_near_dup_pairs(
 def _validate_banding(
     bits: int, bands: int, max_hamming: int, complete: bool
 ) -> None:
-    """Eager argument check shared by the bitstring near-dup family —
-    runs BEFORE any plan is built so a bad knob combination surfaces
-    as the real error, not behind a downstream analysis failure."""
+    """Eager argument check shared by the SimHash and bitstring near-dup
+    families — runs before any job fires (and before any persist) so a
+    bad knob combination surfaces as the real error, not behind a
+    downstream analysis failure."""
     if bits % int(bands) != 0:
         raise ValueError(f"bands={bands} must divide {bits}")
     if complete and int(max_hamming) >= int(bands):
@@ -2464,7 +2404,6 @@ def audio_near_dup_pairs(
     """
     from tidyvec_spark.operators.multimodal import audio_envelope_hash
 
-    _validate_banding(int(windows), bands, max_hamming, complete)
     fps = (
         audio_envelope_hash(
             ensure_parallelism(df).select(id_col, content_col),

@@ -10,9 +10,10 @@ building them as reusable plan fragments:
 - assignment: :func:`tidyvec_spark.operators.ann.ivf_assign` —
   map-side nearest-centroid (literal projection or broadcast-matrix
   argmin; zero shuffle);
-- within-cluster pairs: the dense-GEMM block kernel from
-  ``operators/dedup.py`` applied per cluster via ``applyInPandas`` —
-  ONE shuffle on the cluster id, one BLAS tile per cluster.
+- within-cluster pairs: the cosine tile kernel shared by every
+  embedding near-dup operator (``dedup._gemm_pairs``) with the cluster
+  id as its grouping key — ONE shuffle on the cluster id, BLAS tiles
+  via ``applyInPandas``.
 
 Keep rule (``semantic_dedup``): a row is dropped iff it is the larger
 id of any over-threshold same-cluster pair — "keep the smallest id of
@@ -26,13 +27,13 @@ is available by feeding :func:`semantic_dedup_pairs` into
 Scale: cluster sizes are the skew profile, and near-dup farms CLUSTER
 TOGETHER — that is the point of the operator — so the hot centroid is
 the expected case, not the tail. ``tile_rows`` bounds the per-task
-GEMM against it: clusters above the threshold are tiled by the same
-block-pair decomposition as ``bucket_gemm_near_dup_pairs``, with the
-block count chosen PER CLUSTER from its measured size (one bounded
-agg, rows = k), so a task holds at most ~2·tile_rows vectors no
-matter how skewed the assignment is, clusters under the threshold pay
-zero replication, and the pair set is invariant to the choice (every
-same-cluster pair meets in exactly one tile).
+GEMM against it: it sets the kernel's block count PER CLUSTER from the
+measured size (one bounded agg, rows = k), so clusters above the
+threshold are split into block-pair tiles and a task holds at most
+~2·tile_rows vectors no matter how skewed the assignment is, clusters
+under the threshold get one block and pay zero replication, and the
+pair set is invariant to the choice (every same-cluster pair meets in
+exactly one tile).
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tidyvec_spark.operators.ann import ivf_assign
-from tidyvec_spark.operators.dedup import _cos_block, _pair_schema
+from tidyvec_spark.operators.dedup import _gemm_pairs, _with_persisted
 from tidyvec_spark.partitioning import ensure_parallelism
 
 __all__ = ["semantic_dedup_pairs", "semantic_dedup"]
@@ -66,15 +67,12 @@ def semantic_dedup_pairs(
     one BLAS ``A @ A.T`` per cluster behind a single shuffle on the
     centroid id.
 
-    ``tile_rows``: clusters larger than this are sub-block-tiled (the
-    ``bucket_gemm_near_dup_pairs`` decomposition, block count =
-    ceil(|cluster| / tile_rows) chosen per cluster from the measured
-    size — one k-row agg broadcast back), so one hot centroid cannot
-    make one |cluster|²·d task. ``None`` disables tiling (one tile per
-    cluster regardless of size)."""
-    import numpy as np  # noqa: F401  (kernel dependency, fail early)
-
-    id_type = df.schema[id_col].dataType
+    ``tile_rows``: clusters larger than this are split into block-pair
+    tiles by the shared tile kernel (``dedup._gemm_pairs``), block
+    count = ceil(|cluster| / tile_rows) chosen per cluster from the
+    measured size — one k-row agg broadcast back — so one hot centroid
+    cannot make one |cluster|²·d task. ``None`` means one block per
+    cluster regardless of size."""
     # the engine-wide NULL-embedding law: a NULL vector is neither
     # anchor nor candidate (it cannot be scored), so it never enters
     # a cluster tile — and never reaches the GEMM's np.vstack
@@ -92,95 +90,29 @@ def semantic_dedup_pairs(
         cent_vec=cent_vec,
         strategy=assign_strategy,
     )
-    thr = float(threshold)
-    nd = None if round_to is None else int(round_to)
-
-    if tile_rows is None:
-
-        def gemm(pdf):
-            import numpy as np
-            import pandas as pd
-
-            if len(pdf) < 2:
-                return pd.DataFrame(
-                    columns=["id_a", "id_b", "similarity"]
-                )
-            ids = pdf["id"].to_numpy()
-            M = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            return _cos_block(ids, M, ids, M, thr, nd, upper_only=True)
-
-        return assigned.groupBy(cent_id).applyInPandas(
-            gemm, schema=_pair_schema(id_type)
+    # tile_rows=None: one block per cluster
+    blocks, handles = 1, []
+    if tile_rows is not None:
+        tr = int(tile_rows)
+        if tr < 2:
+            raise ValueError(f"tile_rows must be >= 2, got {tile_rows}")
+        # the assignment subtree feeds BOTH the size histogram and the
+        # tasks join — persist it so the corpus is assigned once, and
+        # ride the handle on the result (the dedup.py release()
+        # convention)
+        assigned = assigned.persist()
+        handles = [assigned]
+        # per-cluster block count from the measured size: bounded agg
+        # (rows = k clusters) broadcast back; small clusters get __nb=1
+        # (single tile, zero replication)
+        sizes = assigned.groupBy(cent_id).agg(
+            F.ceil(F.count(F.lit(1)) / F.lit(tr)).cast("int").alias("__nb")
         )
-
-    tr = int(tile_rows)
-    if tr < 2:
-        raise ValueError(f"tile_rows must be >= 2, got {tile_rows}")
-    # the assignment subtree feeds BOTH the size histogram and the
-    # tasks join — persist it so the corpus is assigned once, and ride
-    # the handle on the result (the dedup.py release() convention)
-    assigned = assigned.persist()
-    # per-cluster block count from the measured size: bounded agg
-    # (rows = k clusters) broadcast back; small clusters get __nb=1
-    # (single tile, zero replication)
-    sizes = assigned.groupBy(cent_id).agg(
-        F.ceil(F.count(F.lit(1)) / F.lit(tr)).cast("int").alias("__nb")
+        assigned = assigned.join(F.broadcast(sizes), cent_id)
+        blocks = F.col("__nb")
+    return _with_persisted(
+        _gemm_pairs(assigned, [cent_id], blocks, threshold, round_to), handles
     )
-    tasks = (
-        assigned.join(F.broadcast(sizes), cent_id)
-        .withColumn(
-            "__blk",
-            F.pmod(F.xxhash64(F.col("id")), F.col("__nb")).cast("int"),
-        )
-        .select(
-            "id",
-            "v",
-            cent_id,
-            "__blk",
-            F.explode(
-                F.sequence(F.lit(0), F.col("__nb") - 1)
-            ).alias("__q"),
-        )
-        .select(
-            "id",
-            "v",
-            cent_id,
-            "__blk",
-            F.least("__blk", "__q").alias("__lo"),
-            F.greatest("__blk", "__q").alias("__hi"),
-        )
-    )
-
-    def gemm_tile(key, pdf):
-        import numpy as np
-        import pandas as pd
-
-        _, lo, hi = key
-        if len(pdf) < 2 and lo == hi:
-            return pd.DataFrame(columns=["id_a", "id_b", "similarity"])
-        if lo == hi:
-            ids = pdf["id"].to_numpy()
-            M = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            return _cos_block(ids, M, ids, M, thr, nd, upper_only=True)
-        a = pdf[pdf["__blk"] == lo]
-        b = pdf[pdf["__blk"] == hi]
-        if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame(columns=["id_a", "id_b", "similarity"])
-        return _cos_block(
-            a["id"].to_numpy(),
-            np.vstack(a["v"].to_numpy()).astype(np.float64),
-            b["id"].to_numpy(),
-            np.vstack(b["v"].to_numpy()).astype(np.float64),
-            thr,
-            nd,
-            upper_only=False,
-        )
-
-    out = tasks.groupBy(cent_id, "__lo", "__hi").applyInPandas(
-        gemm_tile, schema=_pair_schema(id_type)
-    )
-    out._tidyvec_persisted = [assigned]
-    return out
 
 
 def semantic_dedup(
@@ -210,5 +142,4 @@ def semantic_dedup(
     )
     # ride the pair generator's persisted assignment handle through
     # so callers can release() after their terminal action
-    out._tidyvec_persisted = getattr(pairs, "_tidyvec_persisted", [])
-    return out
+    return _with_persisted(out, getattr(pairs, "_tidyvec_persisted", []))
