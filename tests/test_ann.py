@@ -43,6 +43,19 @@ def test_multiprobe_sizes():
     assert len(ann.multiprobe_buckets(5, 8, hamming=2)) == 9 + 28
 
 
+def test_multiprobe_radius_is_the_hamming_ball():
+    """Radius h probes exactly the buckets within Hamming h, for every
+    h: radius 3 is not radius 2, radius >= nbits is every bucket, and a
+    negative radius is an error rather than radius 0."""
+    for h in range(6):
+        want = sorted(b for b in range(16) if bin(b ^ 5).count("1") <= h)
+        assert ann.multiprobe_buckets(5, 4, hamming=h) == want
+    assert len(ann.multiprobe_buckets(0, 4, 3)) == 15
+    assert ann.multiprobe_buckets(0, 4, 9) == list(range(16))
+    with pytest.raises(ValueError, match="probe_hamming"):
+        ann.multiprobe_buckets(0, 4, -1)
+
+
 def test_lsh_topk_finds_self(emb, qvec):
     out = ann.ann_lsh_topk(
         emb, "embedding", "vec_id", qvec, k=10, nbits=8, probe_hamming=1,
@@ -306,3 +319,97 @@ def test_hyperplane_bucket_sql_path_matches_column_path(spark):
         ).collect()
     }
     assert got_sql == got_col
+
+
+def test_null_embeddings_are_never_search_candidates(spark):
+    """The engine NULL-embedding law in the top-k and join operators:
+    a NULL vector is neither a candidate nor a query. Every NULL lands
+    in LSH bucket 0, and so does this query, so a probe of bucket 0
+    alone used to return only the NULL rows."""
+    from tidyvec_spark.operators.nearest import (
+        similarity_join_exact,
+        similarity_join_lsh,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [-1.0, 0.5]), (4, None)],
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+    )
+    planes = [[0.0, 1.0]]
+    q = [1.0, -0.1]
+    queries = spark.createDataFrame(
+        [(10, q), (11, None)], "qid LONG, qv ARRAY<DOUBLE>"
+    )
+    assert ann.query_bucket(q, planes) == 0
+    assert ann.ann_lsh_topk(
+        df, "embedding", "vec_id", q, k=3, planes=planes, probe_hamming=0
+    ).collect() == []
+    assert ann.ann_lsh_topk_batch(
+        df, "embedding", "vec_id", queries, "qid", "qv", planes,
+        k=3, probe_hamming=0,
+    ).collect() == []
+    assert similarity_join_lsh(
+        queries, df, "qv", "embedding", planes,
+        left_id="qid", right_id="vec_id", k=3,
+    ).collect() == []
+    got = ann.ann_lsh_topk(
+        df, "embedding", "vec_id", q, k=3, planes=planes, probe_hamming=1,
+        round_to=6,
+    ).collect()
+    assert [r["vec_id"] for r in got] == [1, 3]
+    exact = ann.exact_topk_batch(
+        df, "embedding", "vec_id", queries, "qid", "qv", k=3, round_to=6
+    ).collect()
+    assert [(r["qid"], r["vec_id"], r["rank"]) for r in exact] == [
+        (10, 1, 1), (10, 3, 2)
+    ]
+    joined = similarity_join_exact(
+        queries, df, "qv", "embedding",
+        left_id="qid", right_id="vec_id", k=3, round_to=6,
+    ).collect()
+    assert sorted((r["qid"], r["vec_id"]) for r in joined) == [(10, 1), (10, 3)]
+    assert all(r["similarity"] is not None for r in exact + joined)
+
+
+def test_full_probe_lsh_equals_exact_through_one_window(spark, emb):
+    """With 2 planes a radius-2 probe covers every bucket, so the LSH
+    batch search and the LSH join must reproduce their exact twins row
+    for row, ranks and tie order included."""
+    from tidyvec_spark.operators.nearest import (
+        similarity_join_exact,
+        similarity_join_lsh,
+    )
+
+    planes = ann.random_planes(64, nbits=2, seed=42)
+    corpus = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    queries = corpus.filter(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+
+    def rows(df, cols):
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    cols = ("qid", "vec_id", "similarity", "rank")
+    lsh = ann.ann_lsh_topk_batch(
+        corpus, "embedding", "vec_id", queries, "qid", "qv", planes,
+        k=3, probe_hamming=2, round_to=6,
+    )
+    exact = ann.exact_topk_batch(
+        corpus, "embedding", "vec_id", queries, "qid", "qv", k=3, round_to=6
+    )
+    got = rows(lsh, cols)
+    assert len(got) == 60 and got == rows(exact, cols)
+
+    cols = ("qid", "vec_id", "similarity")
+    jl = similarity_join_lsh(
+        queries, corpus, "qv", "embedding", planes,
+        left_id="qid", right_id="vec_id", k=3, probe_hamming=2, round_to=6,
+    )
+    je = similarity_join_exact(
+        queries, corpus, "qv", "embedding",
+        left_id="qid", right_id="vec_id", k=3, round_to=6,
+    )
+    got = rows(jl, cols)
+    assert len(got) == 60 and got == rows(je, cols)

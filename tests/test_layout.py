@@ -8,11 +8,7 @@ from pyspark.sql import functions as F
 
 from tidyvec_spark import plans as P
 from tidyvec_spark.operators import ann
-from tidyvec_spark.sources.layout import (
-    ann_lsh_topk_pruned,
-    write_bucket_partitioned,
-    write_centroid_partitioned,
-)
+from tidyvec_spark.sources.layout import write_centroid_partitioned
 
 SF = "/root/testdata/sf0.001"
 
@@ -31,16 +27,20 @@ def planes():
 
 @pytest.fixture(scope="module")
 def bucketed_path(spark, emb, planes, tmp_path_factory):
+    from tidyvec_spark import vec
+    from tidyvec_spark.sources import write_vec
+
     path = str(tmp_path_factory.mktemp("layout") / "bucketed")
-    write_bucket_partitioned(emb, path, "embedding", planes)
+    write_vec(vec(emb, dim=64), path, index={"kind": "lsh", "planes": planes})
     return path
 
 
 def test_bucketed_layout_prunes_partitions(spark, emb, planes, bucketed_path):
+    from tidyvec_spark.sources import ann_topk_sidecar
+
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    df = ann_lsh_topk_pruned(
-        spark, bucketed_path, "embedding", "vec_id", qvec, planes,
-        k=10, probe_hamming=1, round_to=6,
+    df = ann_topk_sidecar(
+        spark, bucketed_path, qvec, "vec_id", k=10, probe_hamming=1, round_to=6
     )
     s = P.explain_str(df)
     # the probe IN-filter must land on the partition column, not a
@@ -50,10 +50,11 @@ def test_bucketed_layout_prunes_partitions(spark, emb, planes, bucketed_path):
 
 
 def test_bucketed_layout_matches_unpartitioned(spark, emb, planes, bucketed_path):
+    from tidyvec_spark.sources import ann_topk_sidecar
+
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    pruned = ann_lsh_topk_pruned(
-        spark, bucketed_path, "embedding", "vec_id", qvec, planes,
-        k=10, probe_hamming=1, round_to=6,
+    pruned = ann_topk_sidecar(
+        spark, bucketed_path, qvec, "vec_id", k=10, probe_hamming=1, round_to=6
     ).collect()
     full = ann.ann_lsh_topk(
         emb, "embedding", "vec_id", qvec, k=10, planes=planes,

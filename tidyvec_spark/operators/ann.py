@@ -27,7 +27,7 @@ error is a property of the parameters, not of run-to-run randomness.
 
 from __future__ import annotations
 
-import math
+import itertools
 import random
 from typing import Optional, Sequence
 
@@ -94,18 +94,159 @@ def query_bucket(query_vec: Sequence[float], planes: Sequence[Sequence[float]]) 
 
 
 def multiprobe_buckets(bucket: int, nbits: int, hamming: int = 1) -> list[int]:
-    """The probe set: all buckets within the given Hamming distance
-    (hamming=1 → nbits+1 buckets). Larger radius trades latency for
-    recall without touching the stored layout."""
-    probes = {bucket}
-    if hamming >= 1:
-        for i in range(nbits):
-            probes.add(bucket ^ (1 << i))
-    if hamming >= 2:
-        for i in range(nbits):
-            for j in range(i + 1, nbits):
-                probes.add(bucket ^ (1 << i) ^ (1 << j))
-    return sorted(probes)
+    """The probe set: all buckets within the given Hamming distance,
+    sorted (hamming=1 → nbits+1 buckets; a radius of ``nbits`` or more
+    covers all 2^nbits). Larger radius trades latency for recall
+    without touching the stored layout. ``multiprobe_buckets(0, nbits,
+    h)`` is the XOR-mask set the batched and join operators explode."""
+    if hamming < 0:
+        raise ValueError(f"probe_hamming must be >= 0, got {hamming}")
+    return sorted(
+        bucket ^ sum(1 << i for i in flips)
+        for r in range(min(int(hamming), nbits) + 1)
+        for flips in itertools.combinations(range(nbits), r)
+    )
+
+
+def _present(df: DataFrame, emb_col: str) -> DataFrame:
+    """The engine NULL-embedding law at candidate formation: a NULL
+    vector is never a candidate (nor a query). Without it every NULL
+    lands in bucket 0 (``CASE WHEN NULL >= 0 … ELSE 0``) and fills
+    top-k slots with NULL similarity."""
+    return df.filter(F.col(emb_col).isNotNull())
+
+
+def _score(a: Column, b: Column, method: str, round_to: Optional[int]) -> Column:
+    sim = similarity_expr(a, b, method)
+    return F.round(sim, round_to) if round_to is not None else sim
+
+
+def _lsh_probe(
+    df: DataFrame,
+    emb_col: str,
+    query: Sequence[float],
+    planes: Sequence[Sequence[float]],
+    probe_hamming: int,
+    bucket_col: Optional[str] = None,
+) -> DataFrame:
+    """Single-query multiprobe LSH (Lv et al., VLDB 2007): keep the rows
+    whose bucket lies within ``probe_hamming`` of the query's. The
+    filter lands on the stored ``bucket_col`` when given (directory
+    pruning on a bucket-partitioned layout), else on the map-side
+    bucket expression."""
+    probes = multiprobe_buckets(
+        query_bucket(query, planes), len(planes), probe_hamming
+    )
+    bucket = (
+        F.col(bucket_col) if bucket_col
+        else hyperplane_bucket_expr(emb_col, planes)
+    )
+    return df.filter(bucket.isin(probes))
+
+
+def _index_probe(
+    df: DataFrame,
+    emb_col: str,
+    query: Sequence[float],
+    spec: dict,
+    probe_hamming: Optional[int] = None,
+) -> DataFrame:
+    """:func:`_lsh_probe` through a persisted ``lsh`` index spec
+    (``write_vec(index=...)``). Tuned specs (evaluation.tune_lsh_params)
+    carry the radius that met the recall target; an explicit argument
+    overrides, absent both the radius is 1. The stored bucket column is
+    filtered when the frame has it."""
+    ph = probe_hamming if probe_hamming is not None else spec.get("probe_hamming", 1)
+    bcol = spec.get("bucket_col", "bucket")
+    return _lsh_probe(
+        df, emb_col, query, spec["planes"], int(ph),
+        bcol if bcol in df.columns else None,
+    )
+
+
+def _ivf_probes(
+    query: Sequence[float],
+    centroids: Sequence[Sequence[float]],
+    nprobe: int,
+    nd: int = 6,
+) -> list[int]:
+    """Driver-side IVF probe set: the list positions of the ``nprobe``
+    centroids nearest the query by squared L2 rounded to ``nd`` places,
+    ties to the smaller position — k distances over literal centroids."""
+    q = [float(x) for x in query]
+    ranked = sorted(
+        (round(sum((a - b) * (a - b) for a, b in zip(q, c)), nd), i)
+        for i, c in enumerate(centroids)
+    )
+    return [i for _, i in ranked[: int(nprobe)]]
+
+
+def _rerank(
+    cand: DataFrame,
+    emb_col: str,
+    id_col: str,
+    query: Sequence[float],
+    k: int,
+    method: str,
+    round_to: Optional[int],
+) -> DataFrame:
+    """Single-query rerank tail: exact score of every non-NULL
+    candidate, (similarity desc, id asc), top ``k`` as one
+    TakeOrderedAndProject. Returns (id, similarity)."""
+    return (
+        _present(cand, emb_col)
+        .withColumn(
+            "similarity",
+            _score(F.col(emb_col), array_lit(query), method, round_to),
+        )
+        .orderBy(F.desc("similarity"), F.asc(id_col))
+        .limit(int(k))
+        .select(id_col, "similarity")
+    )
+
+
+def _top_k_per(
+    df: DataFrame, by, score_col: str, id_col, k: int
+) -> DataFrame:
+    """Per-group top-``k``: ``row_number`` over (score desc, id asc)
+    within each ``by`` group, kept while ``<= k``; the rank is left in
+    ``__rn``. A shuffle of candidates only, never a global sort."""
+    w = Window.partitionBy(by).orderBy(F.desc(score_col), F.asc(id_col))
+    return df.withColumn("__rn", F.row_number().over(w)).filter(
+        F.col("__rn") <= int(k)
+    )
+
+
+def _query_rows(
+    queries: DataFrame, q_id_col: str, q_emb_col: str, *extra: Column
+) -> DataFrame:
+    return _present(queries, q_emb_col).select(
+        F.col(q_id_col).alias("__qid"),
+        F.col(q_emb_col).cast("array<double>").alias("__qv"),
+        *extra,
+    )
+
+
+def _batch_topk(
+    cand: DataFrame,
+    emb_col: str,
+    id_col: str,
+    q_id_col: str,
+    k: int,
+    method: str,
+    round_to: Optional[int],
+) -> DataFrame:
+    """The batched tail: score each candidate against its query's
+    ``__qv``, keep each query's top ``k`` → (q_id, id, similarity, rank)."""
+    cand = cand.withColumn(
+        "similarity", _score(F.col(emb_col), F.col("__qv"), method, round_to)
+    )
+    return _top_k_per(cand, "__qid", "similarity", id_col, k).select(
+        F.col("__qid").alias(q_id_col),
+        F.col(id_col),
+        "similarity",
+        F.col("__rn").cast("int").alias("rank"),
+    )
 
 
 def ann_lsh_topk(
@@ -122,7 +263,8 @@ def ann_lsh_topk(
     round_to: Optional[int] = None,
 ) -> DataFrame:
     """LSH-bucketed top-k: bucket filter (candidate pruning) → exact
-    rerank → TakeOrderedAndProject. Returns (id, similarity).
+    rerank → TakeOrderedAndProject. Returns (id, similarity); NULL
+    embeddings are never candidates.
 
     Physical shape at scale: the bucket predicate prunes before the
     similarity kernel runs; with the corpus partitioned by bucket the
@@ -130,23 +272,9 @@ def ann_lsh_topk(
     O(n · probes / 2^nbits).
     """
     if planes is None:
-        dim = len(query_vec)
-        planes = random_planes(dim, nbits=nbits, seed=seed)
-    nbits = len(planes)
-    qb = query_bucket(query_vec, planes)
-    probes = multiprobe_buckets(qb, nbits, probe_hamming)
-
-    sim = similarity_expr(F.col(emb_col), array_lit(query_vec), method)
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    return (
-        df.withColumn("__bucket", hyperplane_bucket_expr(emb_col, planes))
-        .filter(F.col("__bucket").isin(probes))
-        .withColumn("similarity", sim)
-        .orderBy(F.desc("similarity"), F.asc(id_col))
-        .limit(int(k))
-        .select(id_col, "similarity")
-    )
+        planes = random_planes(len(query_vec), nbits=nbits, seed=seed)
+    cand = _lsh_probe(df, emb_col, query_vec, planes, probe_hamming)
+    return _rerank(cand, emb_col, id_col, query_vec, k, method, round_to)
 
 
 def ann_lsh_topk_batch(
@@ -172,60 +300,28 @@ def ann_lsh_topk_batch(
     the corpus is never shuffled — candidates flow from a broadcast
     hash join on the bucket id, the exact kernel reranks, and one
     window per query keeps k. The only shuffle is the final per-query
-    top-k window over candidates (not the corpus).
+    top-k window over candidates (not the corpus). NULL embeddings on
+    either side are dropped before the bucket join.
     """
-    nbits = len(planes)
-    masks = [0] + (
-        [1 << i for i in range(nbits)] if probe_hamming >= 1 else []
+    masks = multiprobe_buckets(0, len(planes), probe_hamming)
+    probes = _query_rows(
+        queries, q_id_col, q_emb_col,
+        hyperplane_bucket_expr(q_emb_col, planes).alias("__qb"),
+    ).select(
+        "__qid",
+        "__qv",
+        F.explode(
+            F.array_distinct(
+                F.array(*[F.col("__qb").bitwiseXOR(F.lit(m)) for m in masks])
+            )
+        ).alias("__bucket"),
     )
-    if probe_hamming >= 2:
-        masks += [
-            (1 << i) | (1 << j)
-            for i in range(nbits)
-            for j in range(i + 1, nbits)
-        ]
-    probes = (
-        queries.select(
-            F.col(q_id_col).alias("__qid"),
-            F.col(q_emb_col).cast("array<double>").alias("__qv"),
-            hyperplane_bucket_expr(q_emb_col, planes).alias("__qb"),
-        )
-        .select(
-            "__qid",
-            "__qv",
-            F.explode(
-                F.array_distinct(
-                    F.array(
-                        *[
-                            F.col("__qb").bitwiseXOR(F.lit(m))
-                            for m in masks
-                        ]
-                    )
-                )
-            ).alias("__bucket"),
-        )
-    )
-    sim = similarity_expr(F.col(emb_col), F.col("__qv"), method)
-    if round_to is not None:
-        sim = F.round(sim, round_to)
     cand = (
-        df.withColumn("__bucket", hyperplane_bucket_expr(emb_col, planes))
+        _present(df, emb_col)
+        .withColumn("__bucket", hyperplane_bucket_expr(emb_col, planes))
         .join(F.broadcast(probes), on="__bucket")
-        .withColumn("similarity", sim)
     )
-    w = Window.partitionBy("__qid").orderBy(
-        F.desc("similarity"), F.asc(id_col)
-    )
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= int(k))
-        .select(
-            F.col("__qid").alias(q_id_col),
-            F.col(id_col),
-            "similarity",
-            F.col("__rn").cast("int").alias("rank"),
-        )
-    )
+    return _batch_topk(cand, emb_col, id_col, q_id_col, k, method, round_to)
 
 
 def exact_topk_batch(
@@ -240,32 +336,14 @@ def exact_topk_batch(
     round_to: Optional[int] = None,
 ) -> DataFrame:
     """Exact top-k for every query row — the ground-truth twin of
-    :func:`ann_lsh_topk_batch` (same output schema). The query batch
-    is broadcast (bounded — a serving batch / recall sample, never a
-    table) and the corpus is scanned ONCE for all queries; per-query
-    top-k is the same candidate window. This is the recall-evaluation
-    baseline and the small-corpus fallback."""
-    q = queries.select(
-        F.col(q_id_col).alias("__qid"),
-        F.col(q_emb_col).cast("array<double>").alias("__qv"),
-    )
-    sim = similarity_expr(F.col(emb_col), F.col("__qv"), method)
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    cand = df.crossJoin(F.broadcast(q)).withColumn("similarity", sim)
-    w = Window.partitionBy("__qid").orderBy(
-        F.desc("similarity"), F.asc(id_col)
-    )
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= int(k))
-        .select(
-            F.col("__qid").alias(q_id_col),
-            F.col(id_col),
-            "similarity",
-            F.col("__rn").cast("int").alias("rank"),
-        )
-    )
+    :func:`ann_lsh_topk_batch` (same output schema, same per-query
+    window). The query batch is broadcast (bounded — a serving batch /
+    recall sample, never a table) and the corpus is scanned ONCE for
+    all queries. NULL embeddings on either side are never paired. This
+    is the recall-evaluation baseline and the small-corpus fallback."""
+    q = _query_rows(queries, q_id_col, q_emb_col)
+    cand = _present(df, emb_col).crossJoin(F.broadcast(q))
+    return _batch_topk(cand, emb_col, id_col, q_id_col, k, method, round_to)
 
 
 def kmeans_centroids(
@@ -450,7 +528,8 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF search: rank centroids against the query (tiny, driver-free),
     keep the ``nprobe`` nearest, scan only vectors assigned to them,
-    exact-rerank top-k. Returns (id, similarity).
+    exact-rerank top-k. Returns (id, similarity); NULL embeddings are
+    never candidates.
 
     Centroids are any (id, vector) DataFrame — a fixed deterministic
     set, or data-derived centers from :func:`kmeans_centroids`.
@@ -470,16 +549,8 @@ def ivf_topk(
         .limit(int(nprobe))
         .select(cent_id)
     )
-    sim = similarity_expr(F.col(emb_col), array_lit(query_vec), method)
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    return (
-        assigned.join(F.broadcast(probe_ids), on=cent_id)
-        .withColumn("similarity", sim)
-        .orderBy(F.desc("similarity"), F.asc(id_col))
-        .limit(int(k))
-        .select(id_col, "similarity")
-    )
+    cand = assigned.join(F.broadcast(probe_ids), on=cent_id)
+    return _rerank(cand, emb_col, id_col, query_vec, k, method, round_to)
 
 
 def matryoshka_cascade_topk(

@@ -30,6 +30,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tidyvec_spark.collection import VecFrame
+from tidyvec_spark.operators.ann import (
+    _index_probe,
+    _present,
+    _score,
+    _top_k_per,
+    hyperplane_bucket_expr,
+    multiprobe_buckets,
+)
 from tidyvec_spark.functions.vector import (
     METHODS,
     array_lit,
@@ -122,32 +130,13 @@ def nearest(
         # the spec) — when the data is bucket-partitioned the probe
         # filter becomes partition pruning, otherwise a map-side bucket
         # expression; scoring/threshold/keyword/top-k stay identical.
-        from tidyvec_spark.operators.ann import (
-            hyperplane_bucket_expr,
-            multiprobe_buckets,
-            query_bucket,
-        )
-
         spec = vf.index_spec
         if not spec or spec.get("kind") != "lsh" or not spec.get("planes"):
             raise ValueError(
                 "approx=True needs an attached 'lsh' index spec "
                 "(write_vec(..., index={'kind': 'lsh', ...}) then read_vec)"
             )
-        planes = spec["planes"]
-        ph = (
-            int(probe_hamming)
-            if probe_hamming is not None
-            else int(spec.get("probe_hamming", 1))
-        )
-        probes = multiprobe_buckets(query_bucket(qvec, planes), len(planes), ph)
-        bcol = spec.get("bucket_col", "bucket")
-        if bcol in vf.columns:
-            base = base.filter(F.col(bcol).isin(probes))
-        else:
-            base = base.filter(
-                hyperplane_bucket_expr(vf.embedding_col, planes).isin(probes)
-            )
+        base = _index_probe(base, vf.embedding_col, qvec, spec, probe_hamming)
     out = base.withColumn(score_col, sc).filter(
         F.col(score_col) >= F.lit(float(min_score))
     )
@@ -178,25 +167,21 @@ def similarity_join_exact(
 
     Physical shape: broadcast the smaller side when it fits (Catalyst /
     AQE pick the strategy), score every pair, then per-left top-k via a
-    window — no global sort. The LSH-bucketed variant for large x large
-    lives in operators/dedup.py / operators/ann.py.
+    window — no global sort. NULL embeddings on either side are never
+    paired. The LSH-bucketed variant for large x large is
+    :func:`similarity_join_lsh`.
     """
-    from pyspark.sql import Window
-
-    l = left.alias("l")
-    r = right.alias("r")
-    sim = similarity_expr(F.col(f"l.{left_vec}"), F.col(f"r.{right_vec}"), method)
-    if round_to is not None:
-        sim = F.round(sim, round_to)
+    l = _present(left, left_vec).alias("l")
+    r = _present(right, right_vec).alias("r")
+    sim = _score(
+        F.col(f"l.{left_vec}"), F.col(f"r.{right_vec}"), method, round_to
+    )
     pair = l.crossJoin(r).withColumn(score_col, sim)
     if threshold is not None:
         pair = pair.filter(F.col(score_col) >= F.lit(float(threshold)))
     if k is not None:
-        w = Window.partitionBy(F.col(f"l.{left_id}")).orderBy(
-            F.desc(score_col), F.asc(F.col(f"r.{right_id}"))
-        )
-        pair = pair.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") <= int(k)
+        pair = _top_k_per(
+            pair, F.col(f"l.{left_id}"), score_col, F.col(f"r.{right_id}"), k
         ).drop("__rn")
     return pair
 
@@ -228,15 +213,16 @@ def similarity_join_lsh(
     row into its Hamming-ball buckets (nbits+1 probes at radius 1),
     trading shuffle volume for recall exactly like query-side
     multiprobe in ``ann_lsh_topk``; the right side is never inflated.
+    NULL embeddings on either side are dropped before the bucket join.
 
     Deterministic given the plane set; recall is a property of
     (nbits, probe_hamming). Returns the joined columns plus
     ``score_col``.
     """
-    from tidyvec_spark.operators.ann import hyperplane_bucket_expr
-
-    nbits = len(planes)
-    l = left.withColumn("__bucket", hyperplane_bucket_expr(left_vec, planes))
+    masks = multiprobe_buckets(0, len(planes), probe_hamming)
+    l = _present(left, left_vec).withColumn(
+        "__bucket", hyperplane_bucket_expr(left_vec, planes)
+    )
     if method == "cosine":
         # hoist the per-ROW norms out of the per-PAIR kernel (r14,
         # guide §2.3/§1.2): cosine's denominator is a property of each
@@ -247,21 +233,16 @@ def similarity_join_lsh(
         # (the dot product) per candidate. Bit-identical: same norm
         # values, same denom = na*nb product, same guarded division.
         l = l.withColumn("__lnorm", l2_norm_expr(left_vec))
-    if probe_hamming >= 1:
-        # explode each left row into its probe buckets: bucket XOR each
-        # single-bit mask (plus itself) — Hamming-1 ball, map-side
-        masks = [0] + [1 << i for i in range(nbits)]
-        if probe_hamming >= 2:
-            masks += [
-                (1 << i) ^ (1 << j)
-                for i in range(nbits)
-                for j in range(i + 1, nbits)
-            ]
+    if len(masks) > 1:
+        # explode each left row into its probe buckets (bucket XOR each
+        # Hamming-ball mask), map-side
         probe = F.explode(F.array(*[F.lit(m).cast("long") for m in masks]))
         l = l.withColumn("__m", probe).withColumn(
             "__bucket", F.col("__bucket").bitwiseXOR(F.col("__m"))
         ).drop("__m")
-    r = right.withColumn("__bucket", hyperplane_bucket_expr(right_vec, planes))
+    r = _present(right, right_vec).withColumn(
+        "__bucket", hyperplane_bucket_expr(right_vec, planes)
+    )
     if method == "cosine":
         r = r.withColumn("__rnorm", l2_norm_expr(right_vec))
     la, ra = l.alias("l"), r.alias("r")
@@ -287,16 +268,11 @@ def similarity_join_lsh(
         # pair, so filtering first is hash-identical and shrinks the
         # dropDuplicates exchange by every sub-threshold candidate
         pair = pair.filter(F.col(score_col) >= F.lit(float(threshold)))
-    if probe_hamming >= 1:
+    if len(masks) > 1:
         # a (left, right) pair can meet in several probe buckets
         pair = pair.dropDuplicates([f"{left_id}", f"{right_id}"])
     if k is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(F.col(f"l.{left_id}")).orderBy(
-            F.desc(score_col), F.asc(F.col(f"r.{right_id}"))
-        )
-        pair = pair.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") <= int(k)
+        pair = _top_k_per(
+            pair, F.col(f"l.{left_id}"), score_col, F.col(f"r.{right_id}"), k
         ).drop("__rn")
     return pair

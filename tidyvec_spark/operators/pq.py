@@ -341,14 +341,12 @@ def ivfpq_adc_topk(
     is written partitioned by centroid) + per-row ``m`` table lookups
     selected by a CASE over the probed lists, ending in
     TakeOrderedAndProject. Returns (id, adc_dist) ascending."""
+    from tidyvec_spark.operators.ann import _ivf_probes
+
     nd = round_to if round_to is not None else 6
     C = [[float(x) for x in c] for c in centroids]
     q = [float(x) for x in query_vec]
-    cdist = [
-        (round(sum((a - b) * (a - b) for a, b in zip(q, c)), nd), i)
-        for i, c in enumerate(C)
-    ]
-    probes = [i for _, i in sorted(cdist)[: int(nprobe)]]
+    probes = _ivf_probes(q, C, nprobe, nd)
     luts = {
         i: pq_adc_luts([a - b for a, b in zip(q, C[i])], codebooks, round_to=nd)
         for i in probes

@@ -8,8 +8,6 @@ from tidyvec_spark.sources.maintenance import (
     parquet_file_stats,
 )
 from tidyvec_spark.sources.layout import (
-    ann_ivf_topk_pruned,
-    ann_lsh_topk_pruned,
     ann_topk_sidecar,
     write_bucket_partitioned,
     write_centroid_partitioned,
@@ -52,8 +50,6 @@ __all__ = [
     "write_bucketed_table",
     "write_bucket_partitioned",
     "write_centroid_partitioned",
-    "ann_ivf_topk_pruned",
-    "ann_lsh_topk_pruned",
     "ann_topk_sidecar",
     "read_webdataset",
     "wds_key_of",

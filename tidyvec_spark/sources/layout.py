@@ -3,10 +3,10 @@
 The ANN operators' docstrings (operators/ann.py) promise that "with the
 corpus partitioned by bucket, the probe filter becomes partition
 pruning". This module keeps that promise as code: write the corpus
-parquet partitioned by the LSH bucket (or IVF centroid) key, and the
-probe-side reader's ``IN`` filter on that key prunes at the *directory*
-level — a query touches ``probes / 2^nbits`` (or ``nprobe / k``) of the
-files, before a single row is read.
+parquet partitioned by the LSH bucket (or IVF centroid) key, and a
+probe ``IN`` filter on that key prunes at the *directory* level — a
+query touches ``probes / 2^nbits`` (or ``nprobe / k``) of the files,
+before a single row is read.
 
 This is the 100 TB difference between "scan everything, filter
 map-side" (the un-partitioned plan, still correct) and "scan almost
@@ -14,6 +14,11 @@ nothing": at 2^8 buckets and Hamming-1 multiprobe, 9/256 ≈ 3.5% of the
 corpus is read. The layout is write-once — the bucket expression is
 deterministic given the plane set, so readers recompute probe sets from
 the same planes without any stored index structure.
+
+Query a layout from its path with :func:`ann_topk_sidecar`:
+``write_vec(index=...)`` writes the partitioned data plus the index
+spec, and the sidecar search runs the ANN core's probe and rerank
+(operators/ann.py) on the partition column.
 
 Not in the reference (its corpus is an in-memory tibble, R/core.R); the
 layout mirrors how Spark tables use hive-style partition directories
@@ -76,86 +81,6 @@ def write_centroid_partitioned(
     )
 
 
-def ann_lsh_topk_pruned(
-    spark: SparkSession,
-    path: str,
-    emb_col: str,
-    id_col: str,
-    query_vec: Sequence[float],
-    planes: Sequence[Sequence[float]],
-    k: int = 10,
-    probe_hamming: int = 1,
-    bucket_col: str = "bucket",
-    method: str = "cosine",
-    round_to: Optional[int] = None,
-) -> DataFrame:
-    """LSH top-k over a bucket-partitioned layout. The probe ``IN``
-    filter lands on the partition column, so the scan prunes whole
-    bucket directories (visible as PartitionFilters in the plan);
-    only the probed ≈ (nbits+1)/2^nbits fraction of files is read,
-    then the exact kernel reranks. Same results as
-    ``operators.ann.ann_lsh_topk`` over the same corpus and planes.
-    """
-    from tidyvec_spark.functions.vector import array_lit, similarity_expr
-    from tidyvec_spark.operators.ann import multiprobe_buckets, query_bucket
-
-    nbits = len(planes)
-    qb = query_bucket(query_vec, planes)
-    probes = multiprobe_buckets(qb, nbits, probe_hamming)
-    sim = similarity_expr(F.col(emb_col), array_lit(query_vec), method)
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    return (
-        spark.read.parquet(path)
-        .filter(F.col(bucket_col).isin(probes))
-        .withColumn("similarity", sim)
-        .orderBy(F.desc("similarity"), F.asc(id_col))
-        .limit(int(k))
-        .select(id_col, "similarity")
-    )
-
-
-def ann_ivf_topk_pruned(
-    spark: SparkSession,
-    path: str,
-    emb_col: str,
-    id_col: str,
-    query_vec: Sequence[float],
-    centroids: Sequence[Sequence[float]],
-    k: int = 10,
-    nprobe: int = 4,
-    cent_col: str = "centroid_id",
-    method: str = "cosine",
-    round_to: Optional[int] = None,
-) -> DataFrame:
-    """IVF top-k over a centroid-partitioned layout — the IVF analog of
-    :func:`ann_lsh_topk_pruned`. The ``nprobe`` nearest centroids are
-    ranked driver-side (k distances over literal centroids, same
-    round/ id-asc tie rule as ``operators.ann.ivf_topk``); the ``IN``
-    filter on the partition column prunes unprobed list directories,
-    then the exact kernel reranks."""
-    from tidyvec_spark.functions.vector import array_lit, similarity_expr
-
-    nd = 6
-    q = [float(x) for x in query_vec]
-    ranked = sorted(
-        (round(sum((a - b) * (a - b) for a, b in zip(q, c)), nd), i)
-        for i, c in enumerate(centroids)
-    )
-    probes = [i for _, i in ranked[: int(nprobe)]]
-    sim = similarity_expr(F.col(emb_col), array_lit(q), method)
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    return (
-        spark.read.parquet(path)
-        .filter(F.col(cent_col).isin(probes))
-        .withColumn("similarity", sim)
-        .orderBy(F.desc("similarity"), F.asc(id_col))
-        .limit(int(k))
-        .select(id_col, "similarity")
-    )
-
-
 def ann_topk_sidecar(
     spark: SparkSession,
     path: str,
@@ -173,14 +98,15 @@ def ann_topk_sidecar(
     centroids (small literals), so the probe set is recomputed from the
     persisted spec and the scan prunes to the probed partitions. This
     is the 100 TB open-and-query path — any reader on any cluster gets
-    directory-level pruning from the path alone."""
+    directory-level pruning from the path alone, and the results of
+    ``ann_lsh_topk`` / ``ivf_topk`` over the unpartitioned corpus
+    (NULL embeddings are never candidates)."""
     with open(os.path.join(path, "_vecframe.json")) as f:
         sidecar = json.load(f)
     spec = sidecar.get("index")
     if not spec:
         raise ValueError(f"no index spec in sidecar: {path}")
     emb_col = sidecar["embedding_col"]
-    data = os.path.join(path, "data")
     # Dim guard before probing: the spec knows the indexed dimension
     # (explicit 'dim', or the width of the stored planes/centroids) —
     # a mismatched query must error here, not silently mis-probe.
@@ -194,36 +120,28 @@ def ann_topk_sidecar(
             f"query dim {len(query_vec)} != index dim {int(expect)} "
             f"({spec['kind']} sidecar at {path})"
         )
-    if spec["kind"] == "lsh":
-        # tuned specs (evaluation.tune_lsh_params) persist the probe
-        # radius that met the recall target; an explicit argument
-        # overrides, absent both the default is hamming-1 multiprobe
-        ph = (
-            probe_hamming
-            if probe_hamming is not None
-            else int(spec.get("probe_hamming", 1))
-        )
-        return ann_lsh_topk_pruned(
-            spark, data, emb_col, id_col, query_vec, spec["planes"],
-            k=k, probe_hamming=ph,
-            bucket_col=spec.get("bucket_col", "bucket"),
-            method=method, round_to=round_to,
-        )
-    if spec["kind"] in ("ivf", "ivfpq"):
-        return ann_ivf_topk_pruned(
-            spark, data, emb_col, id_col, query_vec, spec["centroids"],
-            k=k, nprobe=nprobe, cent_col=spec.get("cent_col", "centroid_id"),
-            method=method, round_to=round_to,
-        )
-    if spec["kind"] == "bq":
+    kind = spec["kind"]
+    if kind not in ("lsh", "ivf", "ivfpq", "bq"):
+        raise ValueError(f"unsupported index kind for probing: {kind!r}")
+    from tidyvec_spark.operators.ann import _index_probe, _ivf_probes, _rerank
+
+    data = spark.read.parquet(os.path.join(path, "data"))
+    if kind == "bq":
         from tidyvec_spark.operators.bq import bq_topk
 
         return bq_topk(
-            spark.read.parquet(data), emb_col, id_col, query_vec, k=k,
+            data, emb_col, id_col, query_vec, k=k,
             code_col=spec.get("code_col", "bq"),
             prefilter=prefilter, round_to=round_to,
         )
-    raise ValueError(f"unsupported index kind for probing: {spec['kind']!r}")
+    if kind == "lsh":
+        cand = _index_probe(data, emb_col, query_vec, spec, probe_hamming)
+    else:
+        probes = _ivf_probes(query_vec, spec["centroids"], nprobe)
+        cand = data.filter(
+            F.col(spec.get("cent_col", "centroid_id")).isin(probes)
+        )
+    return _rerank(cand, emb_col, id_col, query_vec, k, method, round_to)
 
 
 def zorder_value(

@@ -54,9 +54,10 @@ def write_vec(
       ivfpq).
 
     The artifacts are tiny literals (planes/centroids/codebooks), so
-    they live in the sidecar itself — ``read_vec`` rehydrates them and
-    ``sources.layout.ann_topk_sidecar`` recomputes probe sets with no
-    caller-held state.
+    they live in the sidecar itself — ``read_vec`` rehydrates them
+    (``nearest(approx=True)`` probes through an ``lsh`` spec), and
+    ``sources.layout.ann_topk_sidecar`` is the way to query the index
+    from the path: it recomputes probe sets with no caller-held state.
     """
     index = index if index is not None else vf.index_spec
     data_path = os.path.join(path, "data")
