@@ -1574,11 +1574,11 @@ SELECT vec_id, ROUND(sqrt(t), {R}) AS recon_err FROM tot
 
 
 def _ann_ivf_topk_large(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF at production-shaped k: 256 fixed centroids — past the
-    literal-projection ceiling (operators/ann.py::LITERAL_ASSIGN_MAX_K),
-    so assignment runs the broadcast-matrix argmin inside mapInPandas:
-    one BLAS ``‖x‖²+‖c‖²−2XCᵀ`` block per Arrow batch, centroid matrix
-    shipped once per executor, the corpus never driver-collected."""
+    """IVF at production-shaped k: 256 fixed centroids, nprobe=16.
+    Assignment is the same kernel as at any k — the broadcast-matrix
+    argmin inside mapInPandas: one BLAS ``‖x‖²+‖c‖²−2XCᵀ`` block per
+    Arrow batch, centroid matrix shipped once per executor, the corpus
+    never driver-collected."""
     from tidyvec_spark.operators.ann import ivf_topk
 
     e = _read(spark, sf_dir, "embeddings").select(

@@ -115,31 +115,67 @@ def test_ivf_topk_finds_self(emb, qvec):
     assert out[0]["vec_id"] == 0 and out[0]["similarity"] == 1.0
 
 
-def test_ivf_assign_broadcast_matches_literal(emb):
-    # the two physical strategies implement ONE semantic: argmin of
-    # rounded squared L2 with centroid-id tiebreak — assignments must
-    # be identical row-for-row
+@pytest.mark.parametrize("k", [8, 24])
+def test_ivf_assign_matches_numpy_reference(emb, k):
+    """The one assignment kernel against a NumPy reference: argmin of
+    the sequential fold sum((x - c)^2) rounded to 6 places, smaller
+    centroid id on ties — at k=8 and k=24 alike (no size switch)."""
+    import numpy as np
+
+    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+    cents = e.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
+    )
+    rows = e.orderBy("vec_id").collect()
+    assert [r["vec_id"] for r in rows[:k]] == list(range(k))
+    # centroids in id order: argmin's first minimum is the smaller id
+    C = np.asarray([r["embedding"] for r in rows[:k]], dtype=np.float64)
+    X = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    d = np.zeros((len(X), k))
+    for j in range(X.shape[1]):
+        d += (X[:, None, j] - C[None, :, j]) ** 2
+    want = dict(
+        zip((r["vec_id"] for r in rows), np.argmin(np.round(d, 6), axis=1).tolist())
+    )
+    got = {
+        r["vec_id"]: r["centroid_id"]
+        for r in ann.ivf_assign(e, "embedding", "vec_id", cents)
+        .select("vec_id", "centroid_id")
+        .collect()
+    }
+    assert got == want
+
+
+def _jobs_fired(spark, fn):
+    """Number of Spark jobs ``fn()`` fires (the status-store idiom of
+    test_partitioning.py)."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def last():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+    before = last()
+    fn()
+    return last() - before
+
+
+def test_ivf_topk_fires_two_jobs(spark, emb, qvec):
+    """One job collects the centroids (the assignment kernel and the
+    driver-side probe ranking share them), one runs the search: no
+    probe-ranking job and no broadcast of probe ids."""
     e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
     cents = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
     )
-    lit = ann.ivf_assign(e, "embedding", "vec_id", cents, strategy="literal")
-    bc = ann.ivf_assign(e, "embedding", "vec_id", cents, strategy="broadcast")
-    a = {r["vec_id"]: r["centroid_id"] for r in lit.select("vec_id", "centroid_id").collect()}
-    b = {r["vec_id"]: r["centroid_id"] for r in bc.select("vec_id", "centroid_id").collect()}
-    assert a == b
-
-
-def test_ivf_assign_auto_switches_on_k(emb):
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    big = e.filter(F.col("vec_id") < ann.LITERAL_ASSIGN_MAX_K + 8).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
+    n = _jobs_fired(
+        spark,
+        lambda: ann.ivf_topk(
+            e, "embedding", "vec_id", cents, qvec, k=5, nprobe=2, round_to=6
+        ).collect(),
     )
-    assigned = ann.ivf_assign(e, "embedding", "vec_id", big)  # auto -> broadcast
-    # mapInPandas plan, not a literal-array projection
-    from tidyvec_spark import plans as P
-    assert "MapInPandas" in P.explain_str(assigned)
-    assert assigned.count() == e.count()
+    assert n == 2
 
 
 def test_kmeans_centroids_feed_ivf(emb, qvec):
@@ -243,9 +279,8 @@ def test_cascade_topk_matches_exact_when_prefilter_covers(spark, emb):
 
 def test_ivf_assign_null_embedding_gets_null_cell(spark):
     """The engine NULL-embedding law in assignment: a NULL vector gets
-    a NULL cent_id under BOTH strategies (no crash in the broadcast
-    path's vstack, no arbitrary pick from the literal path's NULL-field
-    struct ordering), and the row itself survives."""
+    a NULL cent_id (no crash in the kernel's vstack), and the row
+    itself survives."""
     from tidyvec_spark.operators.ann import ivf_assign
 
     df = spark.createDataFrame(
@@ -256,14 +291,11 @@ def test_ivf_assign_null_embedding_gets_null_cell(spark):
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
         "centroid_id INT, centroid ARRAY<DOUBLE>",
     )
-    for strat in ("literal", "broadcast"):
-        got = {
-            r["vec_id"]: r["centroid_id"]
-            for r in ivf_assign(
-                df, "embedding", "vec_id", cents, strategy=strat
-            ).collect()
-        }
-        assert got == {1: 0, 2: None, 3: 1}, (strat, got)
+    got = {
+        r["vec_id"]: r["centroid_id"]
+        for r in ivf_assign(df, "embedding", "vec_id", cents).collect()
+    }
+    assert got == {1: 0, 2: None, 3: 1}
 
 
 def test_semdedup_and_balanced_sample_skip_null_embeddings(spark):

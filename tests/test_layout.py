@@ -145,6 +145,45 @@ def test_sidecar_ivf_index_roundtrip(spark, emb, tmp_path_factory):
     ]
 
 
+def test_ivf_topk_and_sidecar_rank_probes_alike(spark, tmp_path):
+    """One probe ranker: centroid 0's squared distance to the query is
+    the double printed 0.1235225, whose binary value lies below the
+    half-way point, so Python ``round`` gives 0.123522 and Spark
+    ``round`` (half-up on the decimal text) gives 0.123523. Centroid 1
+    sits at 0.1235222 on the other side of the query. Python rounding
+    ties the two and probes the smaller id (0); Spark rounding would
+    probe 1. With nprobe=1 the unpartitioned ``ivf_topk`` and the
+    sidecar must probe the same list and return the same rows."""
+    from tidyvec_spark import vec
+    from tidyvec_spark.sources import ann_topk_sidecar, write_vec
+
+    cent_rows = [[1.3514576788178059], [1.0 - 0.1235222 ** 0.5]]
+    q = [1.0]
+    assert round((q[0] - cent_rows[0][0]) ** 2, 6) == 0.123522
+    df = spark.createDataFrame(
+        [(i, [x]) for i, x in enumerate([1.3, 1.4, 1.5, 0.6, 0.65, 0.7], 1)],
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+    )
+    path = str(tmp_path / "ivf1d")
+    write_vec(
+        vec(df, dim=1), path,
+        index={"kind": "ivf", "centroids": cent_rows, "id_col": "vec_id"},
+    )
+    cents = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(cent_rows)],
+        "centroid_id int, centroid array<double>",
+    )
+    full = ann.ivf_topk(
+        df, "embedding", "vec_id", cents, q, k=3, nprobe=1, round_to=6
+    ).collect()
+    pruned = ann_topk_sidecar(
+        spark, path, q, "vec_id", k=3, nprobe=1, round_to=6
+    ).collect()
+    rows = [(r["vec_id"], r["similarity"]) for r in full]
+    assert rows == [(r["vec_id"], r["similarity"]) for r in pruned]
+    assert rows == [(1, 1.0), (2, 1.0), (3, 1.0)]  # centroid 0's list
+
+
 def test_zorder_value_interleaves_and_orders(spark):
     from tidyvec_spark.sources.layout import zorder_value
 

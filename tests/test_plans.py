@@ -170,8 +170,9 @@ def test_events_hourly_single_shuffle(spark, qs):
 
 
 def test_ivf_topk_zero_shuffle(spark, qs):
-    # centroid assignment is a literal-array argmin projection; probe
-    # filter + TakeOrdered complete the plan without any exchange
+    # centroid assignment is a map-side BLAS argmin (mapInPandas); the
+    # driver-ranked probe IN-filter + TakeOrdered complete the plan
+    # without any exchange
     df = qs["ann_ivf_topk"](spark, SF)
     assert P.num_shuffles(df) == 0
     assert P.has_take_ordered(df)

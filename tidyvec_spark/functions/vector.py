@@ -2,11 +2,15 @@
 
 These are the similarity kernels of the engine — the Spark re-expression
 of the reference's per-row R loops (reference R/core.R:267-292). They
-compile to Catalyst higher-order functions (``zip_with`` + ``aggregate``),
-stay entirely JVM-side inside whole-stage codegen, and therefore
-distribute and pipeline with the surrounding scan/filter/top-k without
-any Python boundary. For very wide vectors a fused Arrow/numpy path is
-available in :mod:`tidyvec_spark.operators.ann`.
+compile to Catalyst higher-order functions (``zip_with`` + ``aggregate``)
+and stay JVM-side, so they distribute and pipeline with the surrounding
+scan/filter/top-k without any Python boundary. Those higher-order
+functions have no generated code (``CodegenFallback``): inside a
+whole-stage-codegen stage each fold is evaluated by the interpreter,
+row by row. One fold per row against one query vector is cheap; k folds
+per row (a nearest-centroid argmin) are not, which is why
+:func:`tidyvec_spark.operators.ann.ivf_assign` computes its distances
+as one numpy BLAS block per Arrow batch instead.
 
 All kernels accumulate in ``double`` regardless of the storage element
 type (``float``), so results are reproducible against a DuckDB oracle

@@ -13,12 +13,12 @@ classic layouts on top of the exact kernels in functions/vector.py:
   partition/cluster key so a probe touches a handful of files.
 
 - **IVF (inverted-file / coarse quantizer)**: every vector is assigned
-  to its nearest of k centroids (broadcast join — centroid table is
-  tiny by construction); a query scans only the ``nprobe`` nearest
-  centroid lists. At scale: partition/bucket the corpus by
-  ``centroid_id`` so probes prune partitions; centroids come from
-  ``pyspark.ml`` KMeans (or any fixed set, which keeps the operator
-  deterministic and oracle-checkable).
+  to its nearest of k centroids (one BLAS argmin per Arrow batch — the
+  centroid matrix is tiny by construction); a query scans only the
+  ``nprobe`` nearest centroid lists, ranked on the driver. At scale:
+  partition/bucket the corpus by ``centroid_id`` so probes prune
+  partitions; centroids come from ``pyspark.ml`` KMeans (or any fixed
+  set, which keeps the operator deterministic and oracle-checkable).
 
 Both paths are *deterministic* given their parameters (planes/centroid
 set), so correctness is hash-checkable against DuckDB — approximation
@@ -311,9 +311,7 @@ def ann_lsh_topk_batch(
         "__qid",
         "__qv",
         F.explode(
-            F.array_distinct(
-                F.array(*[F.col("__qb").bitwiseXOR(F.lit(m)) for m in masks])
-            )
+            F.array(*[F.col("__qb").bitwiseXOR(F.lit(m)) for m in masks])
         ).alias("__bucket"),
     )
     cand = (
@@ -389,117 +387,62 @@ def l2sq_expr(a, b) -> Column:
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
-# literal-projection assignment stays the default up to this many
-# centroids; past it the O(k·d)-literal expression tree stops being a
-# win (codegen/constant-pool blow-up, interpreted HOF fallback) and the
-# broadcast-matrix argmin takes over. Measured at sf0.1/64-dim,
-# best-of-3 on the same fixture: literal 2.40 s vs broadcast 0.69 s at
-# k=16 — the array_min-over-structs HOF runs interpreted, so BLAS wins
-# at every tested k. The literal path stays for tiny-k/pure-JVM
-# deployments (no Arrow worker), but auto hands anything bigger to
-# BLAS.
-LITERAL_ASSIGN_MAX_K = 8
-
-
-def ivf_assign(
-    df: DataFrame,
-    emb_col: str,
-    id_col: str,
-    centroids: DataFrame,
-    cent_id: str = "centroid_id",
-    cent_vec: str = "centroid",
-    round_to: int = 6,
-    strategy: str = "auto",
-) -> DataFrame:
-    """Assign every vector to its nearest centroid — map-side only, no
-    join, no shuffle, under either strategy.
-
-    Two physical strategies, same semantics (argmin of squared L2
-    rounded to ``round_to``, centroid-id tiebreak):
-
-    - ``literal`` — centroids embedded as literal vectors; per row an
-      ``array_min`` over (rounded distance, id) structs. Zero Python,
-      pure codegen projection; ideal while the expression tree stays
-      small. O(k·d) literals, so it stops scaling past a few hundred
-      centroids (Janino constant-pool limits, interpreted fallback).
-    - ``broadcast`` — the centroid matrix ships once per executor as a
-      numpy array inside a ``mapInPandas`` closure; each Arrow batch
-      computes one ``‖x‖² + ‖c‖² − 2·X@C.T`` BLAS block and takes the
-      per-row argmin (centroids pre-sorted by id, so numpy's
-      first-minimum IS the id tiebreak). O(k) centroids scale freely;
-      the corpus is never driver-collected.
-    - ``auto`` — ``literal`` iff k ≤ ``LITERAL_ASSIGN_MAX_K``.
-
-    Every corpus column survives untouched; at 100 TB the assignment
-    pass is one scan producing the partition/bucket key.
-
-    NULL embeddings get a NULL ``cent_id`` under BOTH strategies (the
-    engine-wide NULL-embedding law applied without dropping rows —
-    assignment is a projection, so the row survives and downstream
-    per-cluster consumers filter the NULL cell explicitly).
-    """
-    cents = [
-        (r[cent_id], [float(x) for x in r[cent_vec]])
-        for r in centroids.select(cent_id, cent_vec).collect()
-    ]
+def _centroid_rows(
+    centroids: DataFrame, cent_id: str, cent_vec: str
+) -> list[tuple]:
+    """The centroid table collected once (one small job), as (id,
+    vector) rows sorted by id: a first minimum over this order — numpy's
+    ``argmin`` in the assignment kernel, the position tiebreak of
+    :func:`_ivf_probes` — is the smallest-id tiebreak."""
+    cents = sorted(
+        (
+            (r[cent_id], [float(x) for x in r[cent_vec]])
+            for r in centroids.select(cent_id, cent_vec).collect()
+        ),
+        key=lambda t: t[0],
+    )
     if not cents:
         raise ValueError("centroids table is empty")
-    if strategy == "auto":
-        strategy = "literal" if len(cents) <= LITERAL_ASSIGN_MAX_K else "broadcast"
-    if strategy == "literal":
-        best = F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        F.round(
-                            l2sq_expr(emb_col, array_lit(vec)), round_to
-                        ).alias("d"),
-                        F.lit(cid).alias("c"),
-                    )
-                    for cid, vec in cents
-                ]
-            )
-        )
-        # NULL embedding -> every distance NULL; struct ordering would
-        # otherwise pick an arbitrary centroid (NULL fields sort first)
-        return df.withColumn(
-            cent_id,
-            F.when(F.col(emb_col).isNotNull(), best["c"]),
-        )
-    if strategy != "broadcast":
-        raise ValueError(f"strategy must be auto|literal|broadcast, got {strategy!r}")
+    return cents
 
+
+def _assign(
+    df: DataFrame,
+    emb_col: str,
+    cents: Sequence[tuple],
+    cent_id: str,
+    id_type,
+    round_to: int,
+) -> DataFrame:
+    """The assignment kernel over id-sorted :func:`_centroid_rows`: the
+    centroid matrix ships once per executor inside a ``mapInPandas``
+    closure; each Arrow batch computes one ``‖x‖² + ‖c‖² − 2·X@C.T``
+    BLAS block and takes the per-row argmin of the distances rounded
+    to ``round_to``. NULL embeddings get a NULL ``cent_id``."""
     import numpy as np
     from pyspark.sql import types as T
 
-    cents.sort(key=lambda t: t[0])  # numpy argmin-first == smallest-id tiebreak
-    cent_ids = [c for c, _ in cents]
+    ids_arr = np.asarray([c for c, _ in cents])
     C = np.asarray([v for _, v in cents], dtype=np.float64)
     c2 = (C * C).sum(axis=1)
     nd = int(round_to)
-    id_field = centroids.schema[cent_id].dataType
     out_schema = T.StructType(
-        df.schema.fields + [T.StructField(cent_id, id_field, True)]
+        df.schema.fields + [T.StructField(cent_id, id_type, True)]
     )
-    emb = emb_col
 
     def assign(batches):
-        import pandas as pd
-
-        ids_arr = np.asarray(cent_ids)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             out = pdf.copy()
-            # NULL embeddings: NULL cent_id (the law above); np.vstack
-            # over a batch containing None would otherwise raise
-            mask = pdf[emb].notna().to_numpy()
+            # np.vstack over a batch containing None would raise
+            mask = pdf[emb_col].notna().to_numpy()
             col = np.full(len(pdf), None, dtype=object)
             if mask.any():
                 X = np.vstack(
                     [
                         np.asarray(v, dtype=np.float64)
-                        for v in pdf[emb][mask]
+                        for v in pdf[emb_col][mask]
                     ]
                 )
                 x2 = (X * X).sum(axis=1)
@@ -510,6 +453,40 @@ def ivf_assign(
             yield out
 
     return df.mapInPandas(assign, schema=out_schema)
+
+
+def ivf_assign(
+    df: DataFrame,
+    emb_col: str,
+    id_col: str,
+    centroids: DataFrame,
+    cent_id: str = "centroid_id",
+    cent_vec: str = "centroid",
+    round_to: int = 6,
+) -> DataFrame:
+    """Assign every vector to its nearest centroid — map-side only, no
+    join, no shuffle: argmin of squared L2 rounded to ``round_to``,
+    smallest-id tiebreak.
+
+    The centroid table is collected once and its matrix shipped into
+    one ``mapInPandas`` BLAS block per Arrow batch (:func:`_assign`).
+    The per-row alternative — k ``zip_with``/``aggregate`` folds over
+    literal centroids — is slower at every tested k: those
+    higher-order functions have no generated code and run interpreted.
+    k scales freely; the corpus is never driver-collected.
+
+    Every corpus column survives untouched; at 100 TB the assignment
+    pass is one scan producing the partition/bucket key.
+
+    NULL embeddings get a NULL ``cent_id`` (the engine-wide
+    NULL-embedding law applied without dropping rows — assignment is a
+    projection, so the row survives and downstream per-cluster
+    consumers filter the NULL cell explicitly).
+    """
+    return _assign(
+        df, emb_col, _centroid_rows(centroids, cent_id, cent_vec), cent_id,
+        centroids.schema[cent_id].dataType, round_to,
+    )
 
 
 def ivf_topk(
@@ -524,32 +501,27 @@ def ivf_topk(
     cent_vec: str = "centroid",
     method: str = "cosine",
     round_to: Optional[int] = None,
-    strategy: str = "auto",
 ) -> DataFrame:
-    """IVF search: rank centroids against the query (tiny, driver-free),
-    keep the ``nprobe`` nearest, scan only vectors assigned to them,
-    exact-rerank top-k. Returns (id, similarity); NULL embeddings are
-    never candidates.
+    """IVF search: rank centroids against the query on the driver
+    (:func:`_ivf_probes`, the ranker the sidecar and IVFPQ paths use),
+    scan only vectors assigned to the ``nprobe`` nearest, exact-rerank
+    top-k. Returns (id, similarity); NULL embeddings are never
+    candidates.
 
     Centroids are any (id, vector) DataFrame — a fixed deterministic
-    set, or data-derived centers from :func:`kmeans_centroids`.
+    set, or data-derived centers from :func:`kmeans_centroids` —
+    collected once for both the assignment kernel and the probe
+    ranking, so the probe set is a literal ``IN`` list in the plan.
 
     With the corpus bucketed/partitioned by assignment, the probe
     filter becomes partition pruning — the 100 TB path scans
     nprobe/k-ths of the data.
     """
-    assigned = ivf_assign(
-        df, emb_col, id_col, centroids, cent_id, cent_vec, strategy=strategy
-    )
-    probe_ids = (
-        centroids.withColumn(
-            "__qd", F.round(l2sq_expr(cent_vec, array_lit(query_vec)), 6)
-        )
-        .orderBy(F.asc("__qd"), F.asc(cent_id))
-        .limit(int(nprobe))
-        .select(cent_id)
-    )
-    cand = assigned.join(F.broadcast(probe_ids), on=cent_id)
+    cents = _centroid_rows(centroids, cent_id, cent_vec)
+    probes = _ivf_probes(query_vec, [v for _, v in cents], nprobe)
+    cand = _assign(
+        df, emb_col, cents, cent_id, centroids.schema[cent_id].dataType, 6
+    ).filter(F.col(cent_id).isin([cents[i][0] for i in probes]))
     return _rerank(cand, emb_col, id_col, query_vec, k, method, round_to)
 
 

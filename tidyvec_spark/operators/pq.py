@@ -13,9 +13,10 @@ Spark shape, each stage:
 
 - **encode** (map-side, no shuffle): per subspace ``j``, the code is
   the argmin of squared L2 between the row's sub-vector and the
-  subspace codebook — the same literal-projection argmin pattern as
-  ``ivf_assign`` (array_min over (rounded distance, code) structs;
-  struct ordering gives the deterministic smallest-code tiebreak).
+  subspace codebook — a literal-projection argmin (array_min over
+  (rounded distance, code) structs; struct ordering gives the
+  deterministic smallest-code tiebreak) for tiny codebooks, the BLAS
+  batch argmin of ``ivf_assign`` past them.
   One scan produces the code column; persist it and the wide vector
   column never needs to be read again for approximate queries.
 - **ADC top-k** (map-side + TakeOrderedAndProject): the query builds
@@ -107,7 +108,7 @@ def pq_encode(
     own narrow table/column family: approximate scans then read m bytes
     per row instead of d·4.
 
-    Same dual physical strategy as ``ivf_assign`` (operators/ann.py):
+    Two physical strategies, one semantic:
 
     - ``literal`` — pure-projection argmin expression; zero Python but
       the per-subspace L2 folds evaluate interpreted, so cost grows

@@ -606,7 +606,6 @@ def cluster_balanced_sample(
     cent_id: str = "centroid_id",
     cent_vec: str = "centroid",
     salt: str = "",
-    assign_strategy: str = "auto",
     keep_cluster: bool = True,
 ) -> DataFrame:
     """Diversity-first selection: cap every embedding-space REGION at
@@ -634,7 +633,6 @@ def cluster_balanced_sample(
         centroids,
         cent_id=cent_id,
         cent_vec=cent_vec,
-        strategy=assign_strategy,
     )
     out = stratified_fixed_n(
         assigned, id_col, cent_id, int(n_per_cluster), salt=salt

@@ -8,8 +8,8 @@ of two operators this engine already has, which is the point of
 building them as reusable plan fragments:
 
 - assignment: :func:`tidyvec_spark.operators.ann.ivf_assign` —
-  map-side nearest-centroid (literal projection or broadcast-matrix
-  argmin; zero shuffle);
+  map-side nearest-centroid (broadcast-matrix BLAS argmin; zero
+  shuffle);
 - within-cluster pairs: the cosine tile kernel shared by every
   embedding near-dup operator (``dedup._gemm_pairs``) with the cluster
   id as its grouping key — ONE shuffle on the cluster id, BLAS tiles
@@ -59,7 +59,6 @@ def semantic_dedup_pairs(
     round_to: Optional[int] = None,
     cent_id: str = "centroid_id",
     cent_vec: str = "centroid",
-    assign_strategy: str = "auto",
     tile_rows: Optional[int] = 8192,
 ) -> DataFrame:
     """(id_a, id_b, similarity) for same-cluster pairs with cosine ≥
@@ -88,7 +87,6 @@ def semantic_dedup_pairs(
         centroids,
         cent_id=cent_id,
         cent_vec=cent_vec,
-        strategy=assign_strategy,
     )
     # tile_rows=None: one block per cluster
     blocks, handles = 1, []
@@ -124,7 +122,6 @@ def semantic_dedup(
     round_to: Optional[int] = None,
     cent_id: str = "centroid_id",
     cent_vec: str = "centroid",
-    assign_strategy: str = "auto",
     tile_rows: Optional[int] = 8192,
 ) -> DataFrame:
     """The corpus minus semantic duplicates: every row that is the
@@ -134,7 +131,7 @@ def semantic_dedup(
     pairs = semantic_dedup_pairs(
         df, emb_col, id_col, centroids, threshold,
         round_to=round_to, cent_id=cent_id, cent_vec=cent_vec,
-        assign_strategy=assign_strategy, tile_rows=tile_rows,
+        tile_rows=tile_rows,
     )
     drop = pairs.select(F.col("id_b").alias("__tv_drop")).distinct()
     out = df.join(

@@ -65,7 +65,6 @@ def write_centroid_partitioned(
     cent_id: str = "centroid_id",
     cent_vec: str = "centroid",
     mode: str = "error",
-    strategy: str = "auto",
 ) -> None:
     """Write the corpus parquet partitioned by IVF centroid assignment
     — the IVF analog of :func:`write_bucket_partitioned`; ``ivf``
@@ -73,8 +72,7 @@ def write_centroid_partitioned(
     from tidyvec_spark.operators.ann import ivf_assign
 
     (
-        ivf_assign(df, emb_col, id_col, centroids, cent_id, cent_vec,
-                   strategy=strategy)
+        ivf_assign(df, emb_col, id_col, centroids, cent_id, cent_vec)
         .write.partitionBy(cent_id)
         .mode(mode)
         .parquet(path)
